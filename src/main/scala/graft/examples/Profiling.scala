@@ -1,12 +1,9 @@
 package graft.examples
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
-/** Shared scaffolding for the scratch profilers: ONE place that owns the
-  * driver-parity session config and the bench-parity measurement rules
-  * (noop-write action, warmup before timing) so a methodology change —
-  * like round 2's count()→noop switch — edits one file, not every
-  * profiler.
+/** The driver-parity session the plan-explain tools ([[ExplainOne]],
+  * [[ExplainMany]]) print plans under.
   */
 object Profiling {
 
@@ -43,18 +40,5 @@ object Profiling {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark
-  }
-
-  /** The bench's materializing action: every output row flows through
-    * the executed plan (count() lets Catalyst prune the work away).
-    */
-  def noop(df: DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
-
-  /** One untimed warmup, then print the timed run. */
-  def time(label: String)(f: => Unit): Unit = {
-    f
-    val t0 = System.nanoTime(); f
-    println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
   }
 }

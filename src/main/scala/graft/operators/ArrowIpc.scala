@@ -34,7 +34,7 @@ import java.nio.charset.StandardCharsets.UTF_8
   * replacement dictionary batches), the dominant HF-dataset /
   * Feather string shape. RecordBatches with or without
   * BodyCompression (LZ4-frame and zstd buffer compression decode
-  * through the existing from-scratch [[Lz4]]/[[Zstd]] cores).
+  * through the [[Lz4]]/[[Zstd]] library adapters).
   * Named profile gaps, distinct from damage: big-endian schemas
   * (and, within the value model, u64 keeps its raw bits).
   *
@@ -52,7 +52,7 @@ import java.nio.charset.StandardCharsets.UTF_8
   * Spark classpath: ArrowFileWriter and ArrowStreamWriter bytes (both
   * framings, multiple batches, nulls, every subset type, dictionary
   * providers) must decode value-exactly here (the write side is the
-  * interop pin; there is no from-scratch encoder — the Xz posture).
+  * interop pin; there is no from-scratch encoder).
   * Degrade-don't-throw; bomb caps: 1M rows/batch, 4096 columns,
   * 1<<26-byte buffers, 1M dictionary entries.
   */
@@ -358,7 +358,7 @@ object ArrowIpc {
     // BodyCompression (codec 0 = LZ4 frame, 1 = zstd; method BUFFER):
     // each body buffer is [int64 LE uncompressed length][compressed
     // bytes], -1 marking a raw passthrough buffer — decoded through
-    // the existing from-scratch Lz4/Zstd cores.
+    // the Lz4/Zstd library adapters.
     val codec: Int = meta.tableF(3) match {
       case null => -1
       case bc =>

@@ -523,9 +523,9 @@ object Avro {
         case "zstandard" => Zstd.synthRawFrame(plain, checksum = true)
         case "bzip2" => Bzip2.synthBzip2(plain)
         case "xz" =>
-          // no from-scratch xz ENCODER exists (decode-only, like the
-          // warc path) — write through the independent xz-java on the
-          // classpath, which doubles as the read pin
+          // no synthesizer for xz (the [[Xz]] adapter is decode-only,
+          // like the warc path) — write through xz-java on the
+          // classpath
           val bos = new java.io.ByteArrayOutputStream()
           val opts = new org.tukaani.xz.LZMA2Options(1)
           opts.setDictSize(1 << 16)

@@ -1,234 +1,39 @@
 package graft.operators
 
-/** Branch-conversion (BCJ) filters — the preprocessing step real-world
+import org.tukaani.xz.simple.{ARM, ARMThumb, IA64, PowerPC, SPARC, X86}
+
+/** Branch-conversion (BCJ) filters through xz-java's
+  * `org.tukaani.xz.simple` family — the preprocessing step real-world
   * 7z/xz archives of binary and code corpora apply before LZMA so that
   * relative CALL/JMP targets become position-independent absolute
-  * addresses (which then compress). Implements the six published
-  * one-input transforms (7-Zip Methods.txt ids 0x0303xxyy; algorithm
-  * semantics per the xz `simple` filter family): x86 (E8/E9 with the
-  * 3-bit false-positive history mask), ARM (BL), ARM-Thumb (BL pairs),
-  * PowerPC (bl with link bit), SPARC (call), IA64 (bundle templates,
-  * 41-bit slots). Each converts in place, in either direction
-  * (`encoder = true` for relative→absolute), over a whole buffer —
-  * the 7z folder shape, where the filter sees the entire coder output.
-  *
-  * Every transform is differential-pinned against the INDEPENDENT
-  * `org.tukaani.xz.simple` implementations on the Spark classpath
-  * (BcjSpec: random + adversarial buffers, both directions, byte-exact
-  * agreement including the processed-prefix length), and the 7z
-  * integration is pinned both directions against commons-compress
-  * (SevenZMethod.BCJ_*_FILTER chains).
+  * addresses (which then compress). The six published one-input
+  * transforms (7-Zip Methods.txt ids 0x0303xxyy): x86, ARM, ARM-Thumb,
+  * PowerPC, SPARC, IA64. Each converts in place, in either direction
+  * (`encoder = true` for relative→absolute), over a whole buffer — the
+  * 7z folder shape, where the filter sees the entire coder output —
+  * and returns the processed-prefix length (the trailing bytes a
+  * branch could span stay untouched). The adapter adds only that
+  * whole-buffer, one-shot signature; the 7z integration is pinned
+  * both directions against commons-compress (SevenZMethod.BCJ_*_FILTER
+  * chains).
   */
 object Bcj {
 
-  @inline private def u(b: Byte): Int = b & 0xFF
+  def x86(buf: Array[Byte], startIp: Int, encoder: Boolean): Int =
+    new X86(encoder, startIp).code(buf, 0, buf.length)
 
-  @inline private def msb86(b: Int): Boolean = (b & 0xFF) == 0 || (b & 0xFF) == 0xFF
+  def arm(buf: Array[Byte], startIp: Int, encoder: Boolean): Int =
+    new ARM(encoder, startIp).code(buf, 0, buf.length)
 
-  private val X86Allowed =
-    Array(true, true, true, false, true, false, false, false)
-  private val X86BitNum = Array(0, 1, 2, 2, 3, 3, 3, 3)
+  def armThumb(buf: Array[Byte], startIp: Int, encoder: Boolean): Int =
+    new ARMThumb(encoder, startIp).code(buf, 0, buf.length)
 
-  /** x86 E8/E9 filter. Returns the number of bytes processed (the ≤4
-    * trailing bytes a displacement could span stay untouched, matching
-    * the reference one-shot behavior). The 3-bit `prevMask` history
-    * records recent E8/E9 sightings; the allowed-status/bit-number
-    * heuristic suppresses converting displacement bytes that an
-    * earlier nearby conversion produced — the published
-    * false-positive guard, exercised by the adversarial pin.
-    */
-  def x86(buf: Array[Byte], startIp: Int, encoder: Boolean): Int = {
-    if (buf.length < 5) return 0
-    val ipBase = startIp + 5
-    var prevMask = 0
-    var prevPos = -1
-    val end = buf.length - 5
-    var i = 0
-    while (i <= end) {
-      if ((buf(i) & 0xFE) != 0xE8) i += 1
-      else {
-        val dist = i - prevPos
-        prevPos = i
-        var skip = false
-        if ((dist & ~3) != 0) prevMask = 0
-        else {
-          prevMask = (prevMask << (dist - 1)) & 7
-          if (prevMask != 0) {
-            val b = buf(i + 4 - X86BitNum(prevMask))
-            if (!X86Allowed(prevMask) || msb86(u(b))) {
-              prevMask = ((prevMask << 1) & 7) | 1
-              skip = true
-            }
-          }
-        }
-        if (skip) i += 1
-        else if (msb86(u(buf(i + 4)))) {
-          var src = u(buf(i + 1)) | (u(buf(i + 2)) << 8) |
-            (u(buf(i + 3)) << 16) | (u(buf(i + 4)) << 24)
-          var dest = 0
-          var done = false
-          while (!done) {
-            dest = if (encoder) src + (ipBase + i) else src - (ipBase + i)
-            if (prevMask == 0) done = true
-            else {
-              val idx = X86BitNum(prevMask) * 8
-              val b = (dest >>> (24 - idx)) & 0xFF
-              if (!msb86(b)) done = true
-              else src = dest ^ ((1 << (32 - idx)) - 1)
-            }
-          }
-          buf(i + 4) = (~(((dest >>> 24) & 1) - 1)).toByte
-          buf(i + 3) = ((dest >>> 16) & 0xFF).toByte
-          buf(i + 2) = ((dest >>> 8) & 0xFF).toByte
-          buf(i + 1) = (dest & 0xFF).toByte
-          i += 5
-        } else {
-          prevMask = ((prevMask << 1) & 7) | 1
-          i += 1
-        }
-      }
-    }
-    i
-  }
+  def ppc(buf: Array[Byte], startIp: Int, encoder: Boolean): Int =
+    new PowerPC(encoder, startIp).code(buf, 0, buf.length)
 
-  /** ARM BL (little-endian words): absolute = (disp << 2) + pc, pc
-    * eight bytes past the instruction start.
-    */
-  def arm(buf: Array[Byte], startIp: Int, encoder: Boolean): Int = {
-    val end = buf.length - 4
-    var i = 0
-    while (i <= end) {
-      if (u(buf(i + 3)) == 0xEB) {
-        var v = (u(buf(i + 2)) << 16) | (u(buf(i + 1)) << 8) | u(buf(i))
-        v <<= 2
-        val pc = startIp + i + 8
-        v = if (encoder) v + pc else v - pc
-        v >>>= 2
-        buf(i + 2) = ((v >>> 16) & 0xFF).toByte
-        buf(i + 1) = ((v >>> 8) & 0xFF).toByte
-        buf(i) = (v & 0xFF).toByte
-      }
-      i += 4
-    }
-    i
-  }
+  def sparc(buf: Array[Byte], startIp: Int, encoder: Boolean): Int =
+    new SPARC(encoder, startIp).code(buf, 0, buf.length)
 
-  /** ARM Thumb BL pairs (two 16-bit halves holding a 22-bit offset). */
-  def armThumb(buf: Array[Byte], startIp: Int, encoder: Boolean): Int = {
-    val end = buf.length - 4
-    var i = 0
-    while (i <= end) {
-      if ((u(buf(i + 1)) & 0xF8) == 0xF0 && (u(buf(i + 3)) & 0xF8) == 0xF8) {
-        var v = ((u(buf(i + 1)) & 7) << 19) | (u(buf(i)) << 11) |
-          ((u(buf(i + 3)) & 7) << 8) | u(buf(i + 2))
-        v <<= 1
-        val pc = startIp + i + 4
-        v = if (encoder) v + pc else v - pc
-        v >>>= 1
-        buf(i + 1) = (0xF0 | ((v >>> 19) & 7)).toByte
-        buf(i) = ((v >>> 11) & 0xFF).toByte
-        buf(i + 3) = (0xF8 | ((v >>> 8) & 7)).toByte
-        buf(i + 2) = (v & 0xFF).toByte
-        i += 2
-      }
-      i += 2
-    }
-    i
-  }
-
-  @inline private def be32(buf: Array[Byte], i: Int): Int =
-    (u(buf(i)) << 24) | (u(buf(i + 1)) << 16) | (u(buf(i + 2)) << 8) | u(buf(i + 3))
-  @inline private def putBe32(buf: Array[Byte], i: Int, v: Int): Unit = {
-    buf(i) = (v >>> 24).toByte; buf(i + 1) = (v >>> 16).toByte
-    buf(i + 2) = (v >>> 8).toByte; buf(i + 3) = v.toByte
-  }
-
-  /** PowerPC bl (big-endian words, opcode 18 with AA=0 LK=1): the
-    * displacement delta adds into the FULL instruction word, then the
-    * 24-bit field is masked back under the fixed 0x48000001 frame.
-    */
-  def ppc(buf: Array[Byte], startIp: Int, encoder: Boolean): Int = {
-    val end = buf.length - 4
-    var i = 0
-    while (i <= end) {
-      if ((u(buf(i)) & 0xFC) == 0x48 && (u(buf(i + 3)) & 3) == 1) {
-        var d = startIp + i
-        if (!encoder) d = -d
-        putBe32(buf, i, 0x48000001 | ((be32(buf, i) + d) & 0x03FFFFFC))
-      }
-      i += 4
-    }
-    i
-  }
-
-  /** SPARC call (big-endian words): delta in word units, then a
-    * 22-bit sign-fold back into the 0x40000000 call frame.
-    */
-  def sparc(buf: Array[Byte], startIp: Int, encoder: Boolean): Int = {
-    val end = buf.length - 4
-    var i = 0
-    while (i <= end) {
-      val b0 = buf(i).toInt
-      val b1c = u(buf(i + 1)) & 0xC0
-      if ((b0 == 0x40 && b1c == 0) || (b0 == 0x7F && b1c == 0xC0)) {
-        var d = (startIp + i) >>> 2
-        if (!encoder) d = -d
-        var v = be32(buf, i) + d
-        v = (v << 9) >> 9 // arithmetic: fold the sign through bit 22
-        putBe32(buf, i, 0x40000000 | (v & 0x3FFFFFFF))
-      }
-      i += 4
-    }
-    i
-  }
-
-  /** IA64: 16-byte bundles, template-selected 41-bit slots; branch
-    * instructions (opcode 5, the 23-bit zero field) carry a 21-bit
-    * slot-scaled displacement.
-    */
-  def ia64(buf: Array[Byte], startIp: Int, encoder: Boolean): Int = {
-    val branchTable = Array(
-      0, 0, 0, 0, 0, 0, 0, 0,
-      0, 0, 0, 0, 0, 0, 0, 0,
-      4, 4, 6, 6, 0, 0, 7, 7,
-      4, 4, 0, 0, 4, 4, 0, 0)
-    val end = buf.length - 16
-    var i = 0
-    while (i <= end) {
-      val mask = branchTable(u(buf(i)) & 0x1F)
-      var slot = 0
-      var bitPos = 5
-      while (slot < 3) {
-        if (((mask >>> slot) & 1) != 0) {
-          val bytePos = bitPos >> 3
-          val bitRes = bitPos & 7
-          var instr = 0L
-          var j = 0
-          while (j < 6) { instr |= u(buf(i + bytePos + j)).toLong << (8 * j); j += 1 }
-          var norm = instr >>> bitRes
-          if (((norm >>> 37) & 0xF) == 5 && ((norm >>> 9) & 7L) == 0) {
-            var v = (((norm >>> 13) & 0xFFFFF) | (((norm >>> 36) & 1) << 20)).toInt
-            v <<= 4
-            val pc = startIp + i
-            v = if (encoder) v + pc else v - pc
-            v >>>= 4
-            norm &= ~(0x8FFFFFL << 13)
-            norm |= (v & 0xFFFFF).toLong << 13
-            norm |= ((v & 0x100000).toLong << (36 - 20))
-            instr &= (1L << bitRes) - 1
-            instr |= norm << bitRes
-            j = 0
-            while (j < 6) {
-              buf(i + bytePos + j) = ((instr >>> (8 * j)) & 0xFF).toByte
-              j += 1
-            }
-          }
-        }
-        slot += 1
-        bitPos += 41
-      }
-      i += 16
-    }
-    i
-  }
+  def ia64(buf: Array[Byte], startIp: Int, encoder: Boolean): Int =
+    new IA64(encoder, startIp).code(buf, 0, buf.length)
 }

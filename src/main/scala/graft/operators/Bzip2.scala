@@ -1,40 +1,27 @@
 package graft.operators
 
-/** From-scratch bzip2 decoder — the compression Wikipedia dumps and
-  * many academic corpus drops actually ship in (`.xml.bz2`,
-  * `.tar.bz2` shards, `.warc.bz2` crawls). Implemented from the
-  * public format (the bzip2 container has no RFC; the layout is
-  * fixed by the reference implementation and widely documented):
-  * MSB-first bitstream spanning block boundaries, per-block 48-bit
-  * magics, the used-byte map, multi-table canonical Huffman with
-  * 50-symbol selector groups (selectors themselves MTF-coded),
-  * RUNA/RUNB base-2 zero-run decoding through the MTF queue, the
-  * Burrows-Wheeler inverse via one counting pass and a T-vector
-  * walk, final RLE1 expansion, and the non-reflected CRC-32 per
-  * block plus the rotating combined stream CRC. (Reference scope
-  * note: the ETL core `etl.go:12-68` has no compression surface;
-  * extension frontier.)
-  *
-  * Deprecated `randomised` blocks (a bzip2-0.9.0 artifact: a fixed
-  * 512-entry table of run lengths decides which output positions get
-  * their low bit flipped before RLE1 expansion) DECODE for real —
-  * the table is public-domain data from the reference
-  * implementation's `randtable.c`, embedded below and spec-pinned
-  * against the independent copy commons-compress ships.
-  *
-  * Decode posture matches every decoder here: degrade-don't-throw
-  * (null on damage), expansion bomb cap, per-blob scalar routines
-  * for `mapPartitions` ingest. Conformance is pinned both ways
-  * available: the independent commons-compress implementation Spark
-  * bundles writes the corpora this decoder must read, and reads
-  * nothing of ours (no from-scratch encoder — the write side IS the
-  * interop pin, like zstd-jni for [[Zstd]]).
+import java.io.{IOException, InputStream}
+import org.apache.commons.compress.compressors.bzip2.BZip2CompressorInputStream
+
+/** bzip2 decode through commons-compress, plus a fixture synthesizer —
+  * the compression Wikipedia dumps and many academic corpus drops ship
+  * in (`.xml.bz2`, `.tar.bz2` shards, `.warc.bz2` crawls).
+  * `BZip2CompressorInputStream` verifies block and stream CRCs and
+  * reads the deprecated bzip2-0.9.0 `randomised` blocks. This adapter
+  * adds the decode posture every decoder here shares:
+  *   - the bomb cap, counted across all concatenated streams while
+  *     reading;
+  *   - never-throw: damage and output past `cap` come back as
+  *     [[Corrupt]] / null;
+  *   - the multistream walk (pbzip2 and Wikipedia multistream dumps
+  *     concatenate byte-aligned streams, each with its own level),
+  *     which tolerates trailing bytes that do not start a stream
+  *     after at least one sound one (gzip-member parity) — the
+  *     library's own concatenated mode rejects those.
+  * (Reference scope note: the ETL core `etl.go:12-68` has no
+  * compression surface; extension frontier.)
   */
 object Bzip2 {
-
-  private final class Err(msg: String)
-    extends RuntimeException(msg, null, false, false)
-  private def fail(msg: String): Nothing = throw new Err(msg)
 
   /** bzip2-0.9.0's randomisation table (`randtable.c`, public-domain
     * data shipped by every bzip2 since): entry k is the run length
@@ -87,9 +74,11 @@ object Bzip2 {
     193, 713, 857, 265, 203, 50, 668, 108, 645, 990, 626, 197,
     510, 357, 358, 850, 858, 364, 936, 638)
 
-  def isBzip2(b: Array[Byte]): Boolean =
-    b != null && b.length >= 4 && b(0) == 'B' && b(1) == 'Z' && b(2) == 'h' &&
-      b(3) >= '1' && b(3) <= '9'
+  def isBzip2(b: Array[Byte]): Boolean = isBzip2At(b, 0)
+
+  private def isBzip2At(b: Array[Byte], off: Int): Boolean =
+    b != null && b.length - off >= 4 && b(off) == 'B' && b(off + 1) == 'Z' &&
+      b(off + 2) == 'h' && b(off + 3) >= '1' && b(off + 3) <= '9'
 
   /** Non-reflected CRC-32 (poly 0x04C11DB7, init all-ones, final
     * complement) — bzip2's own convention, NOT the zlib CRC.
@@ -104,62 +93,47 @@ object Bzip2 {
     c
   }
 
-  /** MSB-first bit reader over the whole stream (bzip2 blocks are
-    * NOT byte-aligned).
-    */
-  private final class Bits(b: Array[Byte], start: Int, endExcl: Int) {
-    private var pos = start
-    private var cur = 0
-    private var n = 0
-    def read(k: Int): Int = {
-      var v = 0
-      var left = k
-      while (left > 0) {
-        if (n == 0) {
-          if (pos >= endExcl) fail("bitstream exhausted")
-          cur = b(pos) & 0xFF
-          pos += 1
-          n = 8
-        }
-        val take = math.min(n, left)
-        v = (v << take) | ((cur >> (n - take)) & ((1 << take) - 1))
-        n -= take
-        left -= take
-      }
-      v
-    }
-    def readBit(): Int = read(1)
-    /** Drop any partial byte and return the next byte offset — the
-      * boundary a following concatenated stream starts on.
-      */
-    def alignToByte(): Int = { n = 0; pos }
-    def readLong(k: Int): Long = {
-      var v = 0L
-      var left = k
-      while (left > 0) {
-        val take = math.min(24, left)
-        v = (v << take) | (read(take).toLong & ((1L << take) - 1))
-        left -= take
-      }
-      v
-    }
-  }
-
   sealed trait Result
   final case class Ok(bytes: Array[Byte]) extends Result
   case object Corrupt extends Result
 
-  /** Decode a complete `.bz2` stream: [[Corrupt]] for structural
-    * damage, CRC mismatch, or output past `cap`. Every spec-valid
-    * profile — randomised blocks included — decodes.
+  /** Decode a complete `.bz2` file, one or more streams: [[Corrupt]]
+    * for structural damage, CRC mismatch, or output past `cap`.
     */
-  def decodeResult(b: Array[Byte], cap: Long = 1L << 30): Result =
-    try Ok(decodeAll(b, cap))
-    catch {
-      case _: Err => Corrupt
-      case _: ArrayIndexOutOfBoundsException => Corrupt
-      case _: NegativeArraySizeException => Corrupt
+  def decodeResult(b: Array[Byte], cap: Long = 1L << 30): Result = {
+    if (!isBzip2(b)) return Corrupt
+    val in = new Input(b)
+    try {
+      val out = new Capped.Sink(cap, b.length * 4L)
+      // one library stream per bzip2 stream: it stops on the byte
+      // after its end-of-stream marker, where the next one starts
+      do {
+        val s = new BZip2CompressorInputStream(in, false)
+        try out.readAll(s) finally s.close()
+      } while (isBzip2At(b, in.pos))
+      Ok(out.result)
+    } catch {
+      case _: IOException | _: RuntimeException => Corrupt
     }
+  }
+
+  /** The compressed bytes as an unsynchronised stream: the library's
+    * bit reader pulls one byte per call, and `ByteArrayInputStream`
+    * takes a lock on each. `pos` is where the next stream starts.
+    */
+  private final class Input(b: Array[Byte]) extends InputStream {
+    var pos = 0
+    override def read(): Int =
+      if (pos < b.length) { pos += 1; b(pos - 1) & 0xFF } else -1
+    override def read(dst: Array[Byte], off: Int, len: Int): Int =
+      if (pos >= b.length) -1
+      else {
+        val n = math.min(len, b.length - pos)
+        System.arraycopy(b, pos, dst, off, n)
+        pos += n
+        n
+      }
+  }
 
   /** Bytes or null — the degrade-don't-throw contract. */
   def decode(b: Array[Byte], cap: Long = 1L << 30): Array[Byte] =
@@ -168,57 +142,8 @@ object Bzip2 {
       case _ => null
     }
 
-  private def decodeAll(b: Array[Byte], cap: Long): Array[Byte] = {
-    if (!isBzip2(b)) fail("bad magic")
-    val out = new java.io.ByteArrayOutputStream(64 << 10)
-    // MULTISTREAM: pbzip2 and Wikipedia multistream dumps concatenate
-    // independent byte-aligned streams (each with its OWN level);
-    // decode them all. Trailing bytes that don't start a stream after
-    // at least one sound one are tolerated (gzip-member parity).
-    var off = 0
-    var any = false
-    var more = true
-    while (more) {
-      val level = b(off + 3) - '0'
-      val maxBlock = level * 100000
-      val bits = new Bits(b, off + 4, b.length)
-      var combinedCrc = 0
-      var done = false
-      while (!done) {
-        val magic = bits.readLong(48)
-        if (magic == 0x314159265359L) {
-          val blockCrc = bits.readLong(32).toInt
-          val plain = decodeBlock(bits, maxBlock)
-          if (out.size().toLong + plain.length > cap)
-            fail("decompression bomb")
-          // block CRC over the fully-expanded bytes
-          var crc = 0xFFFFFFFF
-          var i = 0
-          while (i < plain.length) {
-            crc = (crc << 8) ^
-              CrcTable(((crc >>> 24) ^ (plain(i) & 0xFF)) & 0xFF)
-            i += 1
-          }
-          if (~crc != blockCrc) fail("block crc mismatch")
-          combinedCrc = ((combinedCrc << 1) | (combinedCrc >>> 31)) ^ blockCrc
-          out.write(plain, 0, plain.length)
-        } else if (magic == 0x177245385090L) {
-          val streamCrc = bits.readLong(32).toInt
-          if (streamCrc != combinedCrc) fail("stream crc mismatch")
-          done = true
-        } else fail("bad block magic")
-      }
-      any = true
-      off = bits.alignToByte()
-      more = off + 4 <= b.length && b(off) == 'B' && b(off + 1) == 'Z' &&
-        b(off + 2) == 'h' && b(off + 3) >= '1' && b(off + 3) <= '9'
-    }
-    if (!any) fail("no stream")
-    out.toByteArray
-  }
-
-  /** The 0.9.0 randomisation walk, shared by encode and decode (the
-    * transform is its own inverse): after [[RNums]](k) bytes, flip
+  /** The 0.9.0 randomisation walk (its own inverse, so a reader undoes
+    * it with the same walk): after [[RNums]](k) bytes, flip
     * the next byte's low bit, the counter reloading from the table
     * cyclically — the reference `BZ_RAND_UPD_MASK` sequence exactly.
     */
@@ -236,235 +161,6 @@ object Bzip2 {
       if (rNToGo == 1) buf(i) = (buf(i) ^ 1).toByte
       i += 1
     }
-  }
-
-  /** One block: Huffman groups → MTF/RLE2 → inverse BWT →
-    * de-randomisation (0.9.0 profile) → RLE1.
-    */
-  private def decodeBlock(bits: Bits, maxBlock: Int): Array[Byte] = {
-    val randomised = bits.readBit() == 1
-    val origPtr = bits.read(24)
-    // used-byte map: 16-bit group mask, then 16 bits per present group
-    val groupMask = bits.read(16)
-    val used = new Array[Boolean](256)
-    var nInUse = 0
-    var g = 0
-    while (g < 16) {
-      if ((groupMask & (0x8000 >> g)) != 0) {
-        val m = bits.read(16)
-        var i = 0
-        while (i < 16) {
-          if ((m & (0x8000 >> i)) != 0) { used(g * 16 + i) = true; nInUse += 1 }
-          i += 1
-        }
-      }
-      g += 1
-    }
-    if (nInUse == 0) fail("empty symbol map")
-    val seqToUnseq = new Array[Int](nInUse)
-    var k = 0
-    var i = 0
-    while (i < 256) {
-      if (used(i)) { seqToUnseq(k) = i; k += 1 }
-      i += 1
-    }
-    val alphaSize = nInUse + 2
-    val nGroups = bits.read(3)
-    if (nGroups < 2 || nGroups > 6) fail("bad huffman group count")
-    val nSelectors = bits.read(15)
-    if (nSelectors < 1) fail("no selectors")
-    // selectors, MTF-coded over the group indices
-    val selectorMtf = new Array[Int](nSelectors)
-    i = 0
-    while (i < nSelectors) {
-      var j = 0
-      while (bits.readBit() == 1) {
-        j += 1
-        if (j >= nGroups) fail("selector out of range")
-      }
-      selectorMtf(i) = j
-      i += 1
-    }
-    val pos = Array.tabulate(nGroups)(identity)
-    val selectors = new Array[Int](nSelectors)
-    i = 0
-    while (i < nSelectors) {
-      val v = selectorMtf(i)
-      val tmp = pos(v)
-      var j = v
-      while (j > 0) { pos(j) = pos(j - 1); j -= 1 }
-      pos(0) = tmp
-      selectors(i) = tmp
-      i += 1
-    }
-    // per-group delta-coded code lengths
-    val lengths = Array.ofDim[Int](nGroups, alphaSize)
-    g = 0
-    while (g < nGroups) {
-      var cur = bits.read(5)
-      var s = 0
-      while (s < alphaSize) {
-        var cont = true
-        while (cont) {
-          if (cur < 1 || cur > 20) fail("code length out of range")
-          if (bits.readBit() == 0) cont = false
-          else cur += (if (bits.readBit() == 0) 1 else -1)
-        }
-        lengths(g)(s) = cur
-        s += 1
-      }
-      g += 1
-    }
-    // canonical decode tables per group (classic limit/base/perm)
-    val limit = Array.ofDim[Int](nGroups, 25)
-    val base = Array.ofDim[Int](nGroups, 25)
-    val perm = Array.ofDim[Int](nGroups, alphaSize)
-    val minLens = new Array[Int](nGroups)
-    g = 0
-    while (g < nGroups) {
-      var minLen = 32
-      var maxLen = 0
-      var s = 0
-      while (s < alphaSize) {
-        if (lengths(g)(s) > maxLen) maxLen = lengths(g)(s)
-        if (lengths(g)(s) < minLen) minLen = lengths(g)(s)
-        s += 1
-      }
-      minLens(g) = minLen
-      var pp = 0
-      var l = minLen
-      while (l <= maxLen) {
-        s = 0
-        while (s < alphaSize) {
-          if (lengths(g)(s) == l) { perm(g)(pp) = s; pp += 1 }
-          s += 1
-        }
-        l += 1
-      }
-      val cnt = new Array[Int](25)
-      s = 0
-      while (s < alphaSize) { cnt(lengths(g)(s) + 1) += 1; s += 1 }
-      i = 1
-      while (i < 25) { cnt(i) += cnt(i - 1); i += 1 }
-      var vec = 0
-      l = minLen
-      while (l <= maxLen) {
-        vec += cnt(l + 1) - cnt(l)
-        limit(g)(l) = vec - 1
-        vec <<= 1
-        l += 1
-      }
-      l = minLen + 1
-      while (l <= maxLen) {
-        base(g)(l) = ((limit(g)(l - 1) + 1) << 1) - cnt(l)
-        l += 1
-      }
-      g += 1
-    }
-    // MTF + RLE2 decode into the BWT string
-    val bwt = new Array[Byte](maxBlock)
-    val mtf = Array.tabulate(nInUse)(identity)
-    var bwtLen = 0
-    var groupNo = -1
-    var groupPos = 0
-    def nextSym(): Int = {
-      if (groupPos == 0) {
-        groupNo += 1
-        if (groupNo >= nSelectors) fail("selectors exhausted")
-        groupPos = 50
-      }
-      groupPos -= 1
-      val gg = selectors(groupNo)
-      var l = minLens(gg)
-      var v = bits.read(l)
-      while (l <= 23 && v > limit(gg)(l)) {
-        l += 1
-        v = (v << 1) | bits.readBit()
-      }
-      if (l > 23) fail("huffman decode overrun")
-      val idx = v - base(gg)(l)
-      if (idx < 0 || idx >= alphaSize) fail("huffman symbol out of range")
-      perm(gg)(idx)
-    }
-    val eob = alphaSize - 1
-    var sym = nextSym()
-    while (sym != eob) {
-      if (sym <= 1) { // RUNA/RUNB: base-2 zero-run of mtf(0)
-        var run = 0
-        var shift = 0
-        while (sym <= 1) {
-          run += (sym + 1) << shift
-          shift += 1
-          if (shift > 24) fail("zero run too long")
-          sym = nextSym()
-        }
-        val v = seqToUnseq(mtf(0))
-        if (bwtLen + run > maxBlock) fail("block overfull")
-        java.util.Arrays.fill(bwt, bwtLen, bwtLen + run, v.toByte)
-        bwtLen += run
-      } else { // MTF value 1..nInUse-1
-        val j = sym - 1
-        if (j >= nInUse) fail("mtf index out of range")
-        val v = mtf(j)
-        var m = j
-        while (m > 0) { mtf(m) = mtf(m - 1); m -= 1 }
-        mtf(0) = v
-        if (bwtLen >= maxBlock) fail("block overfull")
-        bwt(bwtLen) = seqToUnseq(v).toByte
-        bwtLen += 1
-        sym = nextSym()
-      }
-    }
-    if (origPtr >= bwtLen) fail("origPtr out of range")
-    // inverse BWT: counting sort + T-vector walk
-    val counts = new Array[Int](256)
-    i = 0
-    while (i < bwtLen) { counts(bwt(i) & 0xFF) += 1; i += 1 }
-    val starts = new Array[Int](256)
-    var acc = 0
-    i = 0
-    while (i < 256) { starts(i) = acc; acc += counts(i); i += 1 }
-    val next = new Array[Int](bwtLen)
-    val fill = starts.clone()
-    i = 0
-    while (i < bwtLen) {
-      val c = bwt(i) & 0xFF
-      next(fill(c)) = i
-      fill(c) += 1
-      i += 1
-    }
-    val sorted = new Array[Byte](bwtLen)
-    var t = next(origPtr)
-    i = 0
-    while (i < bwtLen) {
-      sorted(i) = bwt(t)
-      t = next(t)
-      i += 1
-    }
-    // deprecated 0.9.0 randomisation: per-block state, applied to the
-    // inverse-BWT output BEFORE RLE1 expansion (the mirror of the
-    // encoder randomising AFTER RLE1)
-    if (randomised) applyRandomisation(sorted, bwtLen)
-    // RLE1: 4 identical bytes are followed by an extra-count byte
-    val out = new java.io.ByteArrayOutputStream(bwtLen + (bwtLen >> 2))
-    i = 0
-    while (i < bwtLen) {
-      val c = sorted(i)
-      var run = 1
-      while (run < 4 && i + run < bwtLen && sorted(i + run) == c) run += 1
-      if (run == 4) {
-        if (i + 4 >= bwtLen) fail("rle1 count byte missing")
-        val extra = sorted(i + 4) & 0xFF
-        var k2 = 0
-        while (k2 < 4 + extra) { out.write(c); k2 += 1 }
-        i += 5
-      } else {
-        var k2 = 0
-        while (k2 < run) { out.write(c); k2 += 1 }
-        i += run
-      }
-    }
-    out.toByteArray
   }
 
   // ---- synthesizer ------------------------------------------------------
@@ -561,9 +257,8 @@ object Bzip2 {
       i += run
     }
     val block = r1.toByteArray
-    // 0.9.0 randomisation: AFTER RLE1, BEFORE BWT — the exact mirror
-    // of the decode-side pass (the transform is an involution, so
-    // both sides share ONE walk)
+    // 0.9.0 randomisation: AFTER RLE1, BEFORE BWT — the mirror of
+    // the reader's pass after its inverse BWT
     if (randomised) applyRandomisation(block, block.length)
     // BWT by naive rotation sort
     val n = block.length

@@ -2388,8 +2388,8 @@ object Containers {
 
   /** Expand a crawl archive whatever its framing: `.warc.gz`
     * multi-member gzip, `.warc.zst` zstd frames — Common Crawl's
-    * newer distribution format — through the from-scratch [[Zstd]]
-    * decoder, identity for plain bytes. Real Common Crawl members
+    * newer distribution format — through the [[Zstd]] adapter over
+    * zstd-jni, identity for plain bytes. Real Common Crawl members
     * occasionally interleave NON-record gzip members (differently
     * framed warcinfo, stray payloads); when at least one member IS a
     * WARC record, such interlopers are skipped instead of poisoning

@@ -1,41 +1,33 @@
 package graft.operators
 
-/** From-scratch LZ4 FRAME decoder (the `.lz4` container) — the
-  * fast-compression shape dataset mirrors and intermediate pipeline
-  * drops use when zstd isn't available. Implemented from the public
-  * LZ4 Frame Format spec: frame descriptor (FLG/BD with version,
-  * block-independence, block/content checksums, content size,
-  * dictionary id; header checksum = byte 1 of XXH32), data blocks
-  * (compressed or stored, per-block XXH32), the LZ4 block format
-  * itself (token nibbles, 255-extended lengths, 16-bit offsets,
-  * overlap-safe match copies), skippable frames, and the XXH32
-  * content checksum. (Reference scope note: the ETL core
-  * `etl.go:12-68` has no compression surface; extension frontier.)
-  *
-  * Decode posture: degrade-don't-throw (null on damage),
-  * decompression bomb cap, per-blob scalar routines. Pinned both
-  * directions against the independent lz4-java implementation Spark
-  * bundles (its frames decode here; our [[synthStoredFrame]] frames
-  * decode there).
+import java.io.{ByteArrayInputStream, IOException}
+import net.jpountz.lz4.{LZ4Factory, LZ4FrameInputStream}
+import net.jpountz.xxhash.XXHashFactory
+
+/** LZ4 decode through lz4-java — the `.lz4` frame container dataset
+  * mirrors and intermediate pipeline drops use, and the raw blocks
+  * parquet's LZ4_RAW and ORC's LZ4 codec embed — plus fixture
+  * synthesizers. `LZ4FrameInputStream` verifies header, block and
+  * content checksums and skips skippable frames;
+  * `LZ4SafeDecompressor` bounds-checks raw blocks. This adapter adds
+  * the decode posture every decoder here shares:
+  *   - the bomb cap, counted across all concatenated frames while
+  *     reading;
+  *   - never-throw: damage, dictionary frames and output past `cap`
+  *     come back as null;
+  *   - [[isLz4Content]], the dispatch probe that tells LZ4 from zstd
+  *     behind the skippable-frame magic range the two share.
+  * (Reference scope note: the ETL core `etl.go:12-68` has no
+  * compression surface; extension frontier.)
   */
 object Lz4 {
-
-  private final class Err(msg: String)
-    extends RuntimeException(msg, null, false, false)
-  private def fail(msg: String): Nothing = throw new Err(msg)
 
   private val FrameMagic = 0x184D2204
   private val SkippableMin = 0x184D2A50
 
-  def isLz4(b: Array[Byte]): Boolean =
-    b != null && b.length >= 4 && {
-      val m = leU32(b, 0).toInt
-      m == FrameMagic || (m >= SkippableMin && m <= SkippableMin + 15)
-    }
-
   /** True when the first CONTENT frame — past any leading skippable
     * frames, whose 0x184D2A5x magic range LZ4 SHARES with zstd — is
-    * an LZ4 frame. This is the dispatch probe: a bare [[isLz4]]
+    * an LZ4 frame. This is the dispatch probe: a bare magic check
     * would claim skippable-led zstd streams and vice versa.
     */
   def isLz4Content(b: Array[Byte]): Boolean = {
@@ -56,264 +48,50 @@ object Lz4 {
     false
   }
 
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xFF
-  private def leU16(b: Array[Byte], i: Int): Int = u8(b, i) | (u8(b, i + 1) << 8)
   private def leU32(b: Array[Byte], i: Int): Long =
-    (u8(b, i) | (u8(b, i + 1) << 8) | (u8(b, i + 2) << 16) |
-      (u8(b, i + 3) << 24)) & 0xFFFFFFFFL
-  private def leU64(b: Array[Byte], i: Int): Long =
-    leU32(b, i) | (leU32(b, i + 4) << 32)
+    ((b(i) & 0xFF) | ((b(i + 1) & 0xFF) << 8) | ((b(i + 2) & 0xFF) << 16) |
+      ((b(i + 3) & 0xFF) << 24)) & 0xFFFFFFFFL
 
-  // ---- XXH32 (the frame format's checksum; public XXH32 algorithm) ----
-
-  private val P1 = 0x9E3779B1
-  private val P2 = 0x85EBCA77
-  private val P3 = 0xC2B2AE3D
-  private val P4 = 0x27D4EB2F
-  private val P5 = 0x165667B1
-
-  def xxh32(b: Array[Byte], off: Int, len: Int, seed: Int): Int = {
-    var p = off
-    val end = off + len
-    var acc = 0
-    if (len >= 16) {
-      var a1 = seed + P1 + P2
-      var a2 = seed + P2
-      var a3 = seed
-      var a4 = seed - P1
-      while (p + 16 <= end) {
-        a1 = Integer.rotateLeft(a1 + leU32(b, p).toInt * P2, 13) * P1
-        a2 = Integer.rotateLeft(a2 + leU32(b, p + 4).toInt * P2, 13) * P1
-        a3 = Integer.rotateLeft(a3 + leU32(b, p + 8).toInt * P2, 13) * P1
-        a4 = Integer.rotateLeft(a4 + leU32(b, p + 12).toInt * P2, 13) * P1
-        p += 16
-      }
-      acc = Integer.rotateLeft(a1, 1) + Integer.rotateLeft(a2, 7) +
-        Integer.rotateLeft(a3, 12) + Integer.rotateLeft(a4, 18)
-    } else acc = seed + P5
-    acc += len
-    while (p + 4 <= end) {
-      acc = Integer.rotateLeft(acc + leU32(b, p).toInt * P3, 17) * P4
-      p += 4
-    }
-    while (p < end) {
-      acc = Integer.rotateLeft(acc + u8(b, p) * P5, 11) * P1
-      p += 1
-    }
-    acc ^= acc >>> 15
-    acc *= P2
-    acc ^= acc >>> 13
-    acc *= P3
-    acc ^= acc >>> 16
-    acc
-  }
-
-  // ---- block decompression ---------------------------------------------
+  private val Block = LZ4Factory.fastestInstance().safeDecompressor()
 
   /** Decompress ONE raw LZ4 block (no frame, known decoded size) —
     * the shape parquet's LZ4_RAW codec and similar embeddings use.
     * Null on damage or size mismatch.
     */
-  def decodeRawBlock(b: Array[Byte], outLen: Int): Array[Byte] = try {
-    if (b == null || outLen < 0 || outLen > (1 << 26)) return null
-    val out = new Array[Byte](outLen)
-    val n = decodeBlock(b, 0, b.length, out, 0, 0, outLen)
-    if (n == outLen) out else null
-  } catch { case _: RuntimeException => null }
+  def decodeRawBlock(b: Array[Byte], outLen: Int): Array[Byte] =
+    if (b == null || outLen < 0 || outLen > (1 << 26)) null
+    else try {
+      val out = new Array[Byte](outLen)
+      if (Block.decompress(b, 0, b.length, out, 0, outLen) == outLen) out
+      else null
+    } catch { case _: RuntimeException => null }
 
   /** Decompress ONE raw LZ4 block of UNKNOWN decoded size, bounded
     * by `cap` — the shape ORC's chunked framing uses. Returns the
     * decoded bytes (length ≤ cap) or null on damage / cap overflow.
     */
-  def decodeRawBlockUnsized(b: Array[Byte], cap: Int): Array[Byte] = try {
-    if (b == null || cap < 0 || cap > (1 << 26)) return null
-    val out = new Array[Byte](cap)
-    val n = decodeBlock(b, 0, b.length, out, 0, 0, cap)
-    if (n < 0) null else java.util.Arrays.copyOf(out, n)
-  } catch { case _: RuntimeException => null }
-
-  /** Decompress one LZ4 block into `out` starting at `outLen`;
-    * matches may reach back `window` bytes before the block (linked
-    * blocks). Returns the new output length.
-    */
-  private def decodeBlock(b: Array[Byte], start: Int, endExcl: Int,
-      out: Array[Byte], outStart: Int, windowStart: Int, cap: Int): Int = {
-    var p = start
-    var o = outStart
-    while (p < endExcl) {
-      val token = u8(b, p)
-      p += 1
-      var litLen = token >> 4
-      if (litLen == 15) {
-        var more = 255
-        while (more == 255) {
-          if (p >= endExcl) fail("literal length truncated")
-          more = u8(b, p)
-          p += 1
-          litLen += more
-          if (litLen < 0) fail("literal length overflow")
-        }
-      }
-      if (p + litLen > endExcl) fail("literals truncated")
-      if (o + litLen > cap) fail("decompression bomb")
-      System.arraycopy(b, p, out, o, litLen)
-      p += litLen
-      o += litLen
-      if (p < endExcl) { // a match follows (the last sequence has none)
-        if (p + 2 > endExcl) fail("offset truncated")
-        val offset = leU16(b, p)
-        p += 2
-        if (offset == 0) fail("zero match offset")
-        if (offset > o - windowStart) fail("match escapes window")
-        var matchLen = (token & 15) + 4
-        if ((token & 15) == 15) {
-          var more = 255
-          while (more == 255) {
-            if (p >= endExcl) fail("match length truncated")
-            more = u8(b, p)
-            p += 1
-            matchLen += more
-            if (matchLen < 0) fail("match length overflow")
-          }
-        }
-        if (o + matchLen > cap) fail("decompression bomb")
-        var k = 0
-        val src = o - offset
-        while (k < matchLen) { // overlap-safe byte copy
-          out(o + k) = out(src + k)
-          k += 1
-        }
-        o += matchLen
-      }
-    }
-    o
-  }
+  def decodeRawBlockUnsized(b: Array[Byte], cap: Int): Array[Byte] =
+    if (b == null || cap < 0 || cap > (1 << 26)) null
+    else try {
+      val out = new Array[Byte](cap)
+      java.util.Arrays.copyOf(out, Block.decompress(b, 0, b.length, out, 0, cap))
+    } catch { case _: RuntimeException => null }
 
   /** Decode a complete `.lz4` stream (one or more frames; skippable
     * frames skipped). Null on damage — bad magics, reserved bits,
-    * header/block/content checksum mismatches, window escapes, or
+    * header/block/content checksum mismatches, dictionary frames, or
     * output past `cap`.
     */
   def decode(b: Array[Byte], cap: Long = 1L << 30): Array[Byte] =
-    try decodeAll(b, cap)
-    catch {
-      case _: Err => null
-      case _: ArrayIndexOutOfBoundsException => null
-      case _: NegativeArraySizeException => null
-    }
+    if (!isLz4Content(b)) null
+    else try {
+      Capped.readAll(new LZ4FrameInputStream(new ByteArrayInputStream(b)),
+        cap, b.length * 2L)
+    } catch { case _: IOException | _: RuntimeException => null }
 
-  private def decodeAll(b: Array[Byte], cap: Long): Array[Byte] = {
-    if (b == null || b.length < 4) fail("too short")
-    val capI = math.min(cap, Int.MaxValue.toLong - 16).toInt
-    var out = new Array[Byte](64 << 10)
-    var outLen = 0
-    def ensure(n: Int): Unit =
-      if (outLen + n > out.length) {
-        var t = out.length.toLong * 2
-        while (t < outLen + n) t *= 2
-        out = java.util.Arrays.copyOf(out,
-          math.min(t, Int.MaxValue.toLong).toInt)
-      }
-    var p = 0
-    var sawFrame = false
-    while (p < b.length) {
-      if (p + 4 > b.length) fail("trailing garbage")
-      val magic = leU32(b, p).toInt
-      if (magic >= SkippableMin && magic <= SkippableMin + 15) {
-        if (p + 8 > b.length) fail("truncated skippable frame")
-        val sz = leU32(b, p + 4)
-        if (p + 8 + sz > b.length) fail("skippable frame past input")
-        p += 8 + sz.toInt
-      } else if (magic == FrameMagic) {
-        sawFrame = true
-        p += 4
-        if (p + 2 > b.length) fail("truncated frame descriptor")
-        val flg = u8(b, p)
-        val bd = u8(b, p + 1)
-        if ((flg >> 6) != 1) fail("unsupported frame version")
-        if ((flg & 2) != 0) fail("reserved FLG bit set")
-        val blockIndep = (flg & 0x20) != 0
-        val blockChecksum = (flg & 0x10) != 0
-        val hasContentSize = (flg & 0x08) != 0
-        val contentChecksum = (flg & 0x04) != 0
-        val hasDictId = (flg & 0x01) != 0
-        if ((bd & 0x8F) != 0) fail("reserved BD bits set")
-        val bmax = (bd >> 4) & 7
-        if (bmax < 4) fail("reserved block max size")
-        val blockMax = 1 << (8 + 2 * bmax) // 4→64K … 7→4M
-        var q = p + 2
-        var contentSize = -1L
-        if (hasContentSize) {
-          if (q + 8 > b.length) fail("truncated content size")
-          contentSize = leU64(b, q)
-          if (contentSize < 0) fail("content size overflow")
-          q += 8
-        }
-        if (hasDictId) {
-          // external-dictionary frames need bytes this engine doesn't
-          // have — structural damage territory is wrong, but so is a
-          // silent wrong answer; the frame is simply undecodable here
-          fail("dictionary frame")
-        }
-        if (q >= b.length) fail("truncated header checksum")
-        val hc = u8(b, q)
-        if (((xxh32(b, p, q - p, 0) >> 8) & 0xFF) != hc)
-          fail("header checksum mismatch")
-        q += 1
-        val frameStart = outLen
-        var end = false
-        while (!end) {
-          if (q + 4 > b.length) fail("truncated block size")
-          val raw = leU32(b, q)
-          q += 4
-          if (raw == 0) end = true
-          else {
-            val stored = (raw & 0x80000000L) != 0
-            val sz = (raw & 0x7FFFFFFFL).toInt
-            if (sz > blockMax) fail("block over max size")
-            if (q + sz > b.length) fail("block truncated")
-            if (stored) {
-              if (outLen + sz > capI) fail("decompression bomb")
-              ensure(sz)
-              System.arraycopy(b, q, out, outLen, sz)
-              outLen += sz
-            } else {
-              // worst-case expansion of an LZ4 block is < 256x its
-              // stored size (each length-extension byte adds <= 255),
-              // so grow by that, capped at the declared block max —
-              // NOT a flat blockMax, which would churn 4 MB per tiny
-              // block under lz4-java's default descriptor
-              val grow = math.min(blockMax.toLong, sz.toLong * 256 + 16).toInt
-              ensure(grow + 16)
-              val window = if (blockIndep) outLen else frameStart
-              outLen = decodeBlock(b, q, q + sz, out, outLen, window,
-                math.min(capI, outLen + grow))
-            }
-            q += sz
-            if (blockChecksum) {
-              if (q + 4 > b.length) fail("truncated block checksum")
-              val want = leU32(b, q).toInt
-              if (xxh32(b, q - sz, sz, 0) != want)
-                fail("block checksum mismatch")
-              q += 4
-            }
-          }
-        }
-        if (contentSize >= 0 && outLen - frameStart != contentSize)
-          fail("content size mismatch")
-        if (contentChecksum) {
-          if (q + 4 > b.length) fail("truncated content checksum")
-          val want = leU32(b, q).toInt
-          if (xxh32(out, frameStart, outLen - frameStart, 0) != want)
-            fail("content checksum mismatch")
-          q += 4
-        }
-        p = q
-      } else fail("bad magic")
-    }
-    if (!sawFrame) fail("no lz4 frame")
-    java.util.Arrays.copyOf(out, outLen)
-  }
+  private val Xxh32 = XXHashFactory.fastestInstance().hash32()
+  private def xxh32(b: Array[Byte], off: Int, len: Int, seed: Int): Int =
+    Xxh32.hash(b, off, len, seed)
 
   // ---- synthesizer -------------------------------------------------------
 

@@ -422,9 +422,10 @@ object Multimodal {
       } else ("lz4", "unknown_container")
     }
     if (Zstd.isZstd(b)) {
-      // REAL decode (from-scratch RFC 8878) then classify the payload
-      // like the gzip branch: the only remaining profile gap is a
-      // frame that names an external dictionary we don't ship
+      // REAL decode (zstd-jni through the Zstd adapter: bomb cap,
+      // never-throw, and the dictionary split) then classify the
+      // payload like the gzip branch: the only remaining profile gap
+      // is a frame naming a dictionary no frame or caller supplies
       return Zstd.decodeResult(b) match {
         case Zstd.NeedsDictionary => ("zstd", "unsupported_profile")
         case Zstd.Corrupt => ("zstd", "corrupt")
@@ -437,8 +438,9 @@ object Multimodal {
       }
     }
     if (Bzip2.isBzip2(b)) {
-      // REAL decode (from-scratch BWT/Huffman/MTF, deprecated
-      // randomised blocks included) then classify the payload
+      // REAL decode (commons-compress through the Bzip2 adapter: bomb
+      // cap, never-throw, deprecated randomised blocks included) then
+      // classify the payload
       return Bzip2.decodeResult(b) match {
         case Bzip2.Corrupt => ("bzip2", "corrupt")
         case Bzip2.Ok(plain) =>
@@ -615,12 +617,12 @@ object Multimodal {
     * dictionary names a DIFFERENT id — a dictionary is present, just
     * not the one the frame wants (`zstd`/`unsupported_profile`,
     * distinct from case 16's no-dictionary-at-all), 29 → a valid
-    * `.warc.bz2` decoded for REAL through the from-scratch BWT/
-    * Huffman path (`warc`/`ok`), 30 → the same with one compressed
+    * `.warc.bz2` decoded for REAL through the commons-compress
+    * adapter (`warc`/`ok`), 30 → the same with one compressed
     * byte flipped so a CRC catches it (`bzip2`/`corrupt`), 31 → a
     * valid `.warc.lz4` through the frame decoder (`warc`/`ok`),
     * 32 → the same truncated mid-block (`lz4`/`corrupt`), 33 → a
-    * valid `.warc.xz` through the from-scratch LZMA2/range decoder
+    * valid `.warc.xz` through the xz-java adapter
     * (`warc`/`ok`), 34 → the same with one byte flipped so a check
     * catches it (`xz`/`corrupt`), 35 → a valid `.warc.Z` through the
     * from-scratch Unix-compress LZW decoder, widths cycling
@@ -1436,7 +1438,7 @@ object Multimodal {
   /** HTTP-aware WARC processing — the split every crawl pipeline must
     * perform before payloads become documents: expand the crawl
     * (member-aware `.warc.gz` walk that sheds non-record interlopers,
-    * or from-scratch `.warc.zst` — same [[Containers.crawlInflate]]
+    * or zstd-jni `.warc.zst` — same [[Containers.crawlInflate]]
     * path as [[warcStats]]/[[crawlPages]]), walk its records, and
     * parse the HTTP response INSIDE each `response` record's content
     * block (status line, header fold, exact body boundary).
@@ -2260,7 +2262,8 @@ object Multimodal {
     * Zstandard / XZ / LZMA / SHRINK / IMPLODE / REDUCE-1..4 /
     * DEFLATE64 / DCL-IMPLODE — write sides: JDK Deflater, commons-compress,
     * zstd-jni, xz-java twice, and the from-scratch
-    * shrink/implode/reduce/deflate64/dcl encoders), `.cls` labels
+    * shrink/implode/reduce/deflate64/dcl encoders; read sides for
+    * BZIP2/Zstandard/XZ/LZMA: the library adapters), `.cls` labels
     * STORED. The sums are method-independent, so the oracle only
     * passes if every codec dispatch decodes exactly.
     */
@@ -3038,7 +3041,7 @@ object Multimodal {
 
   /** Deterministic Arrow IPC corpus, WRITTEN BY the independent
     * arrow-vector implementation on the executors (the read direction
-    * is the from-scratch surface under test — the Xz posture): table
+    * is the from-scratch surface under test): table
     * `id` holds `3 + id%5` rows of (val `id*13 + r*7`, NULL on
     * `r%4==0`; name `rec-<id>-<r>`), in FILE framing on even ids and
     * STREAM framing on odd, split into two batches when `id%3==0`,
@@ -3069,7 +3072,7 @@ object Multimodal {
         val bos = new java.io.ByteArrayOutputStream()
         val ch = java.nio.channels.Channels.newChannel(bos)
         // body compression on a 2-in-25 slice: LZ4-frame / zstd —
-        // decoded by the from-scratch Lz4/Zstd cores under the reader.
+        // decoded by the Lz4/Zstd library adapters under the reader.
         // A narrow slice, not a third of the corpus: arrow-side codec
         // setup per tiny batch dominates synthesis cost, and coverage
         // needs presence, not volume (the spec pins both codecs on
@@ -5642,9 +5645,8 @@ object Multimodal {
     * `24 + (id+s)%20`-byte payload (byte `j` =
     * `(id*19 + s*7 + j*13) % 256`). Most ids compress the WARC as ONE
     * bzip2 stream via the independent commons-compress implementation
-    * Spark bundles at level `1 + id%9` — so the from-scratch decoder
-    * must read real multi-table Huffman/BWT streams, not echoes of
-    * its own writer. Ids with `id%4 == 3` instead use the deprecated
+    * Spark bundles at level `1 + id%9`, read back through the
+    * [[Bzip2]] adapter. Ids with `id%4 == 3` instead use the deprecated
     * 0.9.0 RANDOMISED profile via [[Bzip2.synthBzip2]] (no modern
     * encoder can produce it), exercising the `randtable` path the
     * driver gate would otherwise never see. The oracle replays the
@@ -5724,9 +5726,8 @@ object Multimodal {
     * records, record `s` carrying a `22 + (id+s)%18`-byte payload
     * (byte `j` = `(id*29 + s*13 + j*17) % 256`), the WARC compressed
     * by the independent xz-java implementation at preset `id%10`
-    * with check type cycling CRC32/CRC64/SHA-256 — so the
-    * from-scratch LZMA2/range decoder must read real streams across
-    * the preset space. Oracle replays the generator.
+    * with check type cycling CRC32/CRC64/SHA-256, read back through
+    * the [[Xz]] adapter across the preset space. Oracle replays the generator.
     */
   def demoWarcXzCorpus(spark: SparkSession, docs: DataFrame): Dataset[MediaFile] = {
     import spark.implicits._

@@ -18,8 +18,8 @@ import java.nio.charset.StandardCharsets.UTF_8
   * compression framing (3-byte little-endian chunk headers, low bit
   * = stored-as-original). Codecs: NONE / ZLIB (raw deflate, JDK
   * Inflater) / SNAPPY (the from-scratch [[Snappy]]) / LZ4 (the
-  * from-scratch [[Lz4]] block core) / ZSTD (the from-scratch
-  * [[Zstd]]).
+  * [[Lz4]] raw-block adapter over lz4-java) / ZSTD (the [[Zstd]]
+  * adapter over zstd-jni).
   *
   * Run-length encodings, all of them: byte RLE, boolean (bit) RLE,
   * integer RLE v1 (run/literal with delta), and integer RLE v2 in

@@ -19,8 +19,8 @@ import java.nio.charset.StandardCharsets.UTF_8
   * use: levels and dictionary ids), and PLAIN values for every
   * physical type. Column chunks decompress through UNCOMPRESSED /
   * SNAPPY (the from-scratch [[Snappy]]) / GZIP (JDK) / ZSTD (the
-  * from-scratch [[Zstd]]) / LZ4_RAW (the from-scratch [[Lz4]] block
-  * core).
+  * [[Zstd]] adapter over zstd-jni) / LZ4_RAW (the [[Lz4]] raw-block
+  * adapter over lz4-java).
   *
   * Scope: flat schemas decode down a dedicated fast path; NESTED and
   * repeated schemas assemble through Dremel record assembly (striped

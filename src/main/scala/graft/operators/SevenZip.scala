@@ -13,12 +13,13 @@ import java.nio.charset.StandardCharsets.UTF_16LE
   * split into substreams by kNumUnpackStream/kSize, empty-stream /
   * empty-file distinction, and UTF-16LE names.
   *
-  * Member codecs: Copy, LZMA2 and LZMA1 (both through the existing
-  * from-scratch [[Xz]] range-decoder core), Delta, Deflate (JDK raw),
-  * BZip2 (the from-scratch [[Bzip2]]), and the six one-input BCJ
-  * branch filters — x86/PPC/IA64/ARM/ARMT/SPARC via [[Bcj]]
-  * (differential-pinned against xz-java; LZMA2→BCJ chains pinned both
-  * directions against commons-compress) — with optional start-offset
+  * Member codecs: Copy, LZMA2 and LZMA1 (both through the [[Xz]]
+  * adapter over xz-java, dictionary sized by the folder's declared
+  * output), Delta, Deflate (JDK raw), BZip2 (the [[Bzip2]] adapter
+  * over commons-compress), and the six one-input BCJ branch filters —
+  * x86/PPC/IA64/ARM/ARMT/SPARC via [[Bcj]] (xz-java's simple filters;
+  * LZMA2→BCJ chains pinned both directions against commons-compress)
+  * — with optional start-offset
   * props. Coder chains evaluate recursively over the bind-pair graph
   * (e.g. Delta→LZMA2, LZMA2→BCJ). Named profile gaps, distinct from
   * damage: AES-encrypted folders (`encrypted`), BCJ2 (the 4-stream

@@ -1,639 +1,82 @@
 package graft.operators
 
-/** From-scratch XZ (.xz) decoder — the other compression academic
-  * dataset drops and long-term archives ship in. Implemented from the
-  * public xz file-format spec and the LZMA specification: stream
-  * header/footer with their CRC32s, block headers (filter chains —
-  * LZMA2 only, the format's mandatory default), the LZMA2 chunk layer
-  * (uncompressed chunks, state/props/dict resets), the full LZMA
-  * range decoder (11-bit adaptive probabilities, the 12-state
-  * machine, matched literals, length and distance coders with
-  * position slots, direct bits and the align field, rep distances),
-  * block checks (CRC32, CRC64, SHA-256), and the index + footer
-  * verification. (Reference scope note: the ETL core `etl.go:12-68`
-  * has no compression surface; extension frontier.)
-  *
-  * Decode posture matches every decoder here: degrade-don't-throw
-  * (null on damage), expansion bomb cap, per-blob scalar routines for
-  * `mapPartitions` ingest. Pinned against the independent xz-java
-  * implementation Spark bundles (its streams, across presets and
-  * check types, must decode byte-exactly — the write side is the
-  * interop pin; there is no from-scratch encoder).
+import java.io.{ByteArrayInputStream, IOException}
+import org.tukaani.xz.{LZMA2InputStream, LZMAInputStream, XZInputStream}
+
+/** XZ, raw LZMA2 and raw LZMA1 decode through xz-java — the
+  * compression academic dataset drops and long-term archives ship in,
+  * and the member codecs of 7z folders and ZIP method 14.
+  * `XZInputStream` verifies headers, block checks (CRC32, CRC64,
+  * SHA-256), the index and the footer, and reads concatenated streams
+  * with stream padding. This adapter adds the decode posture every
+  * decoder here shares:
+  *   - the bomb cap, counted across all streams while reading;
+  *   - a memory limit: an `.xz` header may name at most xz `-9`'s
+  *     64 MiB dictionary, and the raw LZMA/LZMA2 paths size the
+  *     dictionary by the output size their container declares — so a
+  *     forged header naming a multi-GiB dictionary is refused before
+  *     anything is allocated;
+  *   - never-throw: damage, unsupported options and output past `cap`
+  *     come back as null.
+  * (Reference scope note: the ETL core `etl.go:12-68` has no
+  * compression surface; extension frontier.)
   */
 object Xz {
 
-  private final class Err(msg: String)
-    extends RuntimeException(msg, null, false, false)
-  private def fail(msg: String): Nothing = throw new Err(msg)
-
   private val Magic = Array[Byte](0xFD.toByte, '7', 'z', 'X', 'Z', 0)
+
+  /** xz `-9`'s 64 MiB dictionary plus the decoder's own state, in KiB. */
+  private val MemoryLimitKiB = 65 << 10
 
   def isXz(b: Array[Byte]): Boolean =
     b != null && b.length >= 12 && (0 until 6).forall(i => b(i) == Magic(i))
 
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xFF
-  private def leU32(b: Array[Byte], i: Int): Long =
-    (u8(b, i) | (u8(b, i + 1) << 8) | (u8(b, i + 2) << 16) |
-      (u8(b, i + 3) << 24)) & 0xFFFFFFFFL
-
-  // CRC64-ECMA (reflected, poly 0xC96C5795D7870F42), xz's default check
-  private val Crc64Table: Array[Long] = Array.tabulate(256) { n =>
-    var c = n.toLong
-    var k = 0
-    while (k < 8) {
-      c = if ((c & 1L) != 0) (c >>> 1) ^ 0xC96C5795D7870F42L else c >>> 1
-      k += 1
-    }
-    c
-  }
-
-  def crc64(b: Array[Byte], off: Int, len: Int): Long = {
-    var c = ~0L
-    var i = off
-    while (i < off + len) {
-      c = (c >>> 8) ^ Crc64Table(((c ^ b(i)) & 0xFF).toInt)
-      i += 1
-    }
-    ~c
-  }
-
-  private def crc32(b: Array[Byte], off: Int, len: Int): Long = {
-    val c = new java.util.zip.CRC32()
-    c.update(b, off, len)
-    c.getValue
-  }
-
-  /** xz multibyte integer: 7 bits per byte, high bit = continuation. */
-  private def varint(b: Array[Byte], pos: Array[Int]): Long = {
-    var v = 0L
-    var shift = 0
-    var cont = true
-    while (cont) {
-      if (pos(0) >= b.length || shift > 63) fail("bad varint")
-      val by = u8(b, pos(0))
-      pos(0) += 1
-      v |= (by & 0x7FL) << shift
-      shift += 7
-      cont = (by & 0x80) != 0
-    }
-    v
-  }
-
-  // ---- LZMA range decoder ----------------------------------------------
-
-  private final class RangeDec(b: Array[Byte], start: Int, val endExcl: Int) {
-    var pos = start
-    private var range = 0xFFFFFFFFL
-    private var code = 0L
-    // init: one ignored byte then 4 big-endian code bytes
-    if (start + 5 > endExcl) fail("lzma chunk too short")
-    if (b(start) != 0) fail("bad rc first byte")
-    pos += 1
-    var k = 0
-    while (k < 4) { code = (code << 8) | u8(b, pos); pos += 1; k += 1 }
-
-    private def nextByte(): Int =
-      if (pos < endExcl) { val v = u8(b, pos); pos += 1; v }
-      else fail("rc past chunk end")
-
-    private def normalize(): Unit =
-      if (range < (1L << 24)) {
-        range <<= 8
-        code = ((code << 8) | nextByte()) & 0xFFFFFFFFL
-      }
-
-    def decodeBit(probs: Array[Short], i: Int): Int = {
-      val p = probs(i) & 0xFFFF
-      val bound = (range >>> 11) * p
-      if (code < bound) {
-        range = bound
-        probs(i) = (p + ((2048 - p) >>> 5)).toShort
-        normalize()
-        0
-      } else {
-        range -= bound
-        code -= bound
-        probs(i) = (p - (p >>> 5)).toShort
-        normalize()
-        1
-      }
-    }
-
-    def decodeDirect(n: Int): Long = {
-      var res = 0L
-      var i = 0
-      while (i < n) {
-        range >>>= 1
-        code -= range
-        // both fit in 63 bits, so a borrow shows as code < 0
-        if (code < 0) {
-          code += range
-          res <<= 1
-        } else res = (res << 1) | 1
-        normalize()
-        i += 1
-      }
-      res
-    }
-
-    def finishedExactly: Boolean = pos == endExcl && code == 0
-  }
-
-  private def bitTree(rc: RangeDec, probs: Array[Short], off: Int,
-      nbits: Int): Int = {
-    var m = 1
-    var i = 0
-    while (i < nbits) { m = (m << 1) | rc.decodeBit(probs, off + m); i += 1 }
-    m - (1 << nbits)
-  }
-
-  private def bitTreeRev(rc: RangeDec, probs: Array[Short], off: Int,
-      nbits: Int): Int = {
-    var m = 1
-    var sym = 0
-    var i = 0
-    while (i < nbits) {
-      val bit = rc.decodeBit(probs, off + m)
-      m = (m << 1) | bit
-      sym |= bit << i
-      i += 1
-    }
-    sym
-  }
-
-  // ---- LZMA state (persists across LZMA2 chunks unless reset) -----------
-
-  private final class LzmaState {
-    var lc = 3
-    var lp = 0
-    var pb = 2
-    var state = 0
-    var rep0 = 0
-    var rep1 = 0
-    var rep2 = 0
-    var rep3 = 0
-    // probability arrays (reinitialized on state reset)
-    var isMatch: Array[Short] = _
-    var isRep: Array[Short] = _
-    var isRepG0: Array[Short] = _
-    var isRepG1: Array[Short] = _
-    var isRepG2: Array[Short] = _
-    var isRep0Long: Array[Short] = _
-    var posSlot: Array[Short] = _
-    var specPos: Array[Short] = _
-    var align: Array[Short] = _
-    var lenChoice: Array[Short] = _
-    var lenLow: Array[Short] = _
-    var lenMid: Array[Short] = _
-    var lenHigh: Array[Short] = _
-    var repChoice: Array[Short] = _
-    var repLow: Array[Short] = _
-    var repMid: Array[Short] = _
-    var repHigh: Array[Short] = _
-    var literal: Array[Short] = _
-
-    /** `maxLcLp`: LZMA2 requires lc+lp <= 4; LZMA1 (the ZIP method-14
-      * payload) allows the full lc<=8, lp<=4 range — pass 12 there.
-      */
-    def setProps(props: Int, maxLcLp: Int = 4): Unit = {
-      if (props >= 9 * 5 * 5) fail("bad lzma props")
-      lc = props % 9
-      lp = (props / 9) % 5
-      pb = props / 45
-      if (lc + lp > maxLcLp) fail(s"unsupported lc+lp > $maxLcLp")
-    }
-
-    def resetState(): Unit = {
-      state = 0
-      rep0 = 0; rep1 = 0; rep2 = 0; rep3 = 0
-      def init(n: Int): Array[Short] = Array.fill[Short](n)(1024)
-      isMatch = init(12 << 4)
-      isRep = init(12)
-      isRepG0 = init(12)
-      isRepG1 = init(12)
-      isRepG2 = init(12)
-      isRep0Long = init(12 << 4)
-      posSlot = init(4 * 64)
-      specPos = init(115)
-      align = init(16)
-      lenChoice = init(2)
-      lenLow = init(16 << 3)
-      lenMid = init(16 << 3)
-      lenHigh = init(256)
-      repChoice = init(2)
-      repLow = init(16 << 3)
-      repMid = init(16 << 3)
-      repHigh = init(256)
-      literal = init(0x300 << (lc + lp))
-    }
-  }
-
-  private def decodeLen(rc: RangeDec, choice: Array[Short],
-      low: Array[Short], mid: Array[Short], high: Array[Short],
-      posState: Int): Int =
-    if (rc.decodeBit(choice, 0) == 0)
-      2 + bitTree(rc, low, posState << 3, 3)
-    else if (rc.decodeBit(choice, 1) == 0)
-      10 + bitTree(rc, mid, posState << 3, 3)
-    else
-      18 + bitTree(rc, high, 0, 8)
-
-  /** Decode one LZMA2 LZMA chunk: exactly `unpackSize` bytes appended
-    * to `out` (the window = everything since the last dict reset).
+  /** Decode a complete `.xz` file (concatenated streams and stream
+    * padding included). Null on damage — bad magics, header/footer
+    * CRCs, unsupported filters, block check mismatches, index
+    * inconsistencies, a dictionary past the memory limit, or output
+    * past `cap`.
     */
-  private def lzmaChunk(rc: RangeDec, st: LzmaState, out: Array[Byte],
-      outLenIn: Int, unpackSize: Int, dictStart: Int): Int = {
-    var outLen = outLenIn
-    val outEnd = outLenIn + unpackSize
-    val pbMask = (1 << st.pb) - 1
-    val lpMask = (1 << st.lp) - 1
-    while (outLen < outEnd) {
-      val posState = (outLen - dictStart) & pbMask
-      if (rc.decodeBit(st.isMatch, (st.state << 4) + posState) == 0) {
-        // literal
-        val prevByte = if (outLen > dictStart) u8(out, outLen - 1) else 0
-        val litCtx = ((((outLen - dictStart) & lpMask) << st.lc) +
-          (prevByte >> (8 - st.lc))) * 0x300
-        var sym = 1
-        if (st.state >= 7) { // matched literal
-          if (st.rep0 + 1 > outLen - dictStart) fail("match byte escapes window")
-          var matchByte = u8(out, outLen - st.rep0 - 1)
-          var break = false
-          while (!break && sym < 0x100) {
-            val matchBit = (matchByte >> 7) & 1
-            matchByte = (matchByte << 1) & 0xFF
-            val bit = rc.decodeBit(st.literal,
-              litCtx + ((1 + matchBit) << 8) + sym)
-            sym = (sym << 1) | bit
-            if (matchBit != bit) break = true
-          }
-        }
-        while (sym < 0x100)
-          sym = (sym << 1) | rc.decodeBit(st.literal, litCtx + sym)
-        out(outLen) = (sym & 0xFF).toByte
-        outLen += 1
-        st.state =
-          if (st.state < 4) 0 else if (st.state < 10) st.state - 3
-          else st.state - 6
-      } else {
-        var len = 0
-        if (rc.decodeBit(st.isRep, st.state) == 0) {
-          // new match: distance freshly coded
-          st.rep3 = st.rep2; st.rep2 = st.rep1; st.rep1 = st.rep0
-          len = decodeLen(rc, st.lenChoice, st.lenLow, st.lenMid,
-            st.lenHigh, posState)
-          val lenState = math.min(len - 2, 3)
-          val slot = bitTree(rc, st.posSlot, lenState << 6, 6)
-          if (slot < 4) st.rep0 = slot
-          else {
-            val ndb = (slot >> 1) - 1
-            // compute in Long: slots 62/63 reach 2^31, which would
-            // wrap Int and bypass every window guard below
-            var dist = (2L | (slot & 1)) << ndb
-            if (slot < 14)
-              dist += bitTreeRev(rc, st.specPos, dist.toInt - slot - 1, ndb)
-            else {
-              dist += rc.decodeDirect(ndb - 4) << 4
-              dist += bitTreeRev(rc, st.align, 0, 4)
-            }
-            if (dist == 0xFFFFFFFFL)
-              fail("unexpected end marker in lzma2 chunk")
-            if (dist > Int.MaxValue - 2) fail("distance overflow")
-            st.rep0 = dist.toInt
-          }
-          st.state = if (st.state < 7) 7 else 10
-        } else {
-          // rep match
-          if (rc.decodeBit(st.isRepG0, st.state) == 0) {
-            if (rc.decodeBit(st.isRep0Long, (st.state << 4) + posState) == 0) {
-              // short rep: one byte at rep0
-              st.state = if (st.state < 7) 9 else 11
-              if (st.rep0 + 1 > outLen - dictStart)
-                fail("shortrep escapes window")
-              out(outLen) = out(outLen - st.rep0 - 1)
-              outLen += 1
-              // done with this symbol
-              len = -1
-            }
-          } else {
-            val dist =
-              if (rc.decodeBit(st.isRepG1, st.state) == 0) st.rep1
-              else if (rc.decodeBit(st.isRepG2, st.state) == 0) {
-                val d = st.rep2
-                st.rep2 = st.rep1
-                d
-              } else {
-                val d = st.rep3
-                st.rep3 = st.rep2
-                st.rep2 = st.rep1
-                d
-              }
-            st.rep1 = st.rep0
-            st.rep0 = dist
-          }
-          if (len == 0) {
-            len = decodeLen(rc, st.repChoice, st.repLow, st.repMid,
-              st.repHigh, posState)
-            st.state = if (st.state < 7) 8 else 11
-          }
-        }
-        if (len > 0) {
-          if (st.rep0 + 1 > outLen - dictStart) fail("match escapes window")
-          if (outLen + len > outEnd) fail("match past chunk size")
-          var k = 0
-          val src = outLen - st.rep0 - 1
-          while (k < len) {
-            out(outLen + k) = out(src + k)
-            k += 1
-          }
-          outLen += len
-        }
-      }
-    }
-    outLen
-  }
+  def decode(b: Array[Byte], cap: Long = 1L << 30): Array[Byte] =
+    if (!isXz(b)) null
+    else try {
+      Capped.readAll(new XZInputStream(new ByteArrayInputStream(b),
+        MemoryLimitKiB), cap, b.length * 4L)
+    } catch { case _: IOException | _: RuntimeException => null }
 
-  // ---- LZMA2 chunk layer -------------------------------------------------
-
-  /** Decode an LZMA2 stream starting at `start`, bounded by
-    * `endExcl`, stopping at its end marker; returns the plain bytes
-    * and the position just past the marker.
-    */
-  private def lzma2(b: Array[Byte], start: Int, endExcl: Int,
-      cap: Long): (Array[Byte], Int) = {
-    var out = new Array[Byte](64 << 10)
-    var outLen = 0
-    def ensure(n: Int): Unit =
-      if (outLen + n > out.length) {
-        var t = out.length.toLong * 2
-        while (t < outLen + n) t *= 2
-        out = java.util.Arrays.copyOf(out,
-          math.min(t, Int.MaxValue.toLong).toInt)
-      }
-    val st = new LzmaState
-    var havePropsEver = false
-    var dictStart = 0
-    var p = start
-    var done = false
-    while (!done) {
-      if (p >= endExcl) fail("lzma2 missing end marker")
-      val ctrl = u8(b, p)
-      p += 1
-      if (ctrl == 0) done = true
-      else if (ctrl <= 2) {
-        // uncompressed chunk; 1 = dict reset first
-        if (p + 2 > endExcl) fail("lzma2 chunk size truncated")
-        val size = ((u8(b, p) << 8) | u8(b, p + 1)) + 1
-        p += 2
-        if (p + size > endExcl) fail("uncompressed chunk truncated")
-        if (ctrl == 1) dictStart = outLen
-        if (outLen.toLong + size > cap) fail("decompression bomb")
-        ensure(size)
-        System.arraycopy(b, p, out, outLen, size)
-        p += size
-        outLen += size
-        // an uncompressed chunk resets the LZMA state machine per spec
-        if (havePropsEver) st.resetState()
-      } else if (ctrl >= 0x80) {
-        val unpack = (((ctrl & 0x1F) << 16) | (u8(b, p) << 8) |
-          u8(b, p + 1)) + 1
-        val packed = ((u8(b, p + 2) << 8) | u8(b, p + 3)) + 1
-        p += 4
-        val resetMode = (ctrl >> 5) & 3
-        if (resetMode >= 2) {
-          if (p >= endExcl) fail("lzma2 props truncated")
-          st.setProps(u8(b, p))
-          p += 1
-          havePropsEver = true
-        }
-        if (!havePropsEver) fail("lzma chunk before any props")
-        if (resetMode >= 1) st.resetState()
-        else if (st.isMatch == null) fail("lzma chunk before any state reset")
-        if (resetMode == 3) dictStart = outLen
-        if (p + packed > endExcl) fail("lzma chunk truncated")
-        if (outLen.toLong + unpack > cap) fail("decompression bomb")
-        ensure(unpack)
-        val rc = new RangeDec(b, p, p + packed)
-        outLen = lzmaChunk(rc, st, out, outLen, unpack, dictStart)
-        // conformant chunks consume EXACTLY their bytes and leave the
-        // range coder at code==0 (xz-java/liblzma reject otherwise)
-        if (!rc.finishedExactly) fail("lzma chunk not cleanly terminated")
-        p += packed
-      } else fail("reserved lzma2 control byte")
-    }
-    (java.util.Arrays.copyOf(out, outLen), p)
-  }
-
-  // ---- xz container --------------------------------------------------------
-
-  /** Decode a raw LZMA2 chunk sequence (no xz container) — the member
-    * codec 7z folders use. Null on damage or cap breach.
+  /** Decode a raw LZMA2 chunk sequence (no xz container, ending in its
+    * end marker) — the member codec 7z folders use. `cap` is the
+    * folder's declared output size, which also sizes the dictionary.
+    * Null on damage or cap breach.
     */
   private[graft] def decodeLzma2Raw(b: Array[Byte], start: Int, endExcl: Int,
       cap: Long): Array[Byte] =
-    try lzma2(b, start, endExcl, cap)._1
-    catch {
-      case _: Err => null
-      case _: ArrayIndexOutOfBoundsException => null
-      case _: NegativeArraySizeException => null
-    }
+    try {
+      val dictSize = math.max(math.min(cap, LZMA2InputStream.DICT_SIZE_MAX.toLong),
+        LZMA2InputStream.DICT_SIZE_MIN.toLong).toInt
+      Capped.readAll(new LZMA2InputStream(
+        new ByteArrayInputStream(b, start, endExcl - start), dictSize),
+        cap, (endExcl - start) * 4L)
+    } catch { case _: IOException | _: RuntimeException => null }
 
-  /** Decode a complete `.xz` file (concatenated streams and stream
-    * padding included). Null on damage — bad magics, header/footer
-    * CRCs, unsupported filters, block check mismatches (CRC32, CRC64,
-    * SHA-256), index inconsistencies, or output past `cap`.
-    */
   /** Decode a RAW LZMA1 stream — ZIP method 14's payload after its
     * `[version u16][propsSize u16][props]` member header. `propsByte`
     * is the classic `(pb*5 + lp)*9 + lc` byte; the output size is
-    * KNOWN from the container, so decoding stops at `outSize` bytes
-    * and never needs (or consumes) an end-of-stream marker — streams
-    * written WITH one decode too, the marker simply going unread.
-    * LZMA1 is the same range-coder/state machine as LZMA2's chunks
-    * with no reset layer: one fresh state, one window from zero.
-    * Null on damage.
+    * KNOWN from the container, so decoding stops at `outSize` bytes,
+    * with or without an end-of-stream marker after them, and the
+    * dictionary never needs to be larger than `outSize`. Null on
+    * damage.
     */
   def decodeLzma1(b: Array[Byte], start: Int, endExcl: Int,
       propsByte: Int, outSize: Int): Array[Byte] =
     try {
-      if (outSize < 0) fail("negative size")
-      val st = new LzmaState
-      st.setProps(propsByte, maxLcLp = 12) // LZMA1: lc<=8, lp<=4 legal
-      st.resetState()
-      val out = new Array[Byte](outSize)
-      if (outSize > 0) {
-        val rc = new RangeDec(b, start, endExcl)
-        lzmaChunk(rc, st, out, 0, outSize, 0)
-      }
-      out
-    } catch {
-      case _: Err => null
-      case _: ArrayIndexOutOfBoundsException => null
-      case _: NegativeArraySizeException => null
-    }
-
-  def decode(b: Array[Byte], cap: Long = 1L << 30): Array[Byte] =
-    try decodeAll(b, cap)
-    catch {
-      case _: Err => null
-      case _: ArrayIndexOutOfBoundsException => null
-      case _: NegativeArraySizeException => null
-    }
-
-  private def decodeAll(b: Array[Byte], cap: Long): Array[Byte] = {
-    if (!isXz(b)) fail("bad magic")
-    val out = new java.io.ByteArrayOutputStream(64 << 10)
-    var off = 0
-    var any = false
-    while (off < b.length) {
-      if (b.length - off >= 4 && leU32(b, off) == 0 && any) {
-        // stream padding: 4-byte-aligned zero words
-        off += 4
-      } else {
-        off = decodeStream(b, off, out, cap)
-        any = true
-      }
-    }
-    if (!any) fail("no stream")
-    out.toByteArray
-  }
-
-  /** One xz stream starting at `off`; returns the offset past it. */
-  private def decodeStream(b: Array[Byte], off: Int,
-      out: java.io.ByteArrayOutputStream, cap: Long): Int = {
-    if (off + 12 > b.length) fail("truncated stream header")
-    if (!(0 until 6).forall(i => b(off + i) == Magic(i))) fail("bad magic")
-    if (b(off + 6) != 0) fail("reserved stream flag")
-    val check = u8(b, off + 7)
-    if (crc32(b, off + 6, 2) != leU32(b, off + 8)) fail("header crc mismatch")
-    val checkLen = check match {
-      case 0 => 0
-      case 1 => 4 // CRC32
-      case 4 => 8 // CRC64
-      case 10 => 32 // SHA-256
-      case _ => fail("unsupported check type")
-    }
-    var p = off + 12
-    // blocks until the index indicator (0x00)
-    val records = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    var blocksDone = false
-    while (!blocksDone) {
-      if (p >= b.length) fail("missing index")
-      val hdrSizeByte = u8(b, p)
-      if (hdrSizeByte == 0) blocksDone = true
-      else {
-        val blockStart = p
-        val hdrSize = (hdrSizeByte + 1) * 4
-        if (p + hdrSize > b.length) fail("block header truncated")
-        if (crc32(b, p, hdrSize - 4) != leU32(b, p + hdrSize - 4))
-          fail("block header crc mismatch")
-        val flags = u8(b, p + 1)
-        val nFilters = (flags & 3) + 1
-        if ((flags & 0x3C) != 0) fail("reserved block flags")
-        val hasCompSize = (flags & 0x40) != 0
-        val hasUncompSize = (flags & 0x80) != 0
-        val pos = Array(p + 2)
-        val compSizeDecl = if (hasCompSize) varint(b, pos) else -1L
-        val uncompSizeDecl = if (hasUncompSize) varint(b, pos) else -1L
-        if (nFilters != 1) fail("unsupported filter chain")
-        val filterId = varint(b, pos)
-        if (filterId != 0x21) fail("unsupported filter (not LZMA2)")
-        val propsSize = varint(b, pos)
-        if (propsSize != 1) fail("bad lzma2 props size")
-        val dictProp = u8(b, pos(0))
-        if (dictProp > 40) fail("bad lzma2 dict size")
-        pos(0) += 1
-        // every field must fit inside the DECLARED header size —
-        // fields spilling into the padding/CRC region are damage
-        if (pos(0) > p + hdrSize - 4) fail("block header fields overrun")
-        // padding to the declared header size must be zeros
-        while (pos(0) < p + hdrSize - 4) {
-          if (b(pos(0)) != 0) fail("nonzero block header padding")
-          pos(0) += 1
-        }
-        p += hdrSize
-        // compressed data: bounded by the declared size or found by
-        // the LZMA2 end marker — decode with the declared bound when
-        // present, else to the end (lzma2 stops at its end marker)
-        val dataEnd =
-          if (compSizeDecl >= 0) {
-            if (p + compSizeDecl > b.length) fail("block data truncated")
-            p + compSizeDecl.toInt
-          } else b.length
-        val plain = lzma2(b, p, dataEnd, cap - out.size())
-        out.write(plain._1, 0, plain._1.length)
-        val compUsed = plain._2 - p
-        if (compSizeDecl >= 0 && compUsed != compSizeDecl)
-          fail("compressed size mismatch")
-        if (uncompSizeDecl >= 0 && plain._1.length != uncompSizeDecl)
-          fail("uncompressed size mismatch")
-        p = plain._2
-        // block padding to 4 bytes, then the check
-        while (((p - off) & 3) != 0) {
-          if (p >= b.length || b(p) != 0) fail("bad block padding")
-          p += 1
-        }
-        if (p + checkLen > b.length) fail("truncated block check")
-        check match {
-          case 0 => ()
-          case 1 =>
-            if (crc32(plain._1, 0, plain._1.length) != leU32(b, p))
-              fail("crc32 check mismatch")
-          case 4 =>
-            var want = 0L
-            var i = 0
-            while (i < 8) { want |= (b(p + i) & 0xFFL) << (8 * i); i += 1 }
-            if (crc64(plain._1, 0, plain._1.length) != want)
-              fail("crc64 check mismatch")
-          case _ =>
-            val md = java.security.MessageDigest.getInstance("SHA-256")
-            val got = md.digest(plain._1)
-            var i = 0
-            while (i < 32) {
-              if (got(i) != b(p + i)) fail("sha-256 check mismatch")
-              i += 1
-            }
-        }
-        p += checkLen
-        // Unpadded Size per spec: header + compressed data + check,
-        // EXCLUDING the block padding
-        records += (((plain._2 - blockStart + checkLen).toLong,
-          plain._1.length.toLong))
-      }
-    }
-    // index: indicator already consumed (hdrSizeByte == 0)
-    val idxStart = p
-    p += 1
-    val pos = Array(p)
-    val count = varint(b, pos)
-    if (count != records.length) fail("index record count mismatch")
-    var i = 0
-    while (i < records.length) {
-      val unpadded = varint(b, pos)
-      val uncomp = varint(b, pos)
-      if (uncomp != records(i)._2) fail("index uncompressed size mismatch")
-      if (unpadded != records(i)._1) fail("index unpadded size mismatch")
-      i += 1
-    }
-    p = pos(0)
-    while (((p - off) & 3) != 0) {
-      if (p >= b.length || b(p) != 0) fail("bad index padding")
-      p += 1
-    }
-    if (p + 4 > b.length) fail("truncated index crc")
-    if (crc32(b, idxStart, p - idxStart) != leU32(b, p))
-      fail("index crc mismatch")
-    p += 4
-    // footer: crc32(backward size + flags), backward size, flags, "YZ"
-    if (p + 12 > b.length) fail("truncated stream footer")
-    if (crc32(b, p + 4, 6) != leU32(b, p)) fail("footer crc mismatch")
-    val backward = (leU32(b, p + 4) + 1) * 4
-    // backward size = the whole index field: indicator, records,
-    // padding, and its CRC32 (p already sits past that CRC)
-    if (backward != p - idxStart) fail("backward size mismatch")
-    if (b(p + 8) != 0 || u8(b, p + 9) != check) fail("footer flags mismatch")
-    if (b(p + 10) != 'Y' || b(p + 11) != 'Z') fail("bad footer magic")
-    p + 12
-  }
-
+      val in = new LZMAInputStream(
+        new ByteArrayInputStream(b, start, endExcl - start),
+        outSize.toLong, propsByte.toByte, outSize)
+      try {
+        in.enableRelaxedEndCondition()
+        val out = in.readNBytes(outSize)
+        if (out.length == outSize) out else null
+      } finally in.close()
+    } catch { case _: IOException | _: RuntimeException => null }
 }

@@ -11,8 +11,8 @@ package graft.operators
   * central-directory entry walk, per-member LOCAL header re-read for
   * the true data offset (local and central extra fields legitimately
   * differ), the STORED, DEFLATE, BZIP2 (12), Zstandard (93), and XZ
-  * (95) methods — the latter three through this engine's own
-  * from-scratch [[Bzip2]]/[[Zstd]]/[[Xz]] decoders — CRC-32 + size
+  * (95) methods — the latter three through the [[Bzip2]]/[[Zstd]]/
+  * [[Xz]] library adapters — CRC-32 + size
   * verification per member, and ZIP64 (the >4 GiB format shape):
   * 0xFFFF/0xFFFFFFFF sentinels resolve through the ZIP64 EOCD
   * locator/record and each entry's 0x0001 extended-information
@@ -585,8 +585,8 @@ object Zip {
 
   /** Does any member lie outside the decodable profile — a method
     * beyond STORED 0, SHRINK 1, REDUCE 2-5, IMPLODE 6, DEFLATE 8,
-    * DEFLATE64 9, DCL-IMPLODE 10, and (through this engine's
-    * from-scratch codec matrix) BZIP2 12, LZMA 14, Zstandard 93,
+    * DEFLATE64 9, DCL-IMPLODE 10, and (through the library-adapter
+    * codec matrix) BZIP2 12, LZMA 14, Zstandard 93,
     * XZ 95 — or traditional ENCRYPTION without a key (general-
     * purpose bit 0)? PPMd 98 and keyless encrypted members are the
     * "ship a profile" answer, distinct from damage.

@@ -1,51 +1,34 @@
 package graft.operators
 
+import java.io.{ByteArrayInputStream, IOException}
 import scala.collection.mutable.ArrayBuffer
+import com.github.luben.zstd.{ZstdDecompressCtx, ZstdDictDecompress,
+  ZstdInputStreamNoFinalizer, Zstd => ZstdLib}
 
-/** From-scratch RFC 8878 (Zstandard) frame decoder + synthesizer.
+/** Zstandard (RFC 8878) decode through zstd-jni, plus the fixture
+  * synthesizers the specs and demo corpora use.
   *
   * Common Crawl's current distribution format is `.warc.zst` — WARC
-  * records in concatenated zstd frames (often with skippable frames
-  * carrying a shared dictionary the spec calls optional). Until this
-  * file, that was the one ingest codec `decode_err_rates` could name
-  * but not read (reference scope: the ETL core at `etl.go:12-68`
-  * moves rows, never crawl archives — this whole layer is extension
-  * surface). Like the PNG inflate, GIF LZW, and ADPCM paths, the
-  * codec is pure algorithm, so it is implemented here directly from
-  * the RFC: frame headers, raw/RLE/compressed blocks, FSE
-  * (normalized-count parsing, table build, the three predefined
-  * distributions), Huffman literals (direct AND FSE-compressed
-  * weights, 1- and 4-stream), sequence execution with the three
-  * repeat-offset slots, skippable frames, xxhash64 content
-  * checksums, and §5 dictionaries — structured (entropy tables +
-  * rep-offset seeds + content history) and raw-content, captured
-  * from the leading skippable frame Common Crawl ships them in
-  * (magic `0x184D2A5D`, possibly itself zstd-compressed) or supplied
-  * externally via [[decodeResultWithDict]].
-  *
-  * Posture matches every decoder in [[Containers]]: degrade, don't
-  * throw — corrupt or truncated input returns null; decompression is
-  * bomb-capped (default 2³⁰ bytes like `warcInflate`); frames that
-  * REQUIRE an external dictionary are reported as a nameable profile
-  * gap via [[unsupportedProfile]] rather than a wrong answer.
-  *
-  * Scale: decode is a per-blob scalar routine invoked from
-  * `mapPartitions` ingest passes — no driver state, no allocation
-  * proportional to anything but one blob's regenerated size.
+  * records in concatenated zstd frames, sometimes led by a skippable
+  * frame carrying a shared dictionary. zstd-jni decodes the frames;
+  * this adapter walks them itself to add what the library does not:
+  *   - the bomb cap, counted across all frames while decoding (a
+  *     frame's declared content size is checked before its output is
+  *     allocated);
+  *   - never-throw: damage, truncation, checksum mismatch and output
+  *     past `cap` come back as [[Corrupt]] / null;
+  *   - the dictionary split: a dictionary is captured from a leading
+  *     nibble-D skippable frame (magic `0x184D2A5D`, possibly itself
+  *     zstd-compressed) or supplied externally via
+  *     [[decodeResultWithDict]], and loaded into the context with
+  *     `ZstdDecompressCtx.loadDict`. A frame whose header names a
+  *     dictionary ID (`Zstd.getDictIdFromFrame`) that is absent or
+  *     different is the nameable profile gap [[NeedsDictionary]], not
+  *     corruption.
+  * (Reference scope: the ETL core at `etl.go:12-68` moves rows, never
+  * crawl archives — this layer is extension surface.)
   */
 object Zstd {
-
-  /** Parse/corruption signal — flow control only, never escapes. */
-  private final class Err(msg: String)
-    extends RuntimeException(msg, null, false, false)
-  private def fail(msg: String): Nothing = throw new Err(msg)
-
-  /** Well-formed frame that needs a dictionary not in hand (none
-    * embedded in a leading skippable frame, none supplied externally,
-    * or an id mismatch) — a profile gap, distinct from corruption.
-    */
-  private final class NeedsDict
-    extends RuntimeException("dictionary frame", null, false, false)
 
   private val FrameMagic = 0xFD2FB528
   private val SkippableMin = 0x184D2A50
@@ -55,11 +38,22 @@ object Zstd {
     */
   private val DictSkippableMagic = 0x184D2A5D
   private val BlockMaxAbs = 128 << 10
+  /** Largest declared expansion decoded in one shot into an output
+    * allocated up front; bigger claims stream instead.
+    */
+  private val MaxOneShotRatio = 128L
+
+  private def leU32(b: Array[Byte], i: Int): Int =
+    (b(i) & 0xFF) | ((b(i + 1) & 0xFF) << 8) | ((b(i + 2) & 0xFF) << 16) |
+      ((b(i + 3) & 0xFF) << 24)
+
+  private def isSkippable(magic: Int): Boolean =
+    magic >= SkippableMin && magic <= SkippableMin + 15
 
   def isZstd(b: Array[Byte]): Boolean =
     b != null && b.length >= 4 && {
       val m = leU32(b, 0)
-      m == FrameMagic || (m >= SkippableMin && m <= SkippableMin + 15)
+      m == FrameMagic || isSkippable(m)
     }
 
   /** One-pass classify-and-decode outcome: decoded bytes, a named
@@ -72,10 +66,10 @@ object Zstd {
 
   /** Decode a complete zstd stream (one or more concatenated frames;
     * skippable frames skipped), classifying the failure mode —
-    * [[NeedsDictionary]] for well-formed frames naming a nonzero
-    * dictionary ID (readable only with a dictionary this engine
-    * doesn't ship), [[Corrupt]] for truncation, malformed entropy
-    * tables, checksum mismatch, or output past `cap`.
+    * [[NeedsDictionary]] for a frame naming a dictionary ID that no
+    * dictionary in hand carries, [[Corrupt]] for everything else that
+    * fails: truncation, malformed blocks, checksum mismatch, output
+    * past `cap`.
     */
   def decodeResult(b: Array[Byte], cap: Long = 1L << 30): Result =
     decodeResultWithDict(b, null, cap)
@@ -87,16 +81,71 @@ object Zstd {
     * dictionary still takes precedence for frames after it.
     */
   def decodeResultWithDict(b: Array[Byte], dictBytes: Array[Byte],
-      cap: Long = 1L << 30): Result =
+      cap: Long = 1L << 30): Result = {
+    if (b == null || b.length < 4) return Corrupt
+    val opened = ArrayBuffer.empty[ZstdDictDecompress]
+    val ctx = new ZstdDecompressCtx
     try {
-      val d = if (dictBytes == null) null else parseDict(dictBytes)
-      Ok(decodeAll(b, cap, d))
+      var dict: Dict = null
+      if (dictBytes != null) {
+        dict = openDict(dictBytes, opened)
+        if (dict == null) return Corrupt
+      }
+      var loaded: Dict = null
+      val out = new Capped.Sink(cap, b.length * 4L)
+      var p = 0
+      var sawFrame = false
+      while (p < b.length) {
+        if (p + 4 > b.length) return Corrupt
+        val magic = leU32(b, p)
+        if (isSkippable(magic)) {
+          if (p + 8 > b.length) return Corrupt
+          val end = p + 8 + (leU32(b, p + 4) & 0xFFFFFFFFL)
+          if (end > b.length) return Corrupt
+          // Common Crawl ships the shared dictionary in a leading
+          // skippable frame; any other skippable payload stays inert
+          if (magic == DictSkippableMagic && end > p + 8) {
+            val d = dictFromSkippable(
+              java.util.Arrays.copyOfRange(b, p + 8, end.toInt), cap, opened)
+            if (d != null) dict = d
+          }
+          p = end.toInt
+        } else if (magic == FrameMagic) {
+          val id = ZstdLib.getDictIdFromFrame(
+            java.util.Arrays.copyOfRange(b, p, math.min(p + 18, b.length)))
+          if (id != 0 && (dict == null || dict.id != id)) return NeedsDictionary
+          val len = ZstdLib.findFrameCompressedSize(b, p, b.length - p).toInt
+          if (dict ne loaded) { ctx.loadDict(dict.native); loaded = dict }
+          val size = ZstdLib.getFrameContentSize(b, p, len)
+          if (size >= 0 && size <= len * MaxOneShotRatio) {
+            // a plausible declared size: checked against the cap, then
+            // decoded in one shot straight into the output
+            out.reserve(size)
+            if (ctx.decompressByteArray(out.buf, out.len, size.toInt,
+                b, p, len) != size) return Corrupt
+            out.len += size.toInt
+          } else {
+            // unknown or outsized claim: stream, so memory follows the
+            // real output (a forged header cannot make us allocate)
+            val in = new ZstdInputStreamNoFinalizer(
+              new ByteArrayInputStream(b, p, len))
+            try {
+              if (dict != null) in.setDict(dict.native)
+              out.readAll(in)
+            } finally in.close()
+          }
+          p += len
+          sawFrame = true
+        } else return Corrupt
+      }
+      if (sawFrame) Ok(out.result) else Corrupt
     } catch {
-      case _: NeedsDict => NeedsDictionary
-      case _: Err => Corrupt
-      case _: ArrayIndexOutOfBoundsException => Corrupt
-      case _: NegativeArraySizeException => Corrupt
+      case _: IOException | _: RuntimeException => Corrupt
+    } finally {
+      ctx.close()
+      opened.foreach(_.close())
     }
+  }
 
   /** [[decodeResult]] collapsed to the degrade-don't-throw contract
     * every decoder here shares: bytes or null.
@@ -108,922 +157,45 @@ object Zstd {
     }
 
   /** True iff the stream is well-formed up to a frame header that
-    * names a nonzero dictionary ID — the profile-gap shape, distinct
-    * from corruption.
+    * names a dictionary ID no dictionary in hand carries — the
+    * profile-gap shape, distinct from corruption.
     */
   def unsupportedProfile(b: Array[Byte], cap: Long = 1L << 30): Boolean =
     decodeResult(b, cap) == NeedsDictionary
 
-  // ---- byte helpers --------------------------------------------------
-
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xFF
-  private def leU16(b: Array[Byte], i: Int): Int = u8(b, i) | (u8(b, i + 1) << 8)
-  private def leU32(b: Array[Byte], i: Int): Int =
-    u8(b, i) | (u8(b, i + 1) << 8) | (u8(b, i + 2) << 16) | (u8(b, i + 3) << 24)
-  private def leU64(b: Array[Byte], i: Int): Long =
-    (leU32(b, i) & 0xFFFFFFFFL) | ((leU32(b, i + 4) & 0xFFFFFFFFL) << 32)
-
-  // ---- backward bitstream (FSE states / Huffman codes) ---------------
-
-  /** The zstd entropy bitstream: fields are written LSB-first in
-    * forward order and READ in reverse, from a sentinel 1-bit at the
-    * top of the last byte. `read(n)` returns the n bits just below
-    * the cursor with the stream's bit `pos-n` as result bit 0 — the
-    * exact integer the writer packed. Reads may run past the start
-    * (zero-filled) so Huffman peeks work near exhaustion; `pos`
-    * going negative is the overflow signal callers check.
+  /** A digested dictionary and the ID frames must name to use it (0
+    * for raw content, which carries none).
     */
-  private final class BackBits(b: Array[Byte], start: Int, endExcl: Int) {
-    var pos: Long = {
-      if (endExcl <= start) fail("empty bitstream")
-      val last = b(endExcl - 1) & 0xFF
-      if (last == 0) fail("no sentinel bit")
-      (endExcl - start - 1).toLong * 8 + (31 - Integer.numberOfLeadingZeros(last))
-    }
+  private final class Dict(val id: Long, val native: ZstdDictDecompress)
 
-    private def bitsAt(p: Long, n: Int): Long = {
-      var r = 0L
-      var i = 0
-      while (i < n) {
-        val bi = p + i
-        if (bi >= 0) {
-          val by = b(start + (bi >> 3).toInt) & 0xFF
-          r |= ((by >> (bi & 7).toInt).toLong & 1L) << i
-        }
-        i += 1
-      }
-      r
-    }
-
-    def read(n: Int): Long = { pos -= n; bitsAt(pos, n) }
-    def readChecked(n: Int): Long = {
-      if (pos < n) fail("bitstream underrun")
-      read(n)
-    }
-    def peek(n: Int): Long = bitsAt(pos - n, n)
-    def consume(n: Int): Unit = pos -= n
-    def overflowed: Boolean = pos < 0
-    def finished: Boolean = pos == 0
-  }
-
-  // ---- forward bitstream (FSE normalized-count headers) --------------
-
-  private final class FwdBits(b: Array[Byte], start: Int, endExcl: Int) {
-    var bitPos: Long = 0
-    def peek(n: Int): Int = {
-      var r = 0
-      var i = 0
-      while (i < n) {
-        val bi = bitPos + i
-        val idx = start + (bi >> 3).toInt
-        if (idx < endExcl) r |= ((b(idx) >> (bi & 7).toInt) & 1) << i
-        i += 1
-      }
-      r
-    }
-    def consume(n: Int): Unit = bitPos += n
-    def read(n: Int): Int = { val v = peek(n); consume(n); v }
-    def bytesConsumed: Int = ((bitPos + 7) >> 3).toInt
-  }
-
-  // ---- FSE -----------------------------------------------------------
-
-  /** A decode table: `state ∈ [0, 1<<log)`; emit `symbol(state)`, then
-    * `state = newStateBase(state) + read(nbBits(state))`.
+  /** Digest dictionary bytes (structured when the magic leads, raw
+    * content otherwise); null when empty or damaged.
     */
-  private final class FseTable(val log: Int, val symbol: Array[Int],
-      val nbBits: Array[Int], val newStateBase: Array[Int])
+  private def openDict(bytes: Array[Byte],
+      opened: ArrayBuffer[ZstdDictDecompress]): Dict =
+    if (bytes.isEmpty) null
+    else try {
+      val native = new ZstdDictDecompress(bytes)
+      opened += native
+      new Dict(ZstdLib.getDictIdFromDict(bytes), native)
+    } catch { case _: RuntimeException => null }
 
-  /** One-symbol RLE "table": log 0, zero update bits. */
-  private def fseRle(sym: Int): FseTable =
-    new FseTable(0, Array(sym), Array(0), Array(0))
-
-  /** RFC 8878 §4.1.1 normalized-count parse. Returns the counts
-    * (−1 = less-than-one probability) and the accuracy log; the
-    * header is byte-aligned after the last count.
+  /** The dictionary a nibble-D skippable payload carries — structured
+    * bytes, a zstd frame wrapping them, or raw content. An undecodable
+    * payload is just a skippable frame (null), not stream corruption.
     */
-  private def fseReadNCount(b: Array[Byte], off: Int, endExcl: Int,
-      maxSymbol: Int, maxLog: Int): (Array[Short], Int, Int) = {
-    val bits = new FwdBits(b, off, endExcl)
-    val log = bits.read(4) + 5
-    if (log > maxLog) fail(s"accuracy $log > $maxLog")
-    var remaining = (1 << log) + 1
-    var threshold = 1 << log
-    var nbBits = log + 1
-    val counts = new Array[Short](maxSymbol + 1)
-    var charnum = 0
-    var previous0 = false
-    while (remaining > 1 && charnum <= maxSymbol) {
-      if (previous0) {
-        var rep = bits.read(2)
-        while (rep == 3) {
-          charnum += 3
-          if (charnum > maxSymbol) fail("zero-run past alphabet")
-          rep = bits.read(2)
-        }
-        charnum += rep
-        if (charnum > maxSymbol) fail("zero-run past alphabet")
-        previous0 = false
-      }
-      if (remaining > 1 && charnum <= maxSymbol) {
-        val max = (2 * threshold - 1) - remaining
-        val peeked = bits.peek(nbBits)
-        var count =
-          if ((peeked & (threshold - 1)) < max) {
-            bits.consume(nbBits - 1)
-            peeked & (threshold - 1)
-          } else {
-            bits.consume(nbBits)
-            val v = peeked & (2 * threshold - 1)
-            if (v >= threshold) v - max else v
-          }
-        count -= 1
-        remaining -= math.abs(count)
-        counts(charnum) = count.toShort
-        charnum += 1
-        previous0 = count == 0
-        while (remaining < threshold && remaining > 1) {
-          nbBits -= 1
-          threshold >>= 1
-        }
-      }
-    }
-    if (remaining != 1) fail("FSE counts do not sum to table size")
-    val consumed = bits.bytesConsumed
-    if (off + consumed > endExcl) fail("FSE header past input")
-    (counts, log, consumed)
+  private def dictFromSkippable(payload: Array[Byte], cap: Long,
+      opened: ArrayBuffer[ZstdDictDecompress]): Dict = {
+    val plain =
+      if (payload.length >= 4 && leU32(payload, 0) == FrameMagic)
+        decode(payload, cap)
+      else payload
+    if (plain == null) null else openDict(plain, opened)
   }
 
-  /** RFC 8878 table construction: −1-probability symbols take one
-    * cell each from the table's top; the rest spread with the
-    * (5/8·size + 3) step.
-    */
-  private def fseBuildDecode(norm: Array[Short], log: Int): FseTable = {
-    val size = 1 << log
-    val sym = new Array[Int](size)
-    var highThreshold = size - 1
-    var s = 0
-    while (s < norm.length) {
-      if (norm(s) == -1) {
-        if (highThreshold < 0) fail("too many low-prob symbols")
-        sym(highThreshold) = s
-        highThreshold -= 1
-      }
-      s += 1
-    }
-    val step = (size >> 1) + (size >> 3) + 3
-    val mask = size - 1
-    var pos = 0
-    s = 0
-    while (s < norm.length) {
-      var i = 0
-      while (i < norm(s)) {
-        sym(pos) = s
-        pos = (pos + step) & mask
-        while (pos > highThreshold) pos = (pos + step) & mask
-        i += 1
-      }
-      s += 1
-    }
-    if (pos != 0) fail("FSE spread did not close")
-    val nbBits = new Array[Int](size)
-    val base = new Array[Int](size)
-    val nextState = new Array[Int](norm.length)
-    s = 0
-    while (s < norm.length) {
-      nextState(s) = if (norm(s) == -1) 1 else norm(s)
-      s += 1
-    }
-    var u = 0
-    while (u < size) {
-      val sy = sym(u)
-      val x = nextState(sy)
-      nextState(sy) += 1
-      val nb = log - (31 - Integer.numberOfLeadingZeros(x))
-      nbBits(u) = nb
-      base(u) = (x << nb) - size
-      u += 1
-    }
-    new FseTable(log, sym, nbBits, base)
-  }
-
-  // Predefined distributions (RFC 8878 §3.1.1.3.2.2)
-  private val LlDefault: FseTable = fseBuildDecode(Array[Short](
-    4, 3, 2, 2, 2, 2, 2, 2, 2, 2, 2, 2, 2, 1, 1, 1,
-    2, 2, 2, 2, 2, 2, 2, 2, 2, 3, 2, 1, 1, 1, 1, 1,
-    -1, -1, -1, -1), 6)
-  private val MlDefault: FseTable = fseBuildDecode(Array[Short](
-    1, 4, 3, 2, 2, 2, 2, 2, 2, 1, 1, 1, 1, 1, 1, 1,
-    1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1,
-    1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, 1, -1, -1,
-    -1, -1, -1, -1, -1), 6)
-  private val OfDefault: FseTable = fseBuildDecode(Array[Short](
-    1, 1, 1, 1, 1, 1, 2, 2, 2, 1, 1, 1, 1, 1, 1, 1,
-    1, 1, 1, 1, 1, 1, 1, 1, -1, -1, -1, -1, -1), 5)
-
-  // Code → (baseline, extra bits) for literal lengths and match lengths
-  private val LlBase = Array(
-    0, 1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15,
-    16, 18, 20, 22, 24, 28, 32, 40, 48, 64, 128, 256, 512, 1024, 2048,
-    4096, 8192, 16384, 32768, 65536)
-  private val LlExtra = Array(
-    0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0,
-    1, 1, 1, 1, 2, 2, 3, 3, 4, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16)
-  private val MlBase = Array(
-    3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16, 17, 18,
-    19, 20, 21, 22, 23, 24, 25, 26, 27, 28, 29, 30, 31, 32, 33, 34,
-    35, 37, 39, 41, 43, 47, 51, 59, 67, 83, 99, 131, 259, 515, 1027,
-    2051, 4099, 8195, 16387, 32771, 65539)
-  private val MlExtra = Array(
-    0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0,
-    0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0,
-    1, 1, 1, 1, 2, 2, 3, 3, 4, 4, 5, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16)
-
-  // ---- Huffman -------------------------------------------------------
-
-  /** Single-level decode table over `1 << tableLog` entries. */
-  private final class HufTable(val tableLog: Int, val symbol: Array[Int],
-      val nbBits: Array[Int])
-
-  /** RFC 8878 §4.2.1: weights for symbols `0..n-1` (direct 4-bit or
-    * FSE-compressed with two alternating states), last weight implied
-    * so the kraft sum completes a power of two. Returns the table and
-    * the description's byte length.
-    */
-  private def hufReadTable(b: Array[Byte], off: Int, endExcl: Int): (HufTable, Int) = {
-    if (off >= endExcl) fail("missing huffman header")
-    val hb = u8(b, off)
-    val weights = new Array[Int](256)
-    var nWeights = 0
-    var descLen = 0
-    if (hb >= 128) {
-      nWeights = hb - 127
-      val packed = (nWeights + 1) / 2
-      if (off + 1 + packed > endExcl) fail("truncated huffman weights")
-      var i = 0
-      while (i < nWeights) {
-        val by = u8(b, off + 1 + i / 2)
-        weights(i) = if (i % 2 == 0) by >> 4 else by & 0xF
-        i += 1
-      }
-      descLen = 1 + packed
-    } else {
-      val csize = hb
-      if (off + 1 + csize > endExcl) fail("truncated huffman fse")
-      val (norm, log, hdrLen) =
-        fseReadNCount(b, off + 1, off + 1 + csize, 255, 6)
-      val table = fseBuildDecode(norm, log)
-      val bits = new BackBits(b, off + 1 + hdrLen, off + 1 + csize)
-      var s1 = bits.readChecked(log).toInt
-      var s2 = bits.readChecked(log).toInt
-      var done = false
-      while (!done) {
-        if (nWeights >= 255) fail("too many huffman weights")
-        weights(nWeights) = table.symbol(s1)
-        nWeights += 1
-        s1 = table.newStateBase(s1) + bits.read(table.nbBits(s1)).toInt
-        if (bits.overflowed) {
-          if (nWeights >= 255) fail("too many huffman weights")
-          weights(nWeights) = table.symbol(s2)
-          nWeights += 1
-          done = true
-        } else {
-          if (nWeights >= 255) fail("too many huffman weights")
-          weights(nWeights) = table.symbol(s2)
-          nWeights += 1
-          s2 = table.newStateBase(s2) + bits.read(table.nbBits(s2)).toInt
-          if (bits.overflowed) {
-            if (nWeights >= 255) fail("too many huffman weights")
-            weights(nWeights) = table.symbol(s1)
-            nWeights += 1
-            done = true
-          }
-        }
-      }
-      descLen = 1 + csize
-    }
-    // implied last weight: total must complete a power of two
-    var total = 0L
-    var i = 0
-    while (i < nWeights) {
-      if (weights(i) > 11) fail("huffman weight > 11")
-      if (weights(i) > 0) total += 1L << (weights(i) - 1)
-      i += 1
-    }
-    if (total == 0) fail("huffman: no weighted symbols")
-    val tableLog = 64 - java.lang.Long.numberOfLeadingZeros(total)
-    if (tableLog > 11) fail("huffman table log > 11")
-    val rest = (1L << tableLog) - total
-    if (rest <= 0 || (rest & (rest - 1)) != 0) fail("huffman kraft sum broken")
-    val lastWeight = java.lang.Long.numberOfTrailingZeros(rest).toInt + 1
-    weights(nWeights) = lastWeight
-    nWeights += 1
-    if (nWeights > 256) fail("huffman alphabet > 256")
-    // canonical fill: ascending weight (descending code length), then
-    // natural symbol order; weight w occupies 2^(w-1) adjacent cells
-    val size = 1 << tableLog.toInt
-    val sym = new Array[Int](size)
-    val nb = new Array[Int](size)
-    var posFill = 0
-    var w = 1
-    while (w <= tableLog) {
-      var sIdx = 0
-      while (sIdx < nWeights) {
-        if (weights(sIdx) == w) {
-          val len = 1 << (w - 1)
-          val bitsFor = tableLog.toInt + 1 - w
-          var k = 0
-          while (k < len) {
-            sym(posFill) = sIdx
-            nb(posFill) = bitsFor
-            posFill += 1
-            k += 1
-          }
-        }
-        sIdx += 1
-      }
-      w += 1
-    }
-    if (posFill != size) fail("huffman fill incomplete")
-    (new HufTable(tableLog.toInt, sym, nb), descLen)
-  }
-
-  /** Decode exactly `n` literals from one backward Huffman stream. */
-  private def hufDecodeStream(b: Array[Byte], start: Int, endExcl: Int,
-      table: HufTable, out: Array[Byte], outOff: Int, n: Int): Unit = {
-    val bits = new BackBits(b, start, endExcl)
-    var i = 0
-    while (i < n) {
-      val idx = bits.peek(table.tableLog).toInt
-      bits.consume(table.nbBits(idx))
-      if (bits.overflowed) fail("huffman stream underrun")
-      out(outOff + i) = table.symbol(idx).toByte
-      i += 1
-    }
-    if (!bits.finished) fail("huffman stream not fully consumed")
-  }
-
-  // ---- dictionaries (RFC 8878 §5) --------------------------------------
-
-  /** A parsed zstd dictionary: entropy tables prime the first block's
-    * Repeat modes (and treeless literals), `rep` replaces the
-    * {1,4,8} repeat-offset init, and `content` is virtual history in
-    * front of the frame for match copies. Raw-content dictionaries
-    * (no `0xEC30A437` magic) carry content only — entropy fields stay
-    * null and the default init applies.
-    */
-  private final class Dict(val id: Long, val huf: HufTable,
-      val llTable: FseTable, val ofTable: FseTable, val mlTable: FseTable,
-      val rep: Array[Long], val content: Array[Byte])
-
-  /** Parse dictionary bytes: structured when the magic leads —
-    * Huffman table, then FSE tables in OF, ML, LL order, then the 3
-    * recent-offset seeds (4-byte LE each, nonzero, ≤ content length),
-    * then content. Anything without the magic is a raw-content
-    * dictionary. Throws Err on structural damage.
-    */
-  private def parseDict(b: Array[Byte]): Dict = {
-    if (b == null || b.length == 0) fail("empty dictionary")
-    if (b.length < 4 || leU32(b, 0) != DictMagic)
-      return new Dict(0, null, null, null, null, null, b)
-    // the magic commits to the structured layout: a truncated
-    // structured dictionary is damage, not raw content
-    if (b.length < 8) fail("truncated dictionary header")
-    val id = leU32(b, 4) & 0xFFFFFFFFL
-    var p = 8
-    val (huf, hufLen) = hufReadTable(b, p, b.length)
-    p += hufLen
-    val (ofN, ofLog, ofLen) = fseReadNCount(b, p, b.length, 31, 8)
-    p += ofLen
-    val ofT = fseBuildDecode(ofN, ofLog)
-    val (mlN, mlLog, mlLen) = fseReadNCount(b, p, b.length, 52, 9)
-    p += mlLen
-    val mlT = fseBuildDecode(mlN, mlLog)
-    val (llN, llLog, llLen) = fseReadNCount(b, p, b.length, 35, 9)
-    p += llLen
-    val llT = fseBuildDecode(llN, llLog)
-    if (p + 12 > b.length) fail("truncated dictionary rep offsets")
-    val rep = Array.tabulate(3)(i => leU32(b, p + 4 * i) & 0xFFFFFFFFL)
-    p += 12
-    val content = java.util.Arrays.copyOfRange(b, p, b.length)
-    if (rep.exists(r => r == 0 || r > content.length))
-      fail("dictionary rep offset out of range")
-    new Dict(id, huf, llT, ofT, mlT, rep, content)
-  }
-
-  /** Interpret a skippable frame's payload as a dictionary — ONLY
-    * under the nibble-D Common Crawl dictionary magic (structured
-    * bytes, a zstd frame wrapping them, or raw content). Every other
-    * skippable frame stays inert exactly as before, whatever its
-    * payload happens to start with.
-    */
-  private def dictFromSkippable(b: Array[Byte], payloadOff: Int,
-      payloadLen: Int, magic: Int, cap: Long): Dict = {
-    if (magic != DictSkippableMagic || payloadLen <= 0) return null
-    val payload = java.util.Arrays.copyOfRange(b, payloadOff, payloadOff + payloadLen)
-    val plain: Array[Byte] =
-      if (magic == DictSkippableMagic &&
-          payload.length >= 4 && leU32(payload, 0) == FrameMagic) {
-        // the dictionary itself ships zstd-compressed — but ONLY the
-        // nibble-D dictionary magic warrants the decompression
-        // attempt; other skippable payloads that merely start with
-        // the frame magic are skipped in O(1) as before. An
-        // undecodable payload is just a skippable frame, not stream
-        // corruption.
-        try decodeAll(payload, cap, null)
-        catch {
-          case _: Err | _: NeedsDict => return null
-          case _: ArrayIndexOutOfBoundsException => return null
-          case _: NegativeArraySizeException => return null
-        }
-      } else payload
-    try parseDict(plain)
-    catch {
-      case _: Err => null
-      case _: ArrayIndexOutOfBoundsException => null
-    }
-  }
-
-  // ---- literals section ----------------------------------------------
-
-  /** Entropy state carried across the blocks of ONE frame. */
-  private final class FrameCtx {
-    var huf: HufTable = null
-    var llTable: FseTable = null
-    var ofTable: FseTable = null
-    var mlTable: FseTable = null
-    var rep1: Long = 1
-    var rep2: Long = 4
-    var rep3: Long = 8
-    /** Virtual history ahead of the frame; empty without a dictionary. */
-    var history: Array[Byte] = null
-
-    def prime(d: Dict): Unit = {
-      history = d.content
-      if (d.huf != null) {
-        huf = d.huf
-        llTable = d.llTable
-        ofTable = d.ofTable
-        mlTable = d.mlTable
-        rep1 = d.rep(0)
-        rep2 = d.rep(1)
-        rep3 = d.rep(2)
-      }
-    }
-  }
-
-  /** Decode the literals section at `off`; returns (literals, bytes
-    * consumed). The 5 header shapes are little-endian bit-packed
-    * `[type:2][sizeFormat:2][regen…][compressed…]`.
-    */
-  private def decodeLiterals(b: Array[Byte], off: Int, blockEnd: Int,
-      ctx: FrameCtx): (Array[Byte], Int) = {
-    if (off >= blockEnd) fail("missing literals header")
-    val b0 = u8(b, off)
-    val tpe = b0 & 3
-    val sf = (b0 >> 2) & 3
-    tpe match {
-      case 0 | 1 => // Raw | RLE
-        var litSize = 0
-        var lh = 0
-        if ((sf & 1) == 0) { litSize = b0 >> 3; lh = 1 }
-        else if (sf == 1) {
-          if (off + 2 > blockEnd) fail("short literals header")
-          litSize = (b0 >> 4) | (u8(b, off + 1) << 4)
-          lh = 2
-        } else {
-          if (off + 3 > blockEnd) fail("short literals header")
-          litSize = (b0 >> 4) | (u8(b, off + 1) << 4) | (u8(b, off + 2) << 12)
-          lh = 3
-        }
-        if (litSize > BlockMaxAbs) fail("literals larger than block max")
-        if (tpe == 0) {
-          if (off + lh + litSize > blockEnd) fail("raw literals truncated")
-          val lit = java.util.Arrays.copyOfRange(b, off + lh, off + lh + litSize)
-          (lit, lh + litSize)
-        } else {
-          if (off + lh + 1 > blockEnd) fail("rle literal byte missing")
-          val lit = new Array[Byte](litSize)
-          java.util.Arrays.fill(lit, b(off + lh))
-          (lit, lh + 1)
-        }
-      case _ => // Compressed | Treeless
-        var litSize = 0
-        var compSize = 0
-        var lh = 0
-        var fourStreams = true
-        sf match {
-          case 0 | 1 =>
-            if (off + 3 > blockEnd) fail("short literals header")
-            litSize = (b0 >> 4) | ((u8(b, off + 1) & 0x3F) << 4)
-            compSize = (u8(b, off + 1) >> 6) | (u8(b, off + 2) << 2)
-            lh = 3
-            fourStreams = sf == 1
-          case 2 =>
-            if (off + 4 > blockEnd) fail("short literals header")
-            litSize = (b0 >> 4) | (u8(b, off + 1) << 4) |
-              ((u8(b, off + 2) & 3) << 12)
-            compSize = (u8(b, off + 2) >> 2) | (u8(b, off + 3) << 6)
-            lh = 4
-          case _ =>
-            if (off + 5 > blockEnd) fail("short literals header")
-            litSize = (b0 >> 4) | (u8(b, off + 1) << 4) |
-              ((u8(b, off + 2) & 0x3F) << 12)
-            compSize = (u8(b, off + 2) >> 6) | (u8(b, off + 3) << 2) |
-              (u8(b, off + 4) << 10)
-            lh = 5
-        }
-        if (litSize > BlockMaxAbs) fail("literals larger than block max")
-        if (off + lh + compSize > blockEnd) fail("compressed literals truncated")
-        var p = off + lh
-        val streamsEnd = off + lh + compSize
-        if (tpe == 2) {
-          val (table, descLen) = hufReadTable(b, p, streamsEnd)
-          ctx.huf = table
-          p += descLen
-        } else if (ctx.huf == null) fail("treeless literals with no prior table")
-        val table = ctx.huf
-        val lit = new Array[Byte](litSize)
-        if (!fourStreams) hufDecodeStream(b, p, streamsEnd, table, lit, 0, litSize)
-        else {
-          if (p + 6 > streamsEnd) fail("missing jump table")
-          val s1 = leU16(b, p)
-          val s2 = leU16(b, p + 2)
-          val s3 = leU16(b, p + 4)
-          p += 6
-          val s4 = streamsEnd - (p + s1 + s2 + s3)
-          if (s4 <= 0) fail("jump table escapes stream")
-          val rs = (litSize + 3) / 4
-          val r4 = litSize - 3 * rs
-          if (r4 < 0) fail("four-stream regen too small")
-          hufDecodeStream(b, p, p + s1, table, lit, 0, rs)
-          hufDecodeStream(b, p + s1, p + s1 + s2, table, lit, rs, rs)
-          hufDecodeStream(b, p + s1 + s2, p + s1 + s2 + s3, table, lit, 2 * rs, rs)
-          hufDecodeStream(b, p + s1 + s2 + s3, streamsEnd, table, lit, 3 * rs, r4)
-        }
-        (lit, lh + compSize)
-    }
-  }
-
-  // ---- sequences -----------------------------------------------------
-
-  private def seqTable(b: Array[Byte], pRef: Array[Int], blockEnd: Int,
-      mode: Int, prev: FseTable, default: FseTable, maxSymbol: Int,
-      maxLog: Int, what: String): FseTable = mode match {
-    case 0 => default
-    case 1 =>
-      if (pRef(0) >= blockEnd) fail(s"$what rle byte missing")
-      val sym = u8(b, pRef(0))
-      pRef(0) += 1
-      if (sym > maxSymbol) fail(s"$what rle symbol out of range")
-      fseRle(sym)
-    case 2 =>
-      val (norm, log, len) = fseReadNCount(b, pRef(0), blockEnd, maxSymbol, maxLog)
-      pRef(0) += len
-      fseBuildDecode(norm, log)
-    case _ =>
-      if (prev == null) fail(s"$what repeat with no prior table")
-      prev
-  }
-
-  /** Output sink with in-frame history for match copies. */
-  private final class Sink(cap: Long) {
-    var buf = new Array[Byte](64 << 10)
-    var len = 0
-    private def ensure(n: Int): Unit = {
-      if (len + n > buf.length) {
-        var target = buf.length.toLong * 2
-        while (target < len + n) target *= 2
-        buf = java.util.Arrays.copyOf(buf, math.min(target, Int.MaxValue.toLong).toInt)
-      }
-    }
-    def addSlice(src: Array[Byte], off: Int, n: Int): Unit = {
-      if (len.toLong + n > cap) fail("decompression bomb")
-      ensure(n)
-      System.arraycopy(src, off, buf, len, n)
-      len += n
-    }
-    def addRun(v: Byte, n: Int): Unit = {
-      if (len.toLong + n > cap) fail("decompression bomb")
-      ensure(n)
-      java.util.Arrays.fill(buf, len, len + n, v)
-      len += n
-    }
-    /** Overlap-safe LZ match copy; offsets past the frame's own
-      * output resolve into the dictionary history (virtual bytes in
-      * front of the frame), per RFC 8878 §5.
-      */
-    def copyMatch(offset: Long, n: Long, frameStart: Int,
-        history: Array[Byte]): Unit = {
-      val avail = len - frameStart
-      val histLen = if (history == null) 0 else history.length
-      if (offset <= 0 || offset > avail.toLong + histLen)
-        fail("match offset escapes frame")
-      if (len.toLong + n > cap) fail("decompression bomb")
-      if (n > Int.MaxValue) fail("match too long")
-      ensure(n.toInt)
-      if (offset <= avail) {
-        var i = 0L
-        val src = len - offset.toInt
-        while (i < n) {
-          buf(len + i.toInt) = buf(src + i.toInt)
-          i += 1
-        }
-      } else {
-        // source begins in the dictionary: position in the virtual
-        // stream history ++ frameOutput, spilling into the frame's
-        // own (possibly just-written) bytes as the copy advances
-        val srcVirtual = histLen - (offset - avail).toInt
-        var i = 0
-        while (i < n) {
-          val s = srcVirtual + i
-          buf(len + i) =
-            if (s < histLen) history(s) else buf(frameStart + (s - histLen))
-          i += 1
-        }
-      }
-      len += n.toInt
-    }
-    def result: Array[Byte] = java.util.Arrays.copyOf(buf, len)
-  }
-
-  /** Decode one compressed block's sequences section and execute it. */
-  private def decodeCompressedBlock(b: Array[Byte], off: Int, blockEnd: Int,
-      ctx: FrameCtx, out: Sink, frameStart: Int, blockMax: Long): Unit = {
-    val startLen = out.len
-    val (lit, litLen) = decodeLiterals(b, off, blockEnd, ctx)
-    var p = off + litLen
-    if (p >= blockEnd) fail("missing sequences header")
-    val b0 = u8(b, p)
-    var nbSeq = 0
-    if (b0 < 128) { nbSeq = b0; p += 1 }
-    else if (b0 < 255) {
-      if (p + 2 > blockEnd) fail("short nbSeq")
-      nbSeq = ((b0 - 128) << 8) | u8(b, p + 1)
-      p += 2
-    } else {
-      if (p + 3 > blockEnd) fail("short nbSeq")
-      nbSeq = leU16(b, p + 1) + 0x7F00
-      p += 3
-    }
-    if (nbSeq == 0) {
-      if (p != blockEnd) fail("trailing bytes after sequence-free block")
-      out.addSlice(lit, 0, lit.length)
-      if (out.len - startLen > blockMax) fail("block regen over max")
-      return
-    }
-    if (p >= blockEnd) fail("missing compression modes")
-    val modes = u8(b, p)
-    if ((modes & 3) != 0) fail("reserved compression-mode bits set")
-    p += 1
-    val pRef = Array(p)
-    // descriptor order is LL, OF, ML (RFC §3.1.1.3.2.1)
-    val llT = seqTable(b, pRef, blockEnd, (modes >> 6) & 3, ctx.llTable,
-      LlDefault, 35, 9, "literal-length")
-    val ofT = seqTable(b, pRef, blockEnd, (modes >> 4) & 3, ctx.ofTable,
-      OfDefault, 31, 8, "offset")
-    val mlT = seqTable(b, pRef, blockEnd, (modes >> 2) & 3, ctx.mlTable,
-      MlDefault, 52, 9, "match-length")
-    ctx.llTable = llT; ctx.ofTable = ofT; ctx.mlTable = mlT
-    val bits = new BackBits(b, pRef(0), blockEnd)
-    var llState = bits.readChecked(llT.log).toInt
-    var ofState = bits.readChecked(ofT.log).toInt
-    var mlState = bits.readChecked(mlT.log).toInt
-    var litPos = 0
-    var i = 0
-    while (i < nbSeq) {
-      val ofCode = ofT.symbol(ofState)
-      if (ofCode > 31) fail("offset code out of range")
-      val offsetValue = (1L << ofCode) + bits.readChecked(ofCode)
-      val mlCode = mlT.symbol(mlState)
-      val matchLen = MlBase(mlCode) + bits.readChecked(MlExtra(mlCode))
-      val llCode = llT.symbol(llState)
-      val litLenV = LlBase(llCode) + bits.readChecked(LlExtra(llCode)).toInt
-      if (i != nbSeq - 1) {
-        // update order is LL, ML, OF
-        llState = llT.newStateBase(llState) + bits.readChecked(llT.nbBits(llState)).toInt
-        mlState = mlT.newStateBase(mlState) + bits.readChecked(mlT.nbBits(mlState)).toInt
-        ofState = ofT.newStateBase(ofState) + bits.readChecked(ofT.nbBits(ofState)).toInt
-      }
-      // repeat-offset resolution (RFC §3.1.1.3.3)
-      val offset: Long =
-        if (offsetValue > 3) {
-          val o = offsetValue - 3
-          ctx.rep3 = ctx.rep2; ctx.rep2 = ctx.rep1; ctx.rep1 = o
-          o
-        } else {
-          val idx = if (litLenV == 0) offsetValue + 1 else offsetValue
-          idx match {
-            case 1 => ctx.rep1
-            case 2 =>
-              val o = ctx.rep2; ctx.rep2 = ctx.rep1; ctx.rep1 = o; o
-            case 3 =>
-              val o = ctx.rep3
-              ctx.rep3 = ctx.rep2; ctx.rep2 = ctx.rep1; ctx.rep1 = o; o
-            case _ =>
-              val o = ctx.rep1 - 1
-              if (o <= 0) fail("repeat offset underflow")
-              ctx.rep3 = ctx.rep2; ctx.rep2 = ctx.rep1; ctx.rep1 = o; o
-          }
-        }
-      if (litPos + litLenV > lit.length) fail("literal run past buffer")
-      out.addSlice(lit, litPos, litLenV)
-      litPos += litLenV
-      out.copyMatch(offset, matchLen, frameStart, ctx.history)
-      if (out.len - startLen > blockMax) fail("block regen over max")
-      i += 1
-    }
-    if (!bits.finished) fail("sequence bitstream not fully consumed")
-    out.addSlice(lit, litPos, lit.length - litPos)
-    if (out.len - startLen > blockMax) fail("block regen over max")
-  }
-
-  // ---- frames --------------------------------------------------------
-
-  private def decodeAll(b: Array[Byte], cap: Long,
-      externalDict: Dict): Array[Byte] = {
-    if (b == null || b.length < 4) fail("too short")
-    val out = new Sink(cap)
-    var p = 0
-    var sawFrame = false
-    var dict: Dict = externalDict
-    while (p < b.length) {
-      if (p + 4 > b.length) fail("trailing garbage")
-      val magic = leU32(b, p)
-      if (magic >= SkippableMin && magic <= SkippableMin + 15) {
-        if (p + 8 > b.length) fail("truncated skippable frame")
-        val sz = leU32(b, p + 4) & 0xFFFFFFFFL
-        if (p + 8 + sz > b.length) fail("skippable frame past input")
-        // Common Crawl ships the shared dictionary in a leading
-        // skippable frame — capture it so later frames decode; any
-        // other skippable payload is skipped exactly as before
-        val d = dictFromSkippable(b, p + 8, sz.toInt, magic, cap)
-        if (d != null) dict = d
-        p += 8 + sz.toInt
-      } else if (magic == FrameMagic) {
-        p = decodeFrame(b, p + 4, out, cap, dict)
-        sawFrame = true
-      } else fail("bad magic")
-    }
-    if (!sawFrame) fail("no zstd frame")
-    out.result
-  }
-
-  /** Decode one frame starting AFTER its magic; returns the offset
-    * past the frame. A frame naming a nonzero dictionary id needs
-    * `dict` (id-matched, or a raw-content dictionary which carries no
-    * id); a present dictionary also primes frames that don't name an
-    * id — raw-content compression writes none (Common Crawl's case),
-    * and priming is inert for frames that never reference it.
-    */
-  private def decodeFrame(b: Array[Byte], start: Int, out: Sink, cap: Long,
-      dict: Dict): Int = {
-    var p = start
-    if (p >= b.length) fail("missing frame header")
-    val desc = u8(b, p)
-    p += 1
-    if ((desc & 8) != 0) fail("reserved frame-descriptor bit set")
-    val singleSegment = (desc & 0x20) != 0
-    val fcsFlag = desc >> 6
-    val dictFlag = desc & 3
-    var windowSize = 0L
-    if (!singleSegment) {
-      if (p >= b.length) fail("missing window descriptor")
-      val wd = u8(b, p)
-      p += 1
-      val base = 1L << (10 + (wd >> 3))
-      windowSize = base + (base >> 3) * (wd & 7)
-    }
-    val dictBytes = dictFlag match {
-      case 0 => 0; case 1 => 1; case 2 => 2; case _ => 4
-    }
-    if (p + dictBytes > b.length) fail("truncated dictionary id")
-    var dictId = 0L
-    var i = 0
-    while (i < dictBytes) { dictId |= (u8(b, p + i).toLong << (8 * i)); i += 1 }
-    p += dictBytes
-    // a named id must match the dictionary in hand; raw-content
-    // dictionaries carry no id of their own, so any id is trusted to
-    // them (standard zstd behavior for raw dicts)
-    if (dictId != 0 &&
-        (dict == null || (dict.huf != null && dict.id != dictId)))
-      throw new NeedsDict
-    var fcs = -1L
-    fcsFlag match {
-      case 0 =>
-        if (singleSegment) {
-          if (p >= b.length) fail("truncated fcs")
-          fcs = u8(b, p); p += 1
-        }
-      case 1 =>
-        if (p + 2 > b.length) fail("truncated fcs")
-        fcs = leU16(b, p) + 256L; p += 2
-      case 2 =>
-        if (p + 4 > b.length) fail("truncated fcs")
-        fcs = leU32(b, p) & 0xFFFFFFFFL; p += 4
-      case _ =>
-        if (p + 8 > b.length) fail("truncated fcs")
-        fcs = leU64(b, p)
-        if (fcs < 0) fail("fcs overflow")
-        p += 8
-    }
-    if (singleSegment) windowSize = fcs
-    if (fcs >= 0 && fcs > cap) fail("frame content over cap")
-    val blockMax = math.min(if (windowSize > 0) windowSize else BlockMaxAbs.toLong,
-      BlockMaxAbs.toLong)
-    val ctx = new FrameCtx
-    if (dict != null) ctx.prime(dict)
-    val frameStart = out.len
-    var last = false
-    while (!last) {
-      if (p + 3 > b.length) fail("truncated block header")
-      val hdr = u8(b, p) | (u8(b, p + 1) << 8) | (u8(b, p + 2) << 16)
-      p += 3
-      last = (hdr & 1) != 0
-      val btype = (hdr >> 1) & 3
-      val bsize = hdr >> 3
-      btype match {
-        case 0 =>
-          if (bsize > blockMax) fail("raw block over max")
-          if (p + bsize > b.length) fail("raw block truncated")
-          out.addSlice(b, p, bsize)
-          p += bsize
-        case 1 =>
-          if (bsize > blockMax) fail("rle block over max")
-          if (p >= b.length) fail("rle byte missing")
-          out.addRun(b(p), bsize)
-          p += 1
-        case 2 =>
-          if (bsize > BlockMaxAbs) fail("compressed block over format max")
-          if (p + bsize > b.length) fail("compressed block truncated")
-          decodeCompressedBlock(b, p, p + bsize, ctx, out, frameStart, blockMax)
-          p += bsize
-        case _ => fail("reserved block type")
-      }
-    }
-    val produced = (out.len - frameStart).toLong
-    if (fcs >= 0 && produced != fcs) fail("frame content size mismatch")
-    if ((desc & 4) != 0) {
-      if (p + 4 > b.length) fail("truncated checksum")
-      val want = leU32(b, p) & 0xFFFFFFFFL
-      val got = xxh64(out.buf, frameStart, out.len - frameStart, 0L) & 0xFFFFFFFFL
-      if (want != got) fail("content checksum mismatch")
-      p += 4
-    }
-    p
-  }
-
-  // ---- xxhash64 (content checksums; public XXH64 algorithm) ----------
-
-  private val P1 = 0x9E3779B185EBCA87L
-  private val P2 = 0xC2B2AE3D27D4EB4FL
-  private val P3 = 0x165667B19E3779F9L
-  private val P4 = 0x85EBCA77C2B2AE63L
-  private val P5 = 0x27D4EB2F165667C5L
-
-  def xxh64(b: Array[Byte], off: Int, len: Int, seed: Long): Long = {
-    var p = off
-    val end = off + len
-    var acc = 0L
-    if (len >= 32) {
-      var a1 = seed + P1 + P2
-      var a2 = seed + P2
-      var a3 = seed
-      var a4 = seed - P1
-      while (p + 32 <= end) {
-        a1 = java.lang.Long.rotateLeft(a1 + leU64(b, p) * P2, 31) * P1
-        a2 = java.lang.Long.rotateLeft(a2 + leU64(b, p + 8) * P2, 31) * P1
-        a3 = java.lang.Long.rotateLeft(a3 + leU64(b, p + 16) * P2, 31) * P1
-        a4 = java.lang.Long.rotateLeft(a4 + leU64(b, p + 24) * P2, 31) * P1
-        p += 32
-      }
-      acc = java.lang.Long.rotateLeft(a1, 1) + java.lang.Long.rotateLeft(a2, 7) +
-        java.lang.Long.rotateLeft(a3, 12) + java.lang.Long.rotateLeft(a4, 18)
-      for (a <- Seq(a1, a2, a3, a4)) {
-        acc = (acc ^ (java.lang.Long.rotateLeft(a * P2, 31) * P1)) * P1 + P4
-      }
-    } else acc = seed + P5
-    acc += len
-    while (p + 8 <= end) {
-      acc = java.lang.Long.rotateLeft(
-        acc ^ (java.lang.Long.rotateLeft(leU64(b, p) * P2, 31) * P1), 27) * P1 + P4
-      p += 8
-    }
-    if (p + 4 <= end) {
-      acc = java.lang.Long.rotateLeft(acc ^ ((leU32(b, p) & 0xFFFFFFFFL) * P1), 23) * P2 + P3
-      p += 4
-    }
-    while (p < end) {
-      acc = java.lang.Long.rotateLeft(acc ^ (u8(b, p) * P5), 11) * P1
-      p += 1
-    }
-    acc ^= acc >>> 33
-    acc *= P2
-    acc ^= acc >>> 29
-    acc *= P3
-    acc ^= acc >>> 32
-    acc
-  }
+  private val Xxh64 = net.jpountz.xxhash.XXHashFactory.fastestInstance().hash64()
+  private def xxh64(b: Array[Byte], off: Int, len: Int, seed: Long): Long =
+    Xxh64.hash(b, off, len, seed)
 
   // ---- synthesizer ---------------------------------------------------
   // Write-side counterparts for corpora and interop pins — same role
@@ -1131,9 +303,8 @@ object Zstd {
 
   // ---- dictionary synthesis (RFC 8878 §5 write side) -------------------
 
-  /** Forward LSB-first bit packer — the counterpart of [[FwdBits]],
-    * for FSE normalized-count headers (byte-aligned at the end;
-    * padding bits are never read).
+  /** Forward LSB-first bit packer for FSE normalized-count headers
+    * (byte-aligned at the end; padding bits are never read).
     */
   private final class FwdBitWriter {
     private val bytes = ArrayBuffer.empty[Byte]

@@ -240,8 +240,8 @@ object FrontierQueries {
     // ZIP shards whose members are compressed with the codec MATRIX
     // (DEFLATE / BZIP2 / Zstandard / XZ / LZMA / SHRINK / IMPLODE,
     // methods 8/12/93/95/14/1/6) — the non-DEFLATE streams decode
-    // through this engine's own from-scratch decoders (Bzip2, Zstd,
-    // Xz + raw LZMA1, dynamic-LZW unshrink, Shannon-Fano explode),
+    // through the library adapters (Bzip2, Zstd, Xz + raw LZMA1) and
+    // the from-scratch dynamic-LZW unshrink and Shannon-Fano explode,
     // each member still CRC-32-verified. Every codec is pinned
     // against an independent implementation on at least one side.
     "shard_zip_codecs" -> ((s, dir) => {
@@ -652,7 +652,7 @@ object FrontierQueries {
     // 7z shard reading — signature + header CRCs, the property-ID
     // header grammar, folders as coder graphs, encoded headers, solid
     // substreams, empty-stream/empty-file vectors; Copy/LZMA2 members
-    // through the from-scratch Xz range-decoder core. Pinned both
+    // through the Xz adapter over xz-java. Pinned both
     // directions against commons-compress in the spec.
     "shard_7z_samples" -> ((s, dir) => {
       import s.implicits._
@@ -837,8 +837,8 @@ object FrontierQueries {
         .toDF().orderBy("media_id")
     }),
 
-    // Common Crawl's NEWER `.warc.zst` framing through the
-    // from-scratch RFC 8878 decoder: per-record zstd frames (real
+    // Common Crawl's NEWER `.warc.zst` framing through the Zstd
+    // adapter over zstd-jni: per-record zstd frames (real
     // compressor output on even ids — FSE tables, Huffman literals,
     // sequence execution — skippable frames + checksummed synth
     // frames on odd), then the same WARC record walk as warc_extract.
@@ -952,10 +952,8 @@ object FrontierQueries {
         .toDF().orderBy("media_id")
     }),
 
-    // `.warc.xz` through the from-scratch LZMA2/XZ decoder (range
-    // coder, 12-state machine, matched literals, position slots,
-    // block checks) — xz-java-written streams across presets 0-9 and
-    // all three check types.
+    // `.warc.xz` through the Xz adapter over xz-java — xz-java-written
+    // streams across presets 0-9 and all three check types.
     "warc_xz_extract" -> ((s, dir) => {
       import s.implicits._
       val corpus = graft.operators.Multimodal.demoWarcXzCorpus(
@@ -994,9 +992,9 @@ object FrontierQueries {
         .toDF().orderBy("crawl_id")
     }),
 
-    // `.warc.lz4` through the from-scratch LZ4 frame decoder (block
-    // format, frame descriptors, XXH32 checksums, skippable frames) —
-    // real lz4-java frames on even ids, our stored frames on odd.
+    // `.warc.lz4` through the Lz4 adapter over lz4-java's frame reader
+    // (checksums, skippable frames) — real lz4-java frames on even
+    // ids, our stored frames on odd.
     "warc_lz4_extract" -> ((s, dir) => {
       import s.implicits._
       val corpus = graft.operators.Multimodal.demoWarcLz4Corpus(
@@ -1010,9 +1008,9 @@ object FrontierQueries {
     // Common Crawl's REAL `.warc.zst` shape: the shared dictionary in
     // a leading skippable frame (raw-content via libzstd on even ids,
     // structured entropy-table dictionaries with id-checked splice
-    // frames on odd), resolved by the from-scratch RFC 8878 §5
-    // dictionary machinery — history-reaching match offsets, repeat
-    // tables, rep-offset seeds. Generator-replay oracle: the
+    // frames on odd), resolved by the Zstd adapter's dictionary split
+    // (captured from the skippable frame, loaded into zstd-jni, id
+    // checked). Generator-replay oracle: the
     // dictionary is transparent to the sums.
     "warc_zstd_dict" -> ((s, dir) => {
       import s.implicits._

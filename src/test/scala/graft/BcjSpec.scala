@@ -3,10 +3,11 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Bcj
 
-/** Differential pin: every BCJ transform must agree BYTE-EXACTLY (and
-  * on the processed-prefix length) with the independent
-  * org.tukaani.xz.simple implementations on the Spark classpath, in
-  * both directions, across random buffers, branch-opcode-dense
+/** Wiring pin for the BCJ adapters: every transform must agree
+  * BYTE-EXACTLY (and on the processed-prefix length) with a direct
+  * org.tukaani.xz.simple filter over the whole buffer, in both
+  * directions (so the encoder flag and start address reach the right
+  * constructor arguments), across random buffers, branch-opcode-dense
   * adversarial buffers (the x86 prevMask heuristic only activates on
   * consecutive E8/E9 sightings), varied lengths including the
   * sub-window sizes, and non-zero start addresses. Round-trip

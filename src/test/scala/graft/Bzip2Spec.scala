@@ -3,10 +3,11 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Bzip2
 
-/** bzip2 decoder conformance, pinned against the independent
-  * commons-compress implementation Spark bundles: our decoder must
-  * read real bzip2 output byte-exactly across levels, block shapes,
-  * multi-block streams, and RLE1 pathologies.
+/** The bzip2 adapter's posture over commons-compress: real bzip2
+  * output read byte-exactly across levels, block shapes, multi-block
+  * and multistream files, and RLE1 pathologies; the synthesizer's
+  * plain and randomised streams cross-read; output capped across
+  * streams; damage degrades to null.
   */
 class Bzip2Spec extends AnyFunSuite {
 
@@ -69,6 +70,10 @@ class Bzip2Spec extends AnyFunSuite {
     val bomb = cc(new Array[Byte](1 << 21), 9)
     assert(Bzip2.decode(bomb, cap = 1 << 16) == null)
     assert(Bzip2.decode(bomb, cap = 1 << 22) != null)
+    // the cap counts across concatenated streams: each fits, the sum not
+    val part = cc(new Array[Byte](40000), 9)
+    assert(Bzip2.decode(part, cap = 1 << 16) != null)
+    assert(Bzip2.decode(part ++ part, cap = 1 << 16) == null)
   }
   test("multistream: concatenated streams decode whole (pbzip2/Wikipedia shape)") {
     val a = texty(3000, 21)

@@ -3,10 +3,10 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Xz
 
-/** XZ/LZMA2 decoder conformance, pinned against the independent
-  * xz-java implementation Spark bundles: presets 0-9 (fast modes use
-  * uncompressed chunks; high presets exercise deep match chains),
-  * every check type, multi-stream concatenation, and damage classes.
+/** The xz adapter's posture over xz-java: presets 0-9, every check
+  * type, multi-stream concatenation, output capped across streams, a
+  * memory limit on the declared dictionary, and damage classes that
+  * degrade to null.
   */
 class XzSpec extends AnyFunSuite {
 
@@ -86,5 +86,23 @@ class XzSpec extends AnyFunSuite {
     val bomb = xzc(new Array[Byte](1 << 21), 9)
     assert(Xz.decode(bomb, cap = 1 << 16) == null)
     assert(Xz.decode(bomb, cap = 1 << 22) != null)
+    // the cap counts across concatenated streams: each fits, the sum not
+    val part = xzc(new Array[Byte](40000), 1)
+    assert(Xz.decode(part, cap = 1 << 16) != null)
+    assert(Xz.decode(part ++ part, cap = 1 << 16) == null)
+    // a forged block header naming a 4 GiB dictionary (props byte 40,
+    // header CRC32 fixed up) is refused before the dictionary is
+    // allocated
+    val forged = good.clone()
+    val hdr = 12 // the block header follows the 12-byte stream header
+    val hdrSize = ((forged(hdr) & 0xFF) + 1) * 4
+    assert(forged(hdr + 1) == 0 && forged(hdr + 2) == 0x21 && forged(hdr + 3) == 1,
+      "expected a size-less LZMA2-only block header")
+    forged(hdr + 4) = 40
+    val crc = new java.util.zip.CRC32()
+    crc.update(forged, hdr, hdrSize - 4)
+    for (k <- 0 until 4)
+      forged(hdr + hdrSize - 4 + k) = (crc.getValue >>> (8 * k)).toByte
+    assert(Xz.decode(forged) == null)
   }
 }
