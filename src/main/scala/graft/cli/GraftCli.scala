@@ -164,13 +164,11 @@ object GraftCli {
       .config("spark.sql.shuffle.partitions", math.max(c.workers, 1))
       .config("spark.sql.session.timeZone", "UTC")
       .appName("graft-transfer").getOrCreate()
-    if (c.once) {
-      val stats = runOnce(spark, c)
-      println(s"RUN: $stats")
-    } else {
+    if (c.once) println(runOnce(spark, c).toJson)
+    else {
       val (src, sink) = connectors(spark, c)
       val runner = new ScheduledRunner(src, sink, transferConfig(c),
-        c.schedule, (s: RunStats) => println(s"RUN: $s"))
+        Schedule.parse(c.schedule), (s: RunStats) => println(s.toJson))
       println(s"Scheduled '${c.schedule}', next fire ${runner.nextFire()}")
       runner.start()
       Thread.currentThread.join() // service shape: run until SIGTERM

@@ -9,10 +9,9 @@ import graft.sources.Connector
   * default `@midnight` per `clickhouse/reader/main.go:35`) — each tick is
   * an independent full pipeline run with fresh state. Accepts the full
   * rule surface via [[Schedule.parse]]: 5-field cron, `@midnight` et al.,
-  * `@every 90s`, plus the legacy `intervalSeconds` constructor. We
-  * improve on the reference in one way: a tick is SKIPPED if the
-  * previous run is still in flight (the reference would happily overlap
-  * two runs of the same non-incremental append).
+  * `@every 90s`. We improve on the reference in one way: a tick is
+  * SKIPPED if the previous run is still in flight (the reference would
+  * happily overlap two runs of the same non-incremental append).
   *
   * In production the scheduler belongs OUTSIDE the engine (Airflow /
   * K8s CronJob / `Trigger.AvailableNow` streaming); this runner exists
@@ -33,17 +32,6 @@ final class ScheduledRunner private (
     this(() => Transfer.run(source, sink, cfg), schedule, onRun,
       Clock.systemDefaultZone())
 
-  /** The reference's CLI surface: a cron rule string (`-schedule`). */
-  def this(source: Connector, sink: Connector, cfg: Transfer.Config,
-      cronRule: String, onRun: RunStats => Unit) =
-    this(source, sink, cfg, Schedule.parse(cronRule), onRun)
-
-  /** Legacy fixed-delay interval surface. */
-  def this(source: Connector, sink: Connector, cfg: Transfer.Config,
-      intervalSeconds: Long, onRun: RunStats => Unit = _ => ()) =
-    this(source, sink, cfg,
-      Schedule.Every(Duration.ofSeconds(intervalSeconds)), onRun)
-
   private val exec = Executors.newSingleThreadScheduledExecutor { r =>
     val t = new Thread(r, "graft-scheduler"); t.setDaemon(true); t
   }
@@ -62,18 +50,17 @@ final class ScheduledRunner private (
   }
 
   /** Overlap guard: runs `tick` unless a previous run is still in
-    * flight; returns false when skipped.
+    * flight; returns false when skipped. A failed run prints one JSON
+    * line (exception class and message) to stderr.
     */
-  private[pipeline] def guardedTick(): Boolean =
+  private[graft] def guardedTick(): Boolean =
     if (running.compareAndSet(false, true)) {
       try { tick(); true }
       catch { case e: Throwable =>
-        System.err.println(s"[graft-scheduler] run failed: ${e.getMessage}")
+        Console.err.println(RunStats.failureJson(e))
         true // the RUN happened (and failed); it was not skipped
       } finally running.set(false)
     } else false
-
-  private[graft] def guardedTickForTest(): Boolean = guardedTick()
 
   /** Next fire time after `from` — exposed for observability/tests. */
   def nextFire(from: Instant = clock.instant()): Instant =

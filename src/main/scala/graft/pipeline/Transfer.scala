@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode}
 import org.apache.spark.sql.functions._
+import com.fasterxml.jackson.core.io.JsonStringEncoder
 import graft.operators.IncrementalDedup
 import graft.sources.Connector
 
@@ -41,21 +42,36 @@ final case class RunStats(
     rowsFiltered: Long,
     rowsWritten: Long,
     durationMs: Long,
-)
+) {
+  /** The run as one JSON object: the line a CLI run prints. */
+  def toJson: String =
+    s"""{"rowsRead":$rowsRead,"rowsFiltered":$rowsFiltered,"rowsWritten":$rowsWritten,"durationMs":$durationMs}"""
+}
+
+object RunStats {
+  /** A failed run as one JSON object: exception class and message (the
+    * message may be null). */
+  def failureJson(e: Throwable): String = {
+    def str(v: String) =
+      if (v == null) "null"
+      else "\"" + new String(JsonStringEncoder.getInstance.quoteAsString(v)) + "\""
+    s"""{"error":${str(e.getClass.getName)},"message":${str(e.getMessage)}}"""
+  }
+}
 
 /** One scheduled-run pipeline (§3.1 of SURVEY.md): scan → project → window
   * filter → order → (incremental anti-join dedup) → sink, with row
   * accounting. This is the whole of the reference's provider+consumer pair
-  * collapsed into a single Spark job — the gRPC exchange was an artifact of
-  * its two-process architecture, not a query semantic.
+  * collapsed into a single Spark execution — the gRPC exchange was an
+  * artifact of its two-process architecture, not a query semantic.
   *
   * Scale notes (100 TB):
   *   - projection + window predicate are applied before any wide op, so
   *     Catalyst pushes them into the scan (PushedFilters / ReadSchema);
   *   - the dedup anti-join is the only shuffle, and AQE may demote it to a
   *     broadcast join when the snapshot window is small;
-  *   - row counts come from DataFrame-level counts on the already-narrow
-  *     plans, never from collect().
+  *   - row counts are metrics the write's own execution observes
+  *     (`Dataset.observe`): no cache, no second scan, never collect().
   */
 object Transfer {
 
@@ -83,10 +99,16 @@ object Transfer {
     df
   }
 
-  /** Run one transfer; returns the reference-parity accounting. */
+  /** Run one transfer; returns the reference-parity accounting. The write
+    * is the run's only action: rows read and rows written are counted
+    * inside it, on the planned source and on the deduplicated frame, so
+    * both are the rows this run saw even when the sink is the source.
+    */
   def run(source: Connector, sink: Connector, cfg: Config): RunStats = {
     val t0 = System.nanoTime()
-    val src = plan(source, cfg)
+    val read = Observation()
+    val written = Observation()
+    val src = plan(source, cfg).observe(read, count(lit(1)).as("rows"))
 
     val toWrite =
       if (!cfg.increment) src
@@ -108,20 +130,15 @@ object Transfer {
         }
       }
 
-    // One pass for the write; counts computed on cached narrow plans.
-    // The source count runs BEFORE the write: if source and target
-    // overlap (self-append) or the source is concurrently mutated,
-    // accounting must reflect the rows this run actually saw, not the
-    // post-write state (rowsFiltered would otherwise go negative).
-    val cached = toWrite.cache()
-    val written = cached.count()
-    val read = src.count()
-    sink.write(cached, cfg.target, cfg.mode)
-    cached.unpersist()
+    sink.write(toWrite.observe(written, count(lit(1)).as("rows")), cfg.target, cfg.mode)
+    // Spark's listener fulfils the observations asynchronously, after the
+    // write has returned: `get` blocks until it has.
+    def rows(o: Observation) = o.get("rows").asInstanceOf[Long]
+    val (r, w) = (rows(read), rows(written))
     RunStats(
-      rowsRead = read,
-      rowsFiltered = read - written,
-      rowsWritten = written,
+      rowsRead = r,
+      rowsFiltered = r - w,
+      rowsWritten = w,
       durationMs = (System.nanoTime() - t0) / 1000000,
     )
   }

@@ -12,13 +12,19 @@ trait Connector {
     * mirroring the reference's per-query schema discovery, §1.2). */
   def read(table: String): DataFrame
 
-  /** Append rows to a target table (the reference's bulk INSERT, §2.8). */
+  /** Append rows to a target table (the reference's bulk INSERT, §2.8).
+    * Must run `df` exactly once, through a DataFrame action
+    * (`DataFrameWriter` or `Dataset.foreachPartition`): `Transfer.run`
+    * takes its row counts from the metrics that action observes, and a
+    * frame consumed through `df.rdd` reports none of them.
+    */
   def write(df: DataFrame, target: String, mode: SaveMode = SaveMode.Append): Unit
 }
 
 /** File-based connector (parquet/csv/json directories) — used for the
   * driver fixtures and as the TSV-ish sink path. One table = one path
-  * under `root`.
+  * under `root`. Every `read` lists the files anew: a target this
+  * connector wrote to, or a source that grew, is seen as it is now.
   */
 final class FileConnector(spark: SparkSession, root: String, format: String = "parquet")
     extends Connector {
@@ -26,7 +32,7 @@ final class FileConnector(spark: SparkSession, root: String, format: String = "p
   private def path(table: String) = s"$root/$table.$format"
 
   def read(table: String): DataFrame = format match {
-    case "parquet" => Tables.load(spark, root, table)
+    case "parquet" => Tables.read(spark, root, table)
     case "csv"     => spark.read.option("header", "true").option("sep", "\t")
       .option("inferSchema", "true").csv(path(table))
     case "json"    => spark.read.json(path(table))

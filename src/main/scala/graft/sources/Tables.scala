@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
-/** Fixture-table loader that normalizes every parquet timestamp encoding
+/** Parquet table reader that normalizes every parquet timestamp encoding
   * to one engine-internal type: session-TZ `TimestampType`.
   *
   * Parquet writers vary: TIMESTAMP(NANOS) (no Spark equivalent — with
@@ -68,41 +68,34 @@ object Tables {
     } finally reader.close()
   }
 
-  /** Load `dir/name.parquet` with every timestamp encoding (NANOS-as-long,
-    * NTZ-micros, LTZ-micros) normalized to session-TZ TimestampType.
+  /** Read `dir/name.parquet` with every timestamp encoding (NANOS-as-long,
+    * NTZ-micros, LTZ-micros) normalized to session-TZ TimestampType. Each
+    * call lists the files and reads a footer anew, so a table that grows
+    * between calls is seen whole — the read `FileConnector` uses.
     */
-  // Footer-sniff memo: nanosTimestampCols opens and parses the parquet
-  // footer ON THE DRIVER per call, and every query calls load() 1-5
-  // times per construction — tens of ms of serial driver latency per
-  // query run for metadata that cannot change under a session. Keyed by
-  // absolute path; schema METADATA only (never data or results), the
-  // same thing Spark's own FileIndex/footer caches memoize.
-  private val nanosColsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
+  def read(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val df = spark.read.parquet(path)
+    normalizeNtz(nanosTimestampCols(spark, path).foldLeft(df) { (d, c) =>
+      d.withColumn(c, expr(s"timestamp_micros(`$c` div 1000)"))
+    })
+  }
 
-  // Plan-fragment memo: building a fixture DataFrame costs a driver file
-  // listing plus a 1-task schema-inference JOB per spark.read.parquet
-  // call — measured ~20-40 ms of serial driver latency each, and every
-  // query construction calls load() 1-5 times, EVERY run. The resolved
-  // logical plan is immutable session-scoped METADATA (schema + file
-  // index), exactly what a catalog table caches; the parquet DATA is
-  // re-scanned by every action, so no result ever persists across runs.
-  // Keyed per (session, path): Bench/Verify each hold one session.
+  // Fixture memo: building a DataFrame costs a driver file listing, a
+  // footer sniff and a 1-task schema-inference JOB per read — measured
+  // ~20-40 ms of serial driver latency each, and every query construction
+  // calls load() 1-5 times, EVERY run. Fixture tables are never written
+  // under a session, so their resolved plan (schema + file index) cannot
+  // change and is memoised per (session, path); the parquet DATA is
+  // re-scanned by every action, so no result persists across runs. Tables
+  // that a session writes to must go through `read` instead.
   private val dfMemo =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    dfMemo.computeIfAbsent((spark, path), { _ =>
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val df = spark.read.parquet(path)
-      val nanosCols = nanosColsMemo.computeIfAbsent(path,
-        p => nanosTimestampCols(spark, p))
-      normalizeNtz(nanosCols.foldLeft(df) { (d, c) =>
-        d.withColumn(c, expr(s"timestamp_micros(`$c` div 1000)"))
-      })
-    })
-  }
+  /** [[read]], memoised per session: for fixture tables only. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    dfMemo.computeIfAbsent((spark, s"$dir/$name.parquet"), _ => read(spark, dir, name))
 
   /** Guard for CPU-bound narrow transforms (shingling, fingerprinting,
     * per-row hashing, brute-force vector scans): parquet scans cannot

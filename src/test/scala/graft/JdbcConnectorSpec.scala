@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
-import graft.pipeline.{Transfer, Window}
+import graft.pipeline.{RunStats, Transfer, Window}
 import graft.sources.{FileConnector, JdbcConnector}
 
 /** End-to-end JDBC path against embedded Derby (ships with Spark): write
@@ -59,5 +59,23 @@ class JdbcConnectorSpec extends SparkSpec {
     assert(r1.rowsWritten > 0 && r1.rowsFiltered == 0)
     val r2 = Transfer.run(jdbc, sink, cfg)
     assert(r2.rowsWritten == 0 && r2.rowsFiltered == r2.rowsRead)
+  }
+
+  test("transfer into a JDBC sink: one connector is source and sink") {
+    // The CLI's shape when only -url is given: -from and -to are two
+    // tables of one storage.
+    val events = graft.sources.Tables.load(spark, sf0001, "events")
+      .select("event_id", "user_id", "event_type", "value")
+    val jdbc = new JdbcConnector(spark, url)
+    jdbc.write(events, "xfer_src", SaveMode.Overwrite)
+
+    def tick(from: Int, to: Int) = Transfer.run(jdbc, jdbc, Transfer.Config(
+      table = "xfer_src", target = "xfer_dst",
+      window = Some(Window("event_id", from.toString, to.toString)),
+      increment = true)).copy(durationMs = 0)
+    assert(tick(0, 119) == RunStats(120, 0, 120, 0))   // cold: no target yet
+    assert(tick(60, 179) == RunStats(120, 60, 60, 0))  // overlapping slide
+    assert(tick(60, 179) == RunStats(120, 120, 0, 0))  // rerun writes nothing
+    assert(jdbc.read("xfer_dst").count() == 180)
   }
 }

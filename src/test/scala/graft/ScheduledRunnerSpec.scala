@@ -70,16 +70,16 @@ class ScheduledRunnerSpec extends SparkSpec {
     val runner = ScheduledRunner.forTest(() => {
       runs += 1; entered.countDown(); release.await(); RunStats(0, 0, 0, 0)
     }, Schedule.parse("@every 1h"))
-    val t = new Thread(() => runner.guardedTickForTest())
+    val t = new Thread(() => runner.guardedTick())
     t.start()
     entered.await()
     // second fire while the first is still running → skipped, not queued
-    assert(!runner.guardedTickForTest())
+    assert(!runner.guardedTick())
     release.countDown()
     t.join()
     assert(runs == 1)
     // after the in-flight run finishes, ticks run again
-    assert(runner.guardedTickForTest() && runs == 2)
+    assert(runner.guardedTick() && runs == 2)
     runner.stop()
   }
 
@@ -99,7 +99,7 @@ class ScheduledRunnerSpec extends SparkSpec {
       fields = Seq("event_id", "user_id", "event_type", "value"),
       window = Some(Window("user_id", "0", "10")), increment = true)
     var seen = List.empty[graft.pipeline.RunStats]
-    val runner = new ScheduledRunner(src, sink, cfg, 3600, s => seen ::= s)
+    val runner = new ScheduledRunner(src, sink, cfg, Schedule.parse("@every 1h"), s => seen ::= s)
 
     val first = runner.tick()
     assert(first.rowsWritten > 0)
@@ -107,5 +107,25 @@ class ScheduledRunnerSpec extends SparkSpec {
     assert(second.rowsWritten == 0 && second.rowsFiltered == second.rowsRead)
     assert(runner.last.contains(second) && seen.length == 2)
     runner.stop()
+  }
+
+  test("a run renders as one JSON line; a failed run prints one too") {
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val ok = json.readTree(RunStats(10, 4, 6, 123).toJson)
+    assert(ok.get("rowsRead").asLong == 10 && ok.get("rowsFiltered").asLong == 4 &&
+      ok.get("rowsWritten").asLong == 6 && ok.get("durationMs").asLong == 123)
+
+    val err = new java.io.ByteArrayOutputStream()
+    val runner = ScheduledRunner.forTest(() => throw new IllegalStateException(),
+      Schedule.parse("@every 1h"))
+    Console.withErr(err)(assert(runner.guardedTick()))
+    runner.stop()
+    val lines = err.toString("UTF-8").linesIterator.toSeq
+    assert(lines.size == 1)
+    val failed = json.readTree(lines.head)
+    assert(failed.get("error").asText == "java.lang.IllegalStateException")
+    assert(failed.get("message").isNull)
+    val quoted = json.readTree(RunStats.failureJson(new RuntimeException("a \"b\"\n")))
+    assert(quoted.get("message").asText == "a \"b\"\n")
   }
 }

@@ -1,8 +1,13 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.TestListenerBus
 import org.apache.spark.sql.SaveMode
-import graft.pipeline.{Transfer, Window}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import graft.pipeline.{RunStats, Transfer, Window}
 import graft.sources.FileConnector
 
 /** M1 end-to-end: the full reference pipeline semantics (scan → project →
@@ -60,5 +65,55 @@ class TransferSpec extends SparkSpec {
     val windowed = Transfer.plan(src, Transfer.Config("events", "x",
       window = Some(Window("ts", "timestamp'2024-01-01'", "timestamp'2024-01-08'")))).count()
     assert(windowed > 0 && windowed < all)
+  }
+
+  test("rows appended to a parquet source between ticks are read and written") {
+    val tmp = Files.createTempDirectory("graft-transfer-grow").toString
+    def rows(from: Long, to: Long) =
+      spark.range(from, to).select(col("id"), (col("id") * 3).as("v"))
+    rows(0, 100).write.parquet(s"$tmp/src/t.parquet")
+    val src = new FileConnector(spark, s"$tmp/src")
+    val sink = new FileConnector(spark, s"$tmp/dst")
+    val cfg = Transfer.Config(table = "t", target = "t", increment = true)
+
+    assert(Transfer.run(src, sink, cfg).copy(durationMs = 0) == RunStats(100, 0, 100, 0))
+    rows(100, 150).write.mode(SaveMode.Append).parquet(s"$tmp/src/t.parquet")
+    assert(Transfer.run(src, sink, cfg).copy(durationMs = 0) == RunStats(150, 100, 50, 0))
+    assert(sink.read("t").count() == 150)
+  }
+
+  test("an incremental tick is one SQL execution") {
+    val tmp = Files.createTempDirectory("graft-transfer-exec").toString
+    val src = new FileConnector(spark, sf0001)
+    val sink = new FileConnector(spark, tmp)
+    val cfg = Transfer.Config(table = "events", target = "out",
+      fields = Seq("event_id", "user_id", "event_type", "value"),
+      window = Some(Window("user_id", "0", "25")), increment = true)
+    Transfer.run(src, sink, cfg)
+
+    val executions = new AtomicInteger()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = executions.incrementAndGet()
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = executions.incrementAndGet()
+    }
+    TestListenerBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      val second = Transfer.run(src, sink, cfg)
+      assert(second.rowsRead > 0 && second.rowsWritten == 0)
+      TestListenerBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(executions.get == 1)
+  }
+
+  test("an empty window counts zero rows, cold and rerun") {
+    val tmp = Files.createTempDirectory("graft-transfer-empty").toString
+    val src = new FileConnector(spark, sf0001)
+    val sink = new FileConnector(spark, tmp)
+    val cfg = Transfer.Config(table = "events", target = "out",
+      fields = Seq("event_id", "user_id"),
+      window = Some(Window("user_id", "-10", "-1")), increment = true)
+    assert(Transfer.run(src, sink, cfg).copy(durationMs = 0) == RunStats(0, 0, 0, 0))
+    assert(Transfer.run(src, sink, cfg).copy(durationMs = 0) == RunStats(0, 0, 0, 0))
   }
 }
