@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.pipeline.RunStats
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. Each query gets one untimed warmup execution
@@ -25,6 +26,8 @@ import org.apache.spark.sql.SparkSession
   *     The re-pass folds into each query's reported min, so a transient
   *     mid-run burst cannot define any reported figure; the raw re-pass
   *     walls are also emitted so the recovery itself is visible.
+  *   - `errors`: per failed query, its exception class and message
+  *     (`RunStats.failureJson`).
   */
 object Bench {
   // Process CPU time (all JVM threads — in local mode that includes the
@@ -116,54 +119,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Default matches the driver's environment (local[32]) so local bench
     // numbers predict driver bench numbers.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Ad-hoc A/B confs: SPARK_GRAFT_EXTRA_CONF="k=v;k=v" (driver sets
-    // nothing — local measurement iteration only).
-    val extra = sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", "")
-      .split(";").filter(_.contains("=")).map { kv =>
-        val Array(k, v) = kv.split("=", 2); (k, v)
-      }
-    val spark = extra.foldLeft(SparkSession.builder()
-      .master(s"local[$cpus]"))((b, kv) => b.config(kv._1, kv._2))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Never the bypass-merge shuffle writer: with R reduce partitions
-      // it opens R files per MAP TASK and concatenates them through
-      // FileChannel.transferTo — thousands of file opens/syscalls per
-      // small shuffle (sampled stacks: most of each map task's wall sat
-      // in writePartitionedData). The sort writer streams one file per
-      // task. At production scale reduce counts exceed the 200 default
-      // threshold anyway (bypass never fires), so pinning 0 only removes
-      // the small-shuffle pathology; env-overridable for A/B.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "0"))
-      // AQE partition coalescing keeps its parallelism-first intent, but
-      // the default 1 MB floor collapses SMALL shuffles whose downstream
-      // work is CPU-heavy: the ngram-Jaccard candidate verify (a ~3 MB
-      // exchange fanning into array merge-scans) was coalesced to 3
-      // partitions — 3 of 32 cores busy for the query's whole tail. A
-      // 64 KB floor lets parallelism-first reach the core count on small
-      // exchanges; at scale totalSize/parallelism >> both floors, so
-      // this is a no-op there. Env-overridable for A/B.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"))
-      // Join-strategy preference kept at the Spark default (sort-merge
-      // first). Measured BOTH ways: warm 6-12-query subsets favored
-      // shuffled-hash (8.6→6.9 s), but the FULL 322-query suite said
-      // the opposite — 111.4 s (SMJ) vs 125.0 s (SHJ), median
-      // per-query ratio 1.10, worst entries bloom_incremental_dedup
-      // 0.40→1.14 s and lm_bigram_surprisal 0.66→1.29 s (hash builds
-      // churn allocation + codegen-cache pressure across many distinct
-      // plans in one session). Subset A/Bs are a trap for session-wide
-      // knobs; env hook kept for future A/B.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "true"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
-    // custom strategy + optimizer rules + SQL functions (idempotent)
-    GraftExtensions.register(spark)
     val coresStart = effectiveCores()
     // The timed action is a noop-format write: every output row is fully
     // materialized through the executed plan, so projections, sorts and
@@ -212,6 +169,8 @@ object Bench {
       .filter { case (n, _) => onlyQ.forall(_.contains(n)) }
     val samples = scala.collection.mutable.Map[String, List[Sample]]()
     val failed = scala.collection.mutable.Set[String]()
+    // query -> RunStats.failureJson of its failure (exception class + message)
+    val errors = scala.collection.mutable.Map[String, String]()
     // Wall-clock budget: the first pass ALWAYS completes (every query
     // gets one warm-adjacent sample — a partial run that times out
     // upstream would report nothing at all), later passes only start a
@@ -230,7 +189,7 @@ object Bench {
     def sampleOne(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit = {
       try samples(name) = timed(fn) :: samples.getOrElse(name, Nil)
-      catch { case _: Throwable => failed += name }
+      catch { case e: Throwable => failed += name; errors(name) = RunStats.failureJson(e) }
       finally spark.catalog.clearCache()
     }
     def pass(only: String => Boolean, bounded: Boolean): Unit =
@@ -315,10 +274,13 @@ object Bench {
     val confirmQs = confirm.toSeq.sortBy(_._1)
       .map { case (k, w) => "\"" + k + "\":" + fmt(w) }
       .mkString("{", ",", "}")
+    val errorQs = errors.toSeq.sortBy(_._1)
+      .map { case (k, e) => "\"" + k + "\":" + e }
+      .mkString("{", ",", "}")
     val probe = s"""{"cores_start":${fmt(coresStart)},"cores_end":${fmt(coresEnd)}}"""
     val total = results.map(_._2.wall).filter(_ >= 0).sum
     val full =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"cpu":$cpuQs,"gc":$gcQs,"majflt":$mfQs,"confirm":$confirmQs,"probe":$probe,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"cpu":$cpuQs,"gc":$gcQs,"majflt":$mfQs,"confirm":$confirmQs,"errors":$errorQs,"probe":$probe,"sf":"$sfDir"}"""
     println(full)
     // Run-stamped persistence: first free BENCH_FULL_<n>.json slot,
     // created atomically (CREATE_NEW) so two concurrent runs can never

@@ -12,7 +12,8 @@ import graft.plans.{RegexPrefixRewrite, TopKStrategy}
   *   - `spark.sql.extensions=graft.GraftExtensions` (config path, applies
   *     at session build — the spark-submit way), or
   *   - `graft.GraftExtensions.register(spark)` at runtime on an existing
-  *     session (what the library entry points use).
+  *     session. Every entry point of this repo registers through
+  *     [[GraftSession]]; call it yourself on a session built elsewhere.
   *
   * Registers the TopKPerKey planner strategy and the SQL functions
   * enumerated in [[GraftExtensions.functions]] — that Seq is the single

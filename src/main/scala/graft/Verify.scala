@@ -1,46 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.pipeline.RunStats
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // Same default as Bench: the driver environment is local[32].
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Never the bypass-merge shuffle writer: with R reduce partitions
-      // it opens R files per MAP TASK and concatenates them through
-      // FileChannel.transferTo — thousands of file opens/syscalls per
-      // small shuffle (sampled stacks: most of each map task's wall sat
-      // in writePartitionedData). The sort writer streams one file per
-      // task. At production scale reduce counts exceed the 200 default
-      // threshold anyway (bypass never fires), so pinning 0 only removes
-      // the small-shuffle pathology; env-overridable for A/B.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "0"))
-      // AQE partition coalescing keeps its parallelism-first intent, but
-      // the default 1 MB floor collapses SMALL shuffles whose downstream
-      // work is CPU-heavy: the ngram-Jaccard candidate verify (a ~3 MB
-      // exchange fanning into array merge-scans) was coalesced to 3
-      // partitions — 3 of 32 cores busy for the query's whole tail. A
-      // 64 KB floor lets parallelism-first reach the core count on small
-      // exchanges; at scale totalSize/parallelism >> both floors, so
-      // this is a no-op there. Env-overridable for A/B.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"))
-      // Same join-strategy posture as Bench (guide §3.1/§9): correctness
-      // runs exercise the same plans the bench times.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
-    // custom strategy + optimizer rules + SQL functions (idempotent)
-    GraftExtensions.register(spark)
     new java.io.File(outDir).mkdirs()
     // Local-iteration filter (comma-separated names); driver sets nothing.
     val only = sys.env.get("GRAFT_VERIFY_ONLY")
@@ -54,7 +21,7 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] $name failed: ${RunStats.failureJson(e)}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -2,6 +2,7 @@ package graft.cli
 
 import org.apache.spark.sql.SparkSession
 
+import graft.GraftSession
 import graft.pipeline.{RunStats, Schedule, ScheduledRunner, Transfer, Window}
 import graft.sources.{Connector, FileConnector, JdbcConnector}
 
@@ -29,9 +30,10 @@ import graft.sources.{Connector, FileConnector, JdbcConnector}
   * scheme — the reference ships a separate binary per engine);
   * `-consumer` has no equivalent because the provider/consumer gRPC pair
   * collapses into a single Spark job (SURVEY §2.7). `-workers` maps to
-  * JDBC scan/write partitions — Spark's executor pool replaces the
-  * reference's query-worker pool. `-once` exists so batch schedulers
-  * (Airflow etc.) can own the cron instead.
+  * JDBC scan/write partitions and to the [[GraftSession]] core count —
+  * Spark's executor pool replaces the reference's query-worker pool.
+  * `-once` exists so batch schedulers (Airflow etc.) can own the cron
+  * instead.
   *
   * Validation mirrors `readConf` (`clickhouse/reader/main.go:68-92`):
   * non-empty from/to, non-empty fields, no spaces inside field names,
@@ -159,11 +161,7 @@ object GraftCli {
         System.err.println(s"Invalid arguments, error: ${e.getMessage}")
         sys.exit(1)
       }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[${c.workers}]"))
-      .config("spark.sql.shuffle.partitions", math.max(c.workers, 1))
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("graft-transfer").getOrCreate()
+    val spark = GraftSession(math.max(c.workers, 1))
     if (c.once) println(runOnce(spark, c).toJson)
     else {
       val (src, sink) = connectors(spark, c)

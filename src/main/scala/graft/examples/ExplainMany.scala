@@ -12,8 +12,8 @@ object ExplainMany {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Profiling.session()
-    graft.GraftExtensions.register(spark)
+    val spark = graft.GraftSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       if (only.forall(_.contains(name))) {
@@ -24,7 +24,7 @@ object ExplainMany {
             java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"),
             plan.getBytes("UTF-8"))
         } catch { case e: Throwable =>
-          System.err.println(s"[explain] $name failed: ${e.getMessage}")
+          System.err.println(s"[explain] $name failed: ${graft.pipeline.RunStats.failureJson(e)}")
         }
       }
     }

@@ -1,7 +1,6 @@
 package graft.examples
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import graft.streaming.StreamingPipeline
 
@@ -12,10 +11,7 @@ import graft.streaming.StreamingPipeline
 object StreamingDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession(8)
     spark.sparkContext.setLogLevel("ERROR")
 
     val tgt = Files.createTempDirectory("graft-sdemo-tgt").toString

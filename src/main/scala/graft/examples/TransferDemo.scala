@@ -1,6 +1,5 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import graft.functions.RowHash
 import graft.pipeline.{Transfer, Window}
 import graft.sources.FileConnector
@@ -12,14 +11,7 @@ import graft.sources.FileConnector
 object TransferDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-transfer-demo")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession(8)
     spark.sparkContext.setLogLevel("ERROR")
 
     val tmp = java.nio.file.Files.createTempDirectory("graft-demo").toString
@@ -58,7 +50,6 @@ object TransferDemo {
     println("MEDIA FEATURES: " + feats.orderBy("media_id").head())
 
     // SQL surface: the custom expressions registered for spark.sql users.
-    graft.GraftExtensions.register(spark)
     docs.createOrReplaceTempView("docs")
     println("SQL HASH: " + spark.sql(
       "SELECT graft_row_hash(CAST(doc_id AS STRING), lang, source) AS h " +

@@ -24,10 +24,10 @@ import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
   *  - NANOS: rebuilt via `timestamp_micros(col div 1000)` — a floor to
   *    microseconds, exactly what DuckDB's `CAST(ts_ns AS TIMESTAMP)` does,
   *    keeping the oracle comparison aligned.
-  *  - NTZ: `cast(TimestampType)`. The session time zone is pinned UTC in
-  *    every entry point, so the cast reinterprets the same wall-clock
-  *    micros value as the same instant — the identity the DuckDB oracle
-  *    (which is TZ-naive) already assumes.
+  *  - NTZ: `cast(TimestampType)`. `GraftSession` pins the session time
+  *    zone to UTC for every entry point, so the cast reinterprets the
+  *    same wall-clock micros value as the same instant — the identity
+  *    the DuckDB oracle (which is TZ-naive) already assumes.
   *
   * Mirrors the reference's own datetime funneling, which converts every
   * MySQL temporal type to one canonical ClickHouse DateTime
@@ -38,7 +38,7 @@ object Tables {
   /** Fold every `TimestampNTZType` column of `df` into session-TZ
     * `TimestampType` (identity under the pinned-UTC session).
     */
-  def normalizeNtz(df: DataFrame): DataFrame =
+  private def normalizeNtz(df: DataFrame): DataFrame =
     df.schema.fields.foldLeft(df) { (d, f) =>
       if (f.dataType == TimestampNTZType)
         d.withColumn(f.name, col(f.name).cast(TimestampType))
@@ -46,7 +46,7 @@ object Tables {
     }
 
   /** Column names in `path` whose parquet logical type is TIMESTAMP(NANOS). */
-  def nanosTimestampCols(spark: SparkSession, path: String): Seq[String] = {
+  private def nanosTimestampCols(spark: SparkSession, path: String): Seq[String] = {
     val conf = spark.sessionState.newHadoopConf()
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
@@ -68,6 +68,15 @@ object Tables {
     } finally reader.close()
   }
 
+  /** Fold every timestamp encoding of `df`, a batch or streaming scan of
+    * the parquet at `path` read with `nanosAsLong`, into session-TZ
+    * TimestampType: NANOS-as-long columns rebuilt from micros, NTZ cast.
+    */
+  def normalizeTimestamps(spark: SparkSession, path: String, df: DataFrame): DataFrame =
+    normalizeNtz(nanosTimestampCols(spark, path).foldLeft(df) { (d, c) =>
+      d.withColumn(c, expr(s"timestamp_micros(`$c` div 1000)"))
+    })
+
   /** Read `dir/name.parquet` with every timestamp encoding (NANOS-as-long,
     * NTZ-micros, LTZ-micros) normalized to session-TZ TimestampType. Each
     * call lists the files and reads a footer anew, so a table that grows
@@ -76,10 +85,7 @@ object Tables {
   def read(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(path)
-    normalizeNtz(nanosTimestampCols(spark, path).foldLeft(df) { (d, c) =>
-      d.withColumn(c, expr(s"timestamp_micros(`$c` div 1000)"))
-    })
+    normalizeTimestamps(spark, path, spark.read.parquet(path))
   }
 
   // Fixture memo: building a DataFrame costs a driver file listing, a

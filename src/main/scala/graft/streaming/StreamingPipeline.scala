@@ -25,8 +25,8 @@ object StreamingPipeline {
     * normalization the batch loader applies.
     */
   def streamTable(spark: SparkSession, dir: String, name: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$dir/$name.parquet"
+    // sets nanosAsLong, so the schema read below sees NANOS as longs
     val batch = graft.sources.Tables.load(spark, dir, name)
     // The file stream source needs a DIRECTORY base path. A single-file
     // table streams from its parent dir with a glob filter; a
@@ -45,11 +45,8 @@ object StreamingPipeline {
       else
         spark.readStream.schema(schema)
           .option("pathGlobFilter", s"$name.parquet").parquet(dir)
-    val normalized = graft.sources.Tables.normalizeNtz(
-      graft.sources.Tables.nanosTimestampCols(spark, path).foldLeft(raw) { (d, c) =>
-        d.withColumn(c, expr(s"timestamp_micros(`$c` div 1000)"))
-      })
-    normalized.select(batch.columns.map(col).toIndexedSeq: _*)
+    graft.sources.Tables.normalizeTimestamps(spark, path, raw)
+      .select(batch.columns.map(col).toIndexedSeq: _*)
   }
 
   /** One incremental run: process everything not yet in the checkpoint,
