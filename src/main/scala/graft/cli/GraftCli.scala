@@ -162,7 +162,17 @@ object GraftCli {
         sys.exit(1)
       }
     val spark = GraftSession(math.max(c.workers, 1))
-    if (c.once) println(runOnce(spark, c).toJson)
+    if (c.once) {
+      // a failed run prints the same one-line JSON a failed scheduled
+      // tick prints, and exits non-zero
+      val stats =
+        try runOnce(spark, c)
+        catch { case e: Throwable =>
+          Console.err.println(RunStats.failureJson(e))
+          sys.exit(1)
+        }
+      println(stats.toJson)
+    }
     else {
       val (src, sink) = connectors(spark, c)
       val runner = new ScheduledRunner(src, sink, transferConfig(c),

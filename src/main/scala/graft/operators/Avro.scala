@@ -1,30 +1,35 @@
 package graft.operators
 
-/** From-scratch Avro OBJECT CONTAINER FILE reader — the row format
-  * Hadoop-era training corpora and Kafka dumps ship in. Reads the
-  * documented layout (avro.apache.org spec): magic `Obj\1`, the
-  * file-metadata map (avro.schema JSON + avro.codec), the 16-byte
-  * sync marker, then blocks of (record count, byte size, codec-
-  * compressed data, sync) with the sync VERIFIED per block.
+import java.nio.charset.StandardCharsets.{US_ASCII, UTF_8}
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+import org.apache.avro.{NameValidator, Schema}
+import org.apache.avro.generic.{GenericDatumReader, GenericEnumSymbol, GenericFixed, IndexedRecord}
+import org.apache.avro.io.{Decoder, DecoderFactory}
+import org.apache.avro.util.Utf8
+
+/** Avro OBJECT CONTAINER FILE reader — the row format Hadoop-era
+  * training corpora and Kafka dumps ship in.
   *
-  * Schema: a root record of primitives (boolean, int, long, float,
-  * double, string, bytes), nullable unions, and — since r11 — the
-  * FULL nested shape set: records at any depth, arrays and maps
-  * (block-encoded with negative-count byte-size prefixes), enums,
-  * fixed, arbitrary unions, and named-type references (with logical
-  * types passing through as their base). Codecs — every one the
-  * reference implementation registers: null, deflate (raw, via the
-  * JDK), snappy (the from-scratch [[Snappy]] plus the 4-byte BE
-  * CRC32 suffix Avro appends), zstandard (via [[Zstd]]), bzip2 (via
-  * [[Bzip2]]), xz (via [[Xz]]). Other schema shapes and unregistered
-  * codec names stay named profile gaps, not damage.
+  * The container walk (magic `Obj\1`, the metadata map, the 16-byte
+  * sync marker, blocks of record count + byte size + data + sync, each
+  * sync checked) stays here, so every block is bounded by the blob and
+  * decompresses through this engine's capped codecs: null, deflate
+  * (JDK, read through [[Capped]]), snappy ([[Snappy]] plus the 4-byte
+  * BE CRC32 Avro appends), zstandard ([[Zstd]]), bzip2 ([[Bzip2]]), xz
+  * ([[Xz]]). The schema parses and the records decode through avro
+  * 1.12's `Schema.Parser` and `GenericDatumReader`, with string, bytes,
+  * array and map sizes checked before the library allocates.
   *
-  * Values decode per the binary encoding: zigzag varints for
-  * int/long, LE IEEE for float/double, length-prefixed bytes/string,
-  * union index then value. Pinned BOTH directions against the real
-  * Avro implementation on the classpath (DataFileWriter streams read
-  * here; [[synthAvro]] streams read back through DataFileReader).
-  * Degrade-don't-throw: null on damage.
+  * The root must be a non-empty record; field types render as
+  * "long", "string?" (a nullable union), "record<x:int>",
+  * "array<long>", "map<long>", "enum", "fixed(4)", "union<...>".
+  * Values: int/long to Long, float/double to Double, string to
+  * String, bytes/fixed to Array[Byte], records to [[ARec]], arrays to
+  * Vector, maps to a Vector of (key, value) in the library's (hash)
+  * order, enums to their symbol; logical types pass through as their
+  * base. Other schema shapes and unregistered codec names are named
+  * profile gaps, not damage. Degrade-don't-throw: null on damage.
   */
 object Avro {
 
@@ -37,154 +42,24 @@ object Avro {
       fields.find(_._1 == name).map(_._2).orNull
   }
 
-  // ---- schema ----------------------------------------------------------
+  private val Codecs = Set("null", "deflate", "snappy", "zstandard", "bzip2", "xz")
+  private val Cap = 1L << 26 // decompressed bytes per block
+  private val MaxItems = 1L << 24 // zero-byte (null) array or map entries per block
 
-  private val Primitives = Set("null", "boolean", "int", "long", "float",
-    "double", "string", "bytes")
+  /** A schema outside the subset or an unregistered codec. */
+  private final class Profile extends RuntimeException("profile", null, false, false)
 
-  private sealed trait AType
-  private final case class APrim(name: String) extends AType
-  private final case class ARecordT(fields: Vector[(String, AType)]) extends AType
-  private final case class AArrayT(elem: AType) extends AType
-  private final case class AMapT(value: AType) extends AType
-  private final case class AEnumT(symbols: Vector[String]) extends AType
-  private final case class AFixedT(size: Int) extends AType
-  private final case class AUnionT(branches: Vector[AType]) extends AType
+  def isAvro(b: Array[Byte]): Boolean =
+    b != null && b.length >= 4 && b(0) == 'O' && b(1) == 'b' &&
+      b(2) == 'j' && b(3) == 1
 
-  private final class SchemaErr extends RuntimeException(
-    "schema", null, false, false)
-
-  /** Recursive schema parse (records, arrays, maps, enums, fixed,
-    * arbitrary unions, named-type references; logical types pass
-    * through as their base). Registry maps fullnames to defined
-    * named types.
-    */
-  private def parseType(v: Any,
-      reg: scala.collection.mutable.LinkedHashMap[String, AType],
-      depth: Int): AType = {
-    if (depth > 32) throw new SchemaErr
-    v match {
-      case s: String =>
-        if (Primitives(s)) APrim(s)
-        else reg.getOrElse(s, throw new SchemaErr)
-      case a: scala.collection.mutable.ArrayBuffer[_] =>
-        if (a.isEmpty) throw new SchemaErr
-        AUnionT(a.map(parseType(_, reg, depth + 1)).toVector)
-      case m0: scala.collection.mutable.LinkedHashMap[_, _] =>
-        val m = m0.asInstanceOf[
-          scala.collection.mutable.LinkedHashMap[String, Any]]
-        m.getOrElse("type", null) match {
-          case "record" | "error" =>
-            val fields = m.getOrElse("fields", null) match {
-              case fa: scala.collection.mutable.ArrayBuffer[_] => fa
-              case _ => throw new SchemaErr
-            }
-            val fs = scala.collection.mutable.ArrayBuffer.empty[(String, AType)]
-            // names register AFTER the body parses: self-recursive
-            // references (legal in avro, but unterminating to decode
-            // eagerly) fail the parse instead of looping
-            fields.foreach {
-              case f0: scala.collection.mutable.LinkedHashMap[_, _] =>
-                val f = f0.asInstanceOf[
-                  scala.collection.mutable.LinkedHashMap[String, Any]]
-                val n = f.getOrElse("name", null) match {
-                  case s: String => s
-                  case _ => throw new SchemaErr
-                }
-                fs += ((n, parseType(f.getOrElse("type", null), reg,
-                  depth + 1)))
-              case _ => throw new SchemaErr
-            }
-            val t = ARecordT(fs.toVector)
-            register(m, reg, t)
-            t
-          case "enum" =>
-            val syms = m.getOrElse("symbols", null) match {
-              case sa: scala.collection.mutable.ArrayBuffer[_] =>
-                sa.collect { case s: String => s }.toVector
-              case _ => throw new SchemaErr
-            }
-            if (syms.isEmpty) throw new SchemaErr
-            val t = AEnumT(syms)
-            register(m, reg, t)
-            t
-          case "fixed" =>
-            val size = m.getOrElse("size", null) match {
-              case d: Double if d >= 0 && d <= (1 << 24) => d.toInt
-              case _ => throw new SchemaErr
-            }
-            val t = AFixedT(size)
-            register(m, reg, t)
-            t
-          case "array" =>
-            AArrayT(parseType(m.getOrElse("items", null), reg, depth + 1))
-          case "map" =>
-            AMapT(parseType(m.getOrElse("values", null), reg, depth + 1))
-          case s: String if Primitives(s) => APrim(s) // logical types
-          case s: String => reg.getOrElse(s, throw new SchemaErr)
-          case _ => throw new SchemaErr
-        }
-      case _ => throw new SchemaErr
-    }
-  }
-
-  /** Register a named type under both its short and full names —
-    * references in real schemas (iceberg manifests included) use
-    * either form.
-    */
-  private def register(m: scala.collection.mutable.LinkedHashMap[String, Any],
-      reg: scala.collection.mutable.LinkedHashMap[String, AType],
-      t: AType): Unit =
-    m.getOrElse("name", null) match {
-      case n: String =>
-        reg(n) = t
-        m.getOrElse("namespace", null) match {
-          case ns: String if !n.contains('.') => reg(ns + "." + n) = t
-          case _ => ()
-        }
-      case _ => ()
-    }
-
-  /** Rendered field type: flat primitives keep their historical
-    * strings ("long", "string?"), nested shapes render recursively.
-    */
-  private def typeString(t: AType): String = t match {
-    case APrim(n) => n
-    case AUnionT(Vector(APrim("null"), x)) => typeString(x) + "?"
-    case AUnionT(Vector(x, APrim("null"))) => typeString(x) + "?"
-    case AUnionT(bs) => "union<" + bs.map(typeString).mkString(",") + ">"
-    case ARecordT(fs) =>
-      "record<" + fs.map { case (n, ft) => n + ":" + typeString(ft) }
-        .mkString(",") + ">"
-    case AArrayT(e) => "array<" + typeString(e) + ">"
-    case AMapT(v) => "map<" + typeString(v) + ">"
-    case AEnumT(_) => "enum"
-    case AFixedT(n) => s"fixed($n)"
-  }
-
-  /** Root record parse; null when the schema is outside the subset
-    * (non-record root, empty root, malformed).
-    */
-  private def parseSchema(json: String): (Array[String], Array[AType]) = try {
-    val root = MiniJson.parse(json)
-    val reg = scala.collection.mutable.LinkedHashMap.empty[String, AType]
-    parseType(root, reg, 0) match {
-      case ARecordT(fields) if fields.nonEmpty =>
-        (fields.map(_._1).toArray, fields.map(_._2).toArray)
-      case _ => null // zero-byte or non-record roots: out of subset
-    }
-  } catch { case _: RuntimeException => null }
-
-  // ---- binary decoding -------------------------------------------------
-
-  private final class Bin(val b: Array[Byte]) {
-    var p = 0
-    def varlong(): Long = { // zigzag
+  /** The container framing: zigzag varints and length-checked slices. */
+  private final class Frame(b: Array[Byte], var p: Int) {
+    def varlong(): Long = {
       var v = 0L
       var shift = 0
       while (true) {
-        if (p >= b.length || shift > 63)
-          throw new IllegalArgumentException("varint")
+        if (p >= b.length || shift > 63) throw new IllegalArgumentException("varint")
         val c = b(p) & 0xFF
         p += 1
         v |= (c & 0x7FL) << shift
@@ -193,125 +68,202 @@ object Avro {
       }
       0L
     }
-    def bytes(n: Int): Array[Byte] = {
-      if (n < 0 || p + n > b.length)
-        throw new IllegalArgumentException("bytes")
-      val r = java.util.Arrays.copyOfRange(b, p, p + n)
-      p += n
+    def bytes(n: Long): Array[Byte] = {
+      if (n < 0 || n > b.length - p) throw new IllegalArgumentException("bytes")
+      val r = java.util.Arrays.copyOfRange(b, p, p + n.toInt)
+      p += n.toInt
       r
     }
-    /** Validate a 64-bit length against the remaining buffer BEFORE the
-      * Int narrowing: a damaged length like 2^32+5 would otherwise
-      * truncate to 5 and mis-read a corrupt block instead of failing.
-      */
-    def len(n: Long): Int = {
-      if (n < 0 || n > b.length - p)
-        throw new IllegalArgumentException("len")
+    /** The metadata map; leaves the frame at the sync marker. */
+    def meta(): Map[String, Array[Byte]] = {
+      val m = Map.newBuilder[String, Array[Byte]]
+      var n = varlong()
+      while (n != 0) {
+        val cnt = if (n < 0) { varlong(); -n } else n
+        var i = 0L
+        while (i < cnt) {
+          m += new String(bytes(varlong()), UTF_8) -> bytes(varlong())
+          i += 1
+        }
+        n = varlong()
+      }
+      m.result()
+    }
+  }
+
+  /** Rendered field type; throws [[Profile]] past a nesting depth a
+    * recursive schema would exceed.
+    */
+  private def typeString(t: Schema, depth: Int = 0): String = {
+    if (depth > 32) throw new Profile
+    def ts(x: Schema) = typeString(x, depth + 1)
+    t.getType match {
+      case Schema.Type.UNION =>
+        t.getTypes.asScala.toSeq match {
+          case Seq(a, x) if a.getType == Schema.Type.NULL => ts(x) + "?"
+          case Seq(x, a) if a.getType == Schema.Type.NULL => ts(x) + "?"
+          case bs => bs.map(ts).mkString("union<", ",", ">")
+        }
+      case Schema.Type.RECORD =>
+        t.getFields.asScala.map(f => f.name + ":" + ts(f.schema))
+          .mkString("record<", ",", ">")
+      case Schema.Type.ARRAY => "array<" + ts(t.getElementType) + ">"
+      case Schema.Type.MAP => "map<" + ts(t.getValueType) + ">"
+      case Schema.Type.ENUM => "enum"
+      case Schema.Type.FIXED => s"fixed(${t.getFixedSize})"
+      case p => p.getName
+    }
+  }
+
+  /** A container schema as this reader uses it: the root's field names
+    * and rendered types, its datum reader, and the (name, position)
+    * pairs of each record schema [[value]] meets. [[Profile]] when the
+    * schema is outside the subset.
+    */
+  private final class Compiled(json: String) {
+    private val schema =
+      try new Schema.Parser(NameValidator.NO_VALIDATION)
+        .setValidateDefaults(false).parse(json)
+      catch { case NonFatal(_) => throw new Profile }
+    if (schema.getType != Schema.Type.RECORD || schema.getFields.isEmpty)
+      throw new Profile
+    val names: Array[String] = schema.getFields.asScala.map(_.name).toArray
+    val types: Array[String] = schema.getFields.asScala.map(f => typeString(f.schema)).toArray
+    val reader = new GenericDatumReader[AnyRef](schema)
+    val records = new java.util.IdentityHashMap[Schema, Vector[(String, Int)]]()
+  }
+
+  /** Compiled schemas by their JSON, per thread (the datum reader is
+    * not shared across threads): parsing a schema and building its
+    * reader costs more than decoding a small container, and a corpus
+    * repeats a few schemas.
+    */
+  private val compiled = ThreadLocal.withInitial[java.util.Map[String, Compiled]](() =>
+    new java.util.LinkedHashMap[String, Compiled](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[String, Compiled]): Boolean =
+        size > 64
+    })
+
+  /** The container's compiled schema and codec; [[Profile]] when
+    * outside the subset, other exceptions on damage.
+    */
+  private def header(f: Frame): (Compiled, String) = {
+    val meta = f.meta()
+    val codec = meta.get("avro.codec").map(new String(_, US_ASCII)).getOrElse("null")
+    val json = new String(meta.getOrElse("avro.schema",
+      throw new IllegalArgumentException("no schema")), UTF_8)
+    val cache = compiled.get
+    var c = cache.get(json)
+    if (c == null) { c = new Compiled(json); cache.put(json, c) }
+    (c, codec)
+  }
+
+  /** The block's binary decoder with every size a value declares checked
+    * before the library allocates it: a string or bytes value against
+    * the block length, the array and map entries of the whole block
+    * against the block length plus [[MaxItems]] (entries of any type
+    * but null take at least one byte).
+    */
+  private final class Guarded(d: Decoder, limit: Int) extends Decoder {
+    private var items = 0L
+    private def len(n: Long): Int = {
+      if (n < 0 || n > limit) throw new IllegalArgumentException("length")
       n.toInt
     }
-    def varlen(): Int = len(varlong())
-  }
-
-  private def readValue(in: Bin, tpe: AType, depth: Int): Any = {
-    if (depth > 48) throw new IllegalArgumentException("depth")
-    tpe match {
-      case APrim(p) => p match {
-        case "null" => null
-        case "boolean" =>
-          val v = in.bytes(1)(0)
-          if (v != 0 && v != 1) throw new IllegalArgumentException("bool")
-          v == 1
-        case "int" | "long" => in.varlong()
-        case "float" =>
-          val r = in.bytes(4)
-          java.lang.Float.intBitsToFloat((r(0) & 0xFF) | ((r(1) & 0xFF) << 8) |
-            ((r(2) & 0xFF) << 16) | ((r(3) & 0xFF) << 24)).toDouble
-        case "double" =>
-          val r = in.bytes(8)
-          var bits = 0L
-          for (i <- 0 until 8) bits |= (r(i) & 0xFFL) << (8 * i)
-          java.lang.Double.longBitsToDouble(bits)
-        case "string" =>
-          new String(in.bytes(in.varlen()),
-            java.nio.charset.StandardCharsets.UTF_8)
-        case _ => in.bytes(in.varlen()) // bytes
-      }
-      case ARecordT(fields) =>
-        ARec(fields.map { case (n, ft) =>
-          n -> readValue(in, ft, depth + 1)
-        })
-      case AArrayT(elem) =>
-        val out = Vector.newBuilder[Any]
-        var total = 0L
-        var n = in.varlong()
-        while (n != 0) {
-          val cnt = if (n < 0) { in.varlong(); -n } else n
-          total += cnt
-          if (total > (1L << 24)) throw new IllegalArgumentException("array bomb")
-          var i = 0L
-          while (i < cnt) { out += readValue(in, elem, depth + 1); i += 1 }
-          n = in.varlong()
-        }
-        out.result()
-      case AMapT(value) =>
-        val out = Vector.newBuilder[(String, Any)]
-        var total = 0L
-        var n = in.varlong()
-        while (n != 0) {
-          val cnt = if (n < 0) { in.varlong(); -n } else n
-          total += cnt
-          if (total > (1L << 24)) throw new IllegalArgumentException("map bomb")
-          var i = 0L
-          while (i < cnt) {
-            val k = new String(in.bytes(in.varlen()),
-              java.nio.charset.StandardCharsets.UTF_8)
-            out += (k -> readValue(in, value, depth + 1))
-            i += 1
-          }
-          n = in.varlong()
-        }
-        out.result()
-      case AEnumT(symbols) =>
-        val idx = in.varlong()
-        if (idx < 0 || idx >= symbols.length)
-          throw new IllegalArgumentException("enum")
-        symbols(idx.toInt)
-      case AFixedT(size) => in.bytes(size)
-      case AUnionT(branches) =>
-        val idx = in.varlong()
-        if (idx < 0 || idx >= branches.length)
-          throw new IllegalArgumentException("union")
-        readValue(in, branches(idx.toInt), depth + 1)
+    private def count(n: Long): Long = {
+      items += math.abs(n)
+      if (items > limit + MaxItems) throw new IllegalArgumentException("item bomb")
+      n
     }
+    private def slice(): Array[Byte] = {
+      val r = new Array[Byte](len(d.readLong()))
+      d.readFixed(r)
+      r
+    }
+    def readNull(): Unit = d.readNull()
+    def readBoolean(): Boolean = d.readBoolean()
+    def readInt(): Int = d.readInt()
+    def readLong(): Long = d.readLong()
+    def readFloat(): Float = d.readFloat()
+    def readDouble(): Double = d.readDouble()
+    def readString(old: Utf8): Utf8 = new Utf8(slice())
+    def readString(): String = new String(slice(), UTF_8)
+    def skipString(): Unit = d.skipFixed(len(d.readLong()))
+    def readBytes(old: java.nio.ByteBuffer): java.nio.ByteBuffer =
+      java.nio.ByteBuffer.wrap(slice())
+    def skipBytes(): Unit = d.skipFixed(len(d.readLong()))
+    def readFixed(bytes: Array[Byte], start: Int, length: Int): Unit =
+      d.readFixed(bytes, start, length)
+    def skipFixed(length: Int): Unit = d.skipFixed(length)
+    def readEnum(): Int = d.readEnum()
+    def readArrayStart(): Long = count(d.readArrayStart())
+    def arrayNext(): Long = count(d.arrayNext())
+    def skipArray(): Long = count(d.skipArray())
+    def readMapStart(): Long = count(d.readMapStart())
+    def mapNext(): Long = count(d.mapNext())
+    def skipMap(): Long = count(d.skipMap())
+    def readIndex(): Int = d.readIndex()
   }
 
-  // ---- the container walk ---------------------------------------------
-
-  def isAvro(b: Array[Byte]): Boolean =
-    b != null && b.length >= 4 && b(0) == 'O' && b(1) == 'b' &&
-      b(2) == 'j' && b(3) == 1
-
-  /** The ONE metadata-map walk read() and unsupportedProfile()
-    * share: blocks of (count, entries), 0 terminates, a negative
-    * count carrying a byte size after it. Leaves `in` positioned at
-    * the sync marker. Throws like the Bin primitives on damage.
+  /** A decoded datum in this reader's value model; `fields` caches each
+    * record schema's (name, position) pairs. Scalars are matched first:
+    * they are most values, and class tests are cheaper than interface
+    * tests.
     */
-  private def readMeta(in: Bin):
-      scala.collection.mutable.LinkedHashMap[String, Array[Byte]] = {
-    val meta = scala.collection.mutable.LinkedHashMap.empty[String, Array[Byte]]
-    var n = in.varlong()
-    while (n != 0) {
-      val cnt = if (n < 0) { in.varlong(); -n } else n
-      var i = 0L
-      while (i < cnt) {
-        val k = new String(in.bytes(in.varlen()),
-          java.nio.charset.StandardCharsets.UTF_8)
-        meta(k) = in.bytes(in.varlen())
-        i += 1
+  private def value(v: Any,
+      fields: java.util.IdentityHashMap[Schema, Vector[(String, Int)]]): Any = v match {
+    case null => null
+    case x: java.lang.Long => x
+    case u: Utf8 => u.toString
+    case x: java.lang.Double => x
+    case i: java.lang.Integer => i.longValue
+    case x: java.lang.Boolean => x
+    case x: java.lang.Float => x.doubleValue
+    case bb: java.nio.ByteBuffer =>
+      java.util.Arrays.copyOfRange(bb.array, bb.arrayOffset + bb.position,
+        bb.arrayOffset + bb.limit)
+    case r: IndexedRecord =>
+      var fs = fields.get(r.getSchema)
+      if (fs == null) {
+        fs = r.getSchema.getFields.asScala.map(f => (f.name, f.pos)).toVector
+        fields.put(r.getSchema, fs)
       }
-      n = in.varlong()
-    }
-    meta
+      ARec(fs.map { case (n, i) => (n, value(r.get(i), fields)) })
+    case l: java.util.List[_] =>
+      val b = Vector.newBuilder[Any]
+      l.forEach(x => b += value(x, fields))
+      b.result()
+    case m: java.util.Map[_, _] =>
+      val b = Vector.newBuilder[(String, Any)]
+      m.forEach((k, x) => b += ((k.toString, value(x, fields))))
+      b.result()
+    case e: GenericEnumSymbol[_] => e.toString
+    case x: GenericFixed => x.bytes
+    case x => x
+  }
+
+  /** One block's data, decompressed under [[Cap]]; null on damage. */
+  private def plain(codec: String, packed: Array[Byte]): Array[Byte] = codec match {
+    case "null" => packed
+    case "deflate" =>
+      val inf = new java.util.zip.Inflater(true)
+      try Capped.readAll(new java.util.zip.InflaterInputStream(
+        new java.io.ByteArrayInputStream(packed), inf, 1 << 16), Cap, packed.length * 4L)
+      finally inf.end()
+    case "snappy" =>
+      // avro appends a 4-byte BE CRC32 of the UNCOMPRESSED data
+      if (packed.length < 4) return null
+      val body = Snappy.decode(
+        java.util.Arrays.copyOfRange(packed, 0, packed.length - 4), Cap)
+      if (body == null) return null
+      val crc = new java.util.zip.CRC32()
+      crc.update(body)
+      val want = java.nio.ByteBuffer.wrap(packed, packed.length - 4, 4).getInt & 0xFFFFFFFFL
+      if (crc.getValue != want) null else body
+    case "zstandard" => Zstd.decode(packed, Cap)
+    case "bzip2" => Bzip2.decode(packed, Cap)
+    case "xz" => Xz.decode(packed, Cap)
+    case _ => throw new Profile // unregistered codec: named gap
   }
 
   /** Read the whole container; null on damage or an out-of-subset
@@ -319,109 +271,39 @@ object Avro {
     */
   def read(b: Array[Byte]): AvroFile = try {
     if (!isAvro(b)) return null
-    val in = new Bin(b)
-    in.p = 4
-    val meta = readMeta(in)
-    val sync = in.bytes(16)
-    val schemaJson = meta.get("avro.schema") match {
-      case Some(s) => new String(s, java.nio.charset.StandardCharsets.UTF_8)
-      case None => return null
-    }
-    val codec = meta.get("avro.codec")
-      .map(new String(_, java.nio.charset.StandardCharsets.US_ASCII))
-      .getOrElse("null")
-    val schema = parseSchema(schemaJson)
-    if (schema == null) return null
-    val (names, fieldTypes) = schema
-    val types = fieldTypes.map(typeString)
-    val rows = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
-    while (in.p < b.length) {
-      val count = in.varlong()
-      val size = in.varlong()
-      if (count < 0 || size < 0 || size > b.length - in.p) return null
-      if (count > (1L << 26)) return null // hostile row-count bomb
-      val packed = in.bytes(size.toInt)
-      val plain: Array[Byte] = codec match {
-        case "null" => packed
-        case "deflate" =>
-          val inf = new java.util.zip.Inflater(true)
-          try {
-            inf.setInput(packed)
-            val buf = new java.io.ByteArrayOutputStream(packed.length * 2)
-            val tmp = new Array[Byte](8192)
-            while (!inf.finished()) {
-              val m = inf.inflate(tmp)
-              if (m == 0 && !inf.finished()) return null
-              buf.write(tmp, 0, m)
-              if (buf.size() > (1 << 30)) return null // expansion bomb
-            }
-            buf.toByteArray
-          } finally inf.end()
-        case "snappy" =>
-          // avro appends a 4-byte BE CRC32 of the UNCOMPRESSED data
-          if (packed.length < 4) return null
-          val body = Snappy.decode(
-            java.util.Arrays.copyOfRange(packed, 0, packed.length - 4))
-          if (body == null) return null
-          val crc = new java.util.zip.CRC32()
-          crc.update(body)
-          val want =
-            ((packed(packed.length - 4) & 0xFFL) << 24) |
-              ((packed(packed.length - 3) & 0xFFL) << 16) |
-              ((packed(packed.length - 2) & 0xFFL) << 8) |
-              (packed(packed.length - 1) & 0xFFL)
-          if (crc.getValue != want) return null
-          body
-        case "zstandard" =>
-          val body = Zstd.decode(packed)
-          if (body == null) return null
-          body
-        case "bzip2" =>
-          val body = Bzip2.decode(packed, 1L << 30)
-          if (body == null) return null
-          body
-        case "xz" =>
-          val body = Xz.decode(packed, 1L << 30)
-          if (body == null) return null
-          body
-        case _ => return null // unknown codec: named gap
-      }
-      val bin = new Bin(plain)
+    val f = new Frame(b, 4)
+    val (c, codec) = header(f)
+    val sync = f.bytes(16)
+    val rows = Array.newBuilder[Array[Any]]
+    var decoder: org.apache.avro.io.BinaryDecoder = null
+    while (f.p < b.length) {
+      val count = f.varlong()
+      val size = f.varlong()
+      if (count < 0 || count > (1L << 26)) return null // row-count bomb
+      val data = plain(codec, f.bytes(size))
+      if (data == null) return null
+      decoder = DecoderFactory.get.binaryDecoder(data, decoder)
+      val in = new Guarded(decoder, data.length)
       var i = 0L
       while (i < count) {
-        val row = new Array[Any](fieldTypes.length)
-        for (f <- fieldTypes.indices) row(f) = readValue(bin, fieldTypes(f), 0)
-        rows += row
+        val r = c.reader.read(null, in).asInstanceOf[IndexedRecord]
+        rows += Array.tabulate[Any](c.names.length)(k => value(r.get(k), c.records))
         i += 1
       }
-      if (bin.p != plain.length) return null // trailing garbage
-      if (!java.util.Arrays.equals(in.bytes(16), sync)) return null
+      if (!decoder.isEnd) return null // trailing garbage
+      if (!java.util.Arrays.equals(f.bytes(16), sync)) return null
     }
-    AvroFile(names, types, rows.toArray)
-  } catch {
-    case _: IllegalArgumentException => null
-    case _: IndexOutOfBoundsException => null
-    case _: java.util.zip.DataFormatException => null
-  }
+    AvroFile(c.names.clone(), c.types.clone(), rows.result())
+  } catch { case NonFatal(_) => null }
 
   /** Structurally-sound container outside the subset: unsupported
     * codec or schema shape.
     */
   def unsupportedProfile(b: Array[Byte]): Boolean = try {
-    if (!isAvro(b)) return false
-    val in = new Bin(b)
-    in.p = 4
-    val meta = readMeta(in)
-    val codecBad = meta.get("avro.codec").exists(c =>
-      !Set("null", "deflate", "snappy", "zstandard", "bzip2", "xz").contains(
-        new String(c, java.nio.charset.StandardCharsets.US_ASCII)))
-    val schemaBad = meta.get("avro.schema").exists(s =>
-      parseSchema(new String(s,
-        java.nio.charset.StandardCharsets.UTF_8)) == null)
-    codecBad || schemaBad
+    isAvro(b) && !Codecs(header(new Frame(b, 4))._2)
   } catch {
-    case _: IllegalArgumentException => false
-    case _: IndexOutOfBoundsException => false
+    case _: Profile => true
+    case NonFatal(_) => false
   }
 
   // ---- write side ------------------------------------------------------

@@ -13,7 +13,7 @@ import java.nio.charset.StandardCharsets.UTF_8
   * `txn`), parquet checkpoints `<version>.checkpoint.parquet`
   * discovered via `_last_checkpoint`, and snapshot reconstruction —
   * start from the newest usable checkpoint's `add` rows (decoded by
-  * the from-scratch [[Parquet]] reader: nested structs, the
+  * the [[Parquet]] adapter over parquet-hadoop: nested structs, the
   * partitionValues MAP, the stats JSON string), then apply strictly
   * newer commits in version order with last-writer-wins `add` /
   * `remove` semantics. Per-file `numRecords` comes from the stats

@@ -9,8 +9,9 @@ import java.nio.charset.StandardCharsets.UTF_8
   * Implements the documented spec (iceberg.apache.org/spec): table
   * metadata JSON (`vN.metadata.json` / `NNNNN-<uuid>.metadata.json`,
   * format-version 1 and 2), the current snapshot's manifest LIST
-  * (an Avro container — decoded by the from-scratch nested [[Avro]]
-  * reader: manifest_path/length, content, added_snapshot_id), and
+  * (an Avro container — decoded by the nested [[Avro]] reader over
+  * avro's GenericDatumReader: manifest_path/length, content,
+  * added_snapshot_id), and
   * each data manifest (Avro again: status + the nested `data_file`
   * record with file_path/file_format/record_count/
   * file_size_in_bytes), reducing to the live file set (DELETED

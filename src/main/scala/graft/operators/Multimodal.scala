@@ -2488,8 +2488,9 @@ object Multimodal {
       name_char_sum: Long, n_nulls: Int)
 
   /** Extract rows from Avro object-container files through the
-    * from-scratch [[Avro]] walk (schema subset, per-block sync
-    * verification, null/deflate/snappy/zstandard codecs).
+    * [[Avro]] reader (per-block sync verification, capped
+    * null/deflate/snappy/zstandard/bzip2/xz codecs, records decoded by
+    * avro's GenericDatumReader).
     */
   def avroStats(spark: SparkSession,
       media: Dataset[MediaFile]): Dataset[AvroStats] = {
@@ -3041,7 +3042,7 @@ object Multimodal {
 
   /** Deterministic Arrow IPC corpus, WRITTEN BY the independent
     * arrow-vector implementation on the executors (the read direction
-    * is the from-scratch surface under test): table
+    * is the [[ArrowIpc]] adapter under test): table
     * `id` holds `3 + id%5` rows of (val `id*13 + r*7`, NULL on
     * `r%4==0`; name `rec-<id>-<r>`), in FILE framing on even ids and
     * STREAM framing on odd, split into two batches when `id%3==0`,
@@ -3110,7 +3111,7 @@ object Multimodal {
     })
   }
 
-  /** Account an Arrow corpus through the from-scratch IPC reader. */
+  /** Account an Arrow corpus through the [[ArrowIpc]] reader. */
   def arrowStats(spark: SparkSession,
       media: Dataset[MediaFile]): Dataset[ArrowStats] = {
     import spark.implicits._
@@ -3238,7 +3239,7 @@ object Multimodal {
     })
   }
 
-  /** Account a nested Arrow corpus through the from-scratch reader:
+  /** Account a nested Arrow corpus through the [[ArrowIpc]] reader:
     * dictionary indirection, list/struct nesting and the temporal /
     * decimal value model must reproduce the generator arithmetic.
     */
@@ -3388,7 +3389,7 @@ object Multimodal {
     })
   }
 
-  /** Account a modern-Arrow corpus through the from-scratch reader. */
+  /** Account a modern-Arrow corpus through the [[ArrowIpc]] reader. */
   def arrowModernStats(spark: SparkSession,
       media: Dataset[MediaFile]): Dataset[ArrowModernStats] = {
     import spark.implicits._
@@ -3500,7 +3501,7 @@ object Multimodal {
   }
 
   /** Account every parquet member of a tar-shard corpus through the
-    * from-scratch reader; a shard failing any layer degrades to a
+    * [[Parquet]] reader; a shard failing any layer degrades to a
     * sentinel row.
     */
   def parquetShardStats(spark: SparkSession,
@@ -3628,9 +3629,9 @@ object Multimodal {
     }
   }
 
-  /** Account a nested-parquet corpus through the from-scratch reader's
-    * record assembly; a file failing any layer degrades to a sentinel
-    * row.
+  /** Account a nested-parquet corpus through the [[Parquet]] reader's
+    * record assembly (parquet-column's); a file failing any layer
+    * degrades to a sentinel row.
     */
   def parquetNestedStats(spark: SparkSession,
       media: Dataset[MediaFile]): Dataset[ParquetNestedStats] = {
@@ -3866,7 +3867,7 @@ object Multimodal {
     * executor: nested add/metaData/protocol structs, the
     * partitionValues MAP, a LIST of partition columns) plus
     * `_last_checkpoint` — the replay must then start from the
-    * checkpoint (through the from-scratch nested [[Parquet]] reader)
+    * checkpoint (through the nested [[Parquet]] reader)
     * and apply only the final commit. The oracle replays the
     * add/remove arithmetic — both reconstruction paths must land on
     * the same state.

@@ -17,7 +17,7 @@ import java.nio.charset.StandardCharsets.UTF_8
   * (index + data streams laid out in list order), and the ORC
   * compression framing (3-byte little-endian chunk headers, low bit
   * = stored-as-original). Codecs: NONE / ZLIB (raw deflate, JDK
-  * Inflater) / SNAPPY (the from-scratch [[Snappy]]) / LZ4 (the
+  * Inflater) / SNAPPY ([[Snappy]] over snappy-java) / LZ4 (the
   * [[Lz4]] raw-block adapter over lz4-java) / ZSTD (the [[Zstd]]
   * adapter over zstd-jni).
   *

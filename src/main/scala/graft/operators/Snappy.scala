@@ -1,87 +1,23 @@
 package graft.operators
 
-/** From-scratch raw-Snappy codec (the google/snappy format
-  * description): varint uncompressed length, then tagged elements —
-  * literals (6-bit length with 1-4 extra LE length bytes past 60)
-  * and copies in the three offset widths (1-byte with the 3-bit
-  * length field, 2-byte LE, 4-byte LE). Avro's "snappy" codec and
-  * Parquet pages carry exactly this stream. Pinned BOTH directions
-  * against snappy-java. Degrade-don't-throw: null on damage.
+import scala.util.control.NonFatal
+
+/** Raw Snappy (the google/snappy format: varint uncompressed length,
+  * then literal and copy elements), the stream Avro's "snappy" codec
+  * and Parquet pages carry. [[decode]] is an adapter over snappy-java
+  * that checks the declared length against the cap before the library
+  * allocates; [[encode]] is the fixture writer. Degrade-don't-throw:
+  * null on damage.
   */
 object Snappy {
 
   /** Decode a raw stream; null on damage, `cap` bounds expansion. */
-  def decode(b: Array[Byte], cap: Long = 1L << 30): Array[Byte] = try {
-    if (b == null || b.isEmpty) return null
-    // varint length
-    var p = 0
-    var total = 0L
-    var shift = 0
-    var more = true
-    while (more) {
-      if (p >= b.length || shift > 35) return null
-      val c = b(p) & 0xFF
-      total |= (c & 0x7FL) << shift
-      shift += 7
-      p += 1
-      more = (c & 0x80) != 0
-    }
-    if (total < 0 || total > cap) return null
-    val out = new Array[Byte](total.toInt)
-    var o = 0
-    while (p < b.length) {
-      val tag = b(p) & 0xFF
-      p += 1
-      (tag & 3) match {
-        case 0 => // literal
-          var len = (tag >> 2) + 1
-          if (len > 60) {
-            val extra = len - 60
-            if (p + extra > b.length) return null
-            var v = 0L
-            var k = 0
-            while (k < extra) { v |= (b(p + k) & 0xFFL) << (8 * k); k += 1 }
-            p += extra
-            if (v < 0 || v > Int.MaxValue - 1) return null
-            len = v.toInt + 1
-          }
-          if (p + len > b.length || o + len > out.length) return null
-          System.arraycopy(b, p, out, o, len)
-          p += len
-          o += len
-        case t =>
-          var len = 0
-          var off = 0
-          t match {
-            case 1 =>
-              if (p >= b.length) return null
-              len = ((tag >> 2) & 7) + 4
-              off = ((tag >> 5) << 8) | (b(p) & 0xFF)
-              p += 1
-            case 2 =>
-              if (p + 2 > b.length) return null
-              len = (tag >> 2) + 1
-              off = (b(p) & 0xFF) | ((b(p + 1) & 0xFF) << 8)
-              p += 2
-            case _ =>
-              if (p + 4 > b.length) return null
-              len = (tag >> 2) + 1
-              off = (b(p) & 0xFF) | ((b(p + 1) & 0xFF) << 8) |
-                ((b(p + 2) & 0xFF) << 16) | ((b(p + 3) & 0xFF) << 24)
-              p += 4
-          }
-          if (off <= 0 || off > o || o + len > out.length) return null
-          var k = 0
-          while (k < len) { // byte-wise: overlaps replicate
-            out(o) = out(o - off)
-            o += 1
-            k += 1
-          }
-      }
-    }
-    if (o != out.length) return null
-    out
-  } catch { case _: ArrayIndexOutOfBoundsException => null }
+  def decode(b: Array[Byte], cap: Long = 1L << 30): Array[Byte] =
+    if (b == null || b.isEmpty) null
+    else try {
+      val n = org.xerial.snappy.Snappy.uncompressedLength(b)
+      if (n < 0 || n > cap) null else org.xerial.snappy.Snappy.uncompress(b)
+    } catch { case NonFatal(_) => null } // IOException, SnappyError
 
   /** Encode raw Snappy: greedy matches through the shared matcher,
     * emitted as 2-byte-offset copies (64-byte elements), literals

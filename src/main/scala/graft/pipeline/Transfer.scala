@@ -118,8 +118,10 @@ object Transfer {
         // contain the cursor column (only `fields` were ever written); then
         // the window is skipped and the snapshot covers the whole target —
         // a superset of hashes, still correct for dedup (the reference
-        // would error on the missing column instead).
-        var tgt = scala.util.Try(sink.read(cfg.target)).getOrElse(null)
+        // would error on the missing column instead). A target that exists
+        // but cannot be read fails the run: without its snapshot the run
+        // would rewrite the whole window.
+        var tgt = if (sink.exists(cfg.target)) sink.read(cfg.target) else null
         if (tgt == null) src
         else {
           cfg.window.foreach { w =>

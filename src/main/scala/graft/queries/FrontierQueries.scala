@@ -348,7 +348,7 @@ object FrontierQueries {
     // Avro object-container extraction — the Hadoop-era row format:
     // metadata map + schema JSON parse, per-block sync verification,
     // zigzag varints, nullable unions, and the codec grid
-    // (null / deflate / from-scratch snappy+CRC32 / zstandard).
+    // (null / deflate / snappy+CRC32 / zstandard).
     // Pinned both directions against real Avro in the spec.
     "shard_avro_records" -> ((s, dir) => {
       import s.implicits._
@@ -544,7 +544,7 @@ object FrontierQueries {
     // JSON selection (highest version wins; stale ones dangle), the
     // current snapshot's manifest-list Avro, and nested manifest
     // entries written by the REAL avro library on the executors —
-    // decoded by the from-scratch nested Avro reader. The oracle
+    // decoded by the nested Avro reader. The oracle
     // replays the live/deleted arithmetic.
     "iceberg_snapshot" -> ((s, dir) => {
       import s.implicits._
@@ -560,7 +560,7 @@ object FrontierQueries {
     // truth as a blob: JSON commits with add/remove/metaData actions,
     // and on a third of tables a parquet CHECKPOINT (nested structs +
     // partitionValues MAP, written by parquet-mr, decoded by the
-    // from-scratch nested Parquet reader) that reconstruction must
+    // nested Parquet reader) that reconstruction must
     // start from. The oracle replays the add/remove arithmetic —
     // both reconstruction paths must land on the same state.
     "delta_snapshot" -> ((s, dir) => {

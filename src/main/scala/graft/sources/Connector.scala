@@ -19,6 +19,11 @@ trait Connector {
     * frame consumed through `df.rdd` reports none of them.
     */
   def write(df: DataFrame, target: String, mode: SaveMode = SaveMode.Append): Unit
+
+  /** Whether `table` exists. A storage that cannot answer (unreachable,
+    * permission denied) throws rather than answering false.
+    */
+  def exists(table: String): Boolean
 }
 
 /** File-based connector (parquet/csv/json directories) — used for the
@@ -30,6 +35,11 @@ final class FileConnector(spark: SparkSession, root: String, format: String = "p
     extends Connector {
 
   private def path(table: String) = s"$root/$table.$format"
+
+  def exists(table: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path(table))
+    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+  }
 
   def read(table: String): DataFrame = format match {
     case "parquet" => Tables.read(spark, root, table)
@@ -117,6 +127,32 @@ final class JdbcConnector(
     * text to the source.
     */
   def readQuery(query: String): DataFrame = base.option("query", query).load()
+
+  /** `DatabaseMetaData.getTables` on a fresh connection (a connection
+    * failure throws). `schema.table` names are split; the name is tried
+    * as given and in the upper and lower case that unquoted identifiers
+    * fold to.
+    */
+  def exists(table: String): Boolean = {
+    val props = new java.util.Properties()
+    if (user.nonEmpty) { props.put("user", user); props.put("password", password) }
+    val conn = java.sql.DriverManager.getConnection(url, props)
+    try {
+      val md = conn.getMetaData
+      val esc = md.getSearchStringEscape
+      def pattern(s: String) =
+        if (s == null || esc == null || esc.isEmpty) s
+        else s.replace(esc, esc + esc).replace("_", esc + "_").replace("%", esc + "%")
+      def folds(s: String) = Seq(s, s.toUpperCase(java.util.Locale.ROOT),
+        s.toLowerCase(java.util.Locale.ROOT)).distinct
+      val dot = table.lastIndexOf('.')
+      val schemas = if (dot < 0) Seq(null) else folds(table.take(dot))
+      schemas.exists(sc => folds(table.drop(dot + 1)).exists { n =>
+        val rs = md.getTables(null, pattern(sc), pattern(n), null)
+        try rs.next() finally rs.close()
+      })
+    } finally conn.close()
+  }
 
   def write(df: DataFrame, target: String, mode: SaveMode = SaveMode.Append): Unit = {
     var w = df.write.format("jdbc").mode(mode)

@@ -116,4 +116,21 @@ class TransferSpec extends SparkSpec {
     assert(Transfer.run(src, sink, cfg).copy(durationMs = 0) == RunStats(0, 0, 0, 0))
     assert(Transfer.run(src, sink, cfg).copy(durationMs = 0) == RunStats(0, 0, 0, 0))
   }
+
+  test("an unreadable target fails the tick and writes nothing") {
+    val tmp = Files.createTempDirectory("graft-transfer-corrupt").toString
+    val src = new FileConnector(spark, sf0001)
+    val sink = new FileConnector(spark, tmp)
+    val cfg = Transfer.Config(table = "events", target = "out",
+      fields = Seq("event_id", "user_id"),
+      window = Some(Window("user_id", "0", "25")), increment = true)
+    assert(Transfer.run(src, sink, cfg).rowsWritten > 0)
+    val dir = new java.io.File(s"$tmp/out.parquet")
+    Files.write(new java.io.File(dir, "part-00000-garbage.parquet").toPath,
+      "not a parquet file".getBytes("US-ASCII"))
+    def listing = dir.list().toSeq.sorted
+    val before = listing
+    intercept[Exception](Transfer.run(src, sink, cfg))
+    assert(listing == before)
+  }
 }
