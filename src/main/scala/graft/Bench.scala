@@ -254,10 +254,9 @@ object Bench {
     // single trailing line gets its head (including `{"metric":…`) cut
     // off, leaving an unparseable fragment (r04: 72/245 figures
     // visible, parsed: null). So: (1) the FULL map goes out first and
-    // is also persisted to a RUN-STAMPED BENCH_FULL_<n>.json next to
-    // the build (append-only: concurrent or later runs — judge
-    // adjudication, driver, local — never overwrite each other's
-    // artifact, the r10 adjudication casualty); (2) the FINAL line —
+    // is also persisted to a RUN-STAMPED target/bench/BENCH_FULL_<n>.json
+    // (append-only: concurrent or later runs never overwrite each
+    // other's artifact); (2) the FINAL line —
     // the one a tail capture is guaranteed to contain intact — is a
     // compact self-contained JSON that fits the window: total, query
     // count, a pointer to the full map, and the failed + slowest
@@ -282,15 +281,16 @@ object Bench {
     val full =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"cpu":$cpuQs,"gc":$gcQs,"majflt":$mfQs,"confirm":$confirmQs,"errors":$errorQs,"probe":$probe,"sf":"$sfDir"}"""
     println(full)
-    // Run-stamped persistence: first free BENCH_FULL_<n>.json slot,
-    // created atomically (CREATE_NEW) so two concurrent runs can never
-    // claim the same slot. Persistence must never kill the stdout line.
+    // Run-stamped persistence: first free target/bench/BENCH_FULL_<n>.json
+    // slot, created atomically (CREATE_NEW) so two concurrent runs can
+    // never claim the same slot. Persistence must never kill the stdout line.
     val fullPath =
       try {
+        val dir = java.nio.file.Files.createDirectories(java.nio.file.Paths.get("target", "bench"))
         var path: java.nio.file.Path = null
         var n = 1
         while (path == null && n < 10000) {
-          val p = java.nio.file.Paths.get(f"BENCH_FULL_$n%04d.json").toAbsolutePath
+          val p = dir.resolve(f"BENCH_FULL_$n%04d.json").toAbsolutePath
           try {
             java.nio.file.Files.write(p, (full + "\n").getBytes("UTF-8"),
               java.nio.file.StandardOpenOption.CREATE_NEW)

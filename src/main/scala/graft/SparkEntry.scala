@@ -1,12 +1,13 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.queries.{AnalyticsQueries, CapabilityQueries, ClassicQueries, CorpusQueries, ExtensionQueries, FrontierQueries, MiningQueries, ParityQueries, PipelineQueries, StreamingQueries}
+import graft.queries.{AnalyticsQueries, CapabilityQueries, ClassicQueries, CorpusQueries, ExtensionQueries, FrontierQueries, MiningQueries, ParityQueries, PipelineQueries, Registry, StreamingQueries}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  * `queries` maps every implemented SURVEY §2 operator (and extension) to a
-  * runnable DataFrame program; `oracleSql` gives the DuckDB-equivalent SQL
-  * the driver hash-compares against.
+/** The query contract (SURVEY.md §7): `queries` maps every implemented
+  * SURVEY §2 operator (and extension) to a runnable DataFrame program, and
+  * `oracleSql` gives the DuckDB SQL whose output it is hash-compared
+  * against. Both are views of one registry, built once from the ten query
+  * files.
   */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0:
@@ -16,20 +17,17 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     ParityQueries.queries("q7_incremental_antijoin")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2 + extensions. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    ParityQueries.queries ++ ExtensionQueries.queries ++
-      StreamingQueries.queries ++ CapabilityQueries.queries ++
-      AnalyticsQueries.queries ++ PipelineQueries.queries ++
-      MiningQueries.queries ++ CorpusQueries.queries ++
-      ClassicQueries.queries ++ FrontierQueries.queries
+  private val registry = Registry.concat(
+    ParityQueries.registry, ExtensionQueries.registry,
+    StreamingQueries.registry, CapabilityQueries.registry,
+    AnalyticsQueries.registry, PipelineQueries.registry,
+    MiningQueries.registry, CorpusQueries.registry,
+    ClassicQueries.registry, FrontierQueries.registry)
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    ParityQueries.oracleSql ++ ExtensionQueries.oracleSql ++
-      StreamingQueries.oracleSql ++ CapabilityQueries.oracleSql ++
-      AnalyticsQueries.oracleSql ++ PipelineQueries.oracleSql ++
-      MiningQueries.oracleSql ++ CorpusQueries.oracleSql ++
-      ClassicQueries.oracleSql ++ FrontierQueries.oracleSql
+  /** One entry per implemented operator from SURVEY.md §2 + extensions. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] = registry.queries
+
+  /** For each key in queries, equivalent SQL runnable by DuckDB on the
+    * same parquet tables. */
+  val oracleSql: Map[String, String] = registry.oracleSql
 }

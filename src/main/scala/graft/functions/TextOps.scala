@@ -93,12 +93,6 @@ object TextOps {
   def wordShingles(toks: Column, n: Int): Column =
     array_distinct(wordGrams(toks, n))
 
-  /** Distinct character n-grams of the raw string. */
-  def charGrams(text: Column, n: Int): Column =
-    array_distinct(transform(
-      sequence(lit(1), greatest(length(text) - (n - 1), lit(1))),
-      i => substring(text, lit(i), lit(n))))
-
   /** Set Jaccard similarity of two pre-distinct arrays. Int/int division
     * promotes to double identically in Spark and DuckDB.
     */

@@ -72,7 +72,6 @@ object Flac {
       q
     }
     def alignToByte(): Unit = { bitPos = (bitPos + 7) & ~7L }
-    def bytePos: Int = start + (bitPos >> 3).toInt
     def exhausted: Boolean = bitPos >= limit
   }
 

@@ -73,10 +73,4 @@ object Skyline {
           col("__samemax") > gain))
       .drop("__bk", "__prevmax", "__inmax", "__samemax")
   }
-
-  /** Only the frontier rows (without the flag column). */
-  def skyline2d(df: DataFrame, costCol: String, gainCol: String,
-      bucketWidth: Long = 1000L): DataFrame =
-    frontier2d(df, costCol, gainCol, bucketWidth)
-      .where(col("is_frontier")).drop("is_frontier")
 }

@@ -1341,30 +1341,6 @@ object Webp {
       chunkBytes("ANMF", hdr ++ chunkBytes("VP8 ", inter)))
   }
 
-  def synthVp8LossyStub(w: Int, h: Int, body: Array[Byte]): Array[Byte] = {
-    require(w >= 1 && w <= 0x3FFF && h >= 1 && h <= 0x3FFF)
-    val payload = new java.io.ByteArrayOutputStream()
-    payload.write(0x30); payload.write(0); payload.write(0) // frame tag
-    payload.write(0x9D); payload.write(0x01); payload.write(0x2A)
-    payload.write(w & 0xFF); payload.write((w >> 8) & 0x3F)
-    payload.write(h & 0xFF); payload.write((h >> 8) & 0x3F)
-    payload.write(body, 0, body.length)
-    val vp8 = payload.toByteArray
-    val out = new java.io.ByteArrayOutputStream()
-    def le32(v: Int): Unit = {
-      out.write(v & 0xFF); out.write((v >> 8) & 0xFF)
-      out.write((v >> 16) & 0xFF); out.write((v >> 24) & 0xFF)
-    }
-    out.write("RIFF".getBytes("US-ASCII"))
-    le32(4 + 8 + vp8.length + (vp8.length & 1))
-    out.write("WEBP".getBytes("US-ASCII"))
-    out.write("VP8 ".getBytes("US-ASCII"))
-    le32(vp8.length)
-    out.write(vp8, 0, vp8.length)
-    if ((vp8.length & 1) == 1) out.write(0)
-    out.toByteArray
-  }
-
   /** Literal encode with the subtract-green transform: residual
     * r−g, b−g mod 256 round-trips the transform inverse.
     */

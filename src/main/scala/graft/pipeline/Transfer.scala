@@ -49,14 +49,30 @@ final case class RunStats(
 }
 
 object RunStats {
+  /** Longest failure message kept, in chars. */
+  private val MaxMessage = 1024
+
   /** A failed run as one JSON object: exception class and message (the
-    * message may be null). */
+    * message may be null). A failed Spark job's message embeds executor
+    * stack traces, so the message loses its stack-frame lines (the
+    * `Caused by:` lines stay), is cut at `Driver stacktrace:`, and is
+    * capped at `MaxMessage` chars. */
   def failureJson(e: Throwable): String = {
     def str(v: String) =
       if (v == null) "null"
       else "\"" + new String(JsonStringEncoder.getInstance.quoteAsString(v)) + "\""
-    s"""{"error":${str(e.getClass.getName)},"message":${str(e.getMessage)}}"""
+    s"""{"error":${str(e.getClass.getName)},"message":${str(brief(e.getMessage))}}"""
   }
+
+  private def brief(m: String): String =
+    if (m == null) null
+    else {
+      val driver = m.indexOf("Driver stacktrace:")
+      val lines = (if (driver < 0) m else m.take(driver)).split("\n", -1)
+      val kept = lines.filterNot(l => l.startsWith("\tat ") || l.startsWith("\t... "))
+      val text = kept.mkString("\n")
+      (if (driver < 0 && kept.length == lines.length) text else text.stripTrailing).take(MaxMessage)
+    }
 }
 
 /** One scheduled-run pipeline (§3.1 of SURVEY.md): scan → project → window

@@ -39,12 +39,12 @@ object ClassicQueries {
   private def rev: Column =
     (col("l_extendedprice") * (lit(1) - col("l_discount")))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  lazy val registry: Registry = Registry(
     // TPC-H Q7 volume shipping: revenue flowing between two regions in
     // either direction, per shipment year. Five-way join; both nation
     // legs broadcast (25 rows), the fact-side joins shuffle on their
     // keys once each.
-    "q36_volume_shipping" -> ((s, dir) => {
+    "q36_volume_shipping" -> Query((s, dir) => {
       val n = t(s, dir, "nation")
       val n1 = n.select(col("n_nationkey").as("s_nk"),
         col("n_regionkey").as("supp_region"))
@@ -65,13 +65,27 @@ object ClassicQueries {
           year(col("l_shipdate")).cast("long").as("l_year"))
         .agg(moneySum(rev).as("revenue"), count(lit(1)).as("n_items"))
         .orderBy("supp_region", "cust_region", "l_year")
-    }),
+    },
+      """SELECT n1.n_regionkey AS supp_region, n2.n_regionkey AS cust_region,
+        |  year(l_shipdate) AS l_year,
+        |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue,
+        |  count(*) AS n_items
+        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation n1 ON s_nationkey = n1.n_nationkey
+        |JOIN nation n2 ON c_nationkey = n2.n_nationkey
+        |WHERE ((n1.n_regionkey = 0 AND n2.n_regionkey = 1)
+        |    OR (n1.n_regionkey = 1 AND n2.n_regionkey = 0))
+        |  AND l_shipdate BETWEEN TIMESTAMP '1996-01-01 00:00:00'
+        |                     AND TIMESTAMP '1999-12-31 23:59:59'
+        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin),
 
     // TPC-H Q8 market share: region-0 customers buying PROMO parts —
     // what fraction of that revenue is served by region-1 suppliers,
     // per order year. Numerator and denominator are separately-rounded
     // decimal sums; the share divides the two doubles.
-    "q37_market_share" -> ((s, dir) => {
+    "q37_market_share" -> Query((s, dir) => {
       val n = t(s, dir, "nation")
       val n1 = n.select(col("n_nationkey").as("s_nk"),
         col("n_regionkey").as("supp_region"))
@@ -95,13 +109,30 @@ object ClassicQueries {
               / round(sum(v), 2).cast("double"), 6).as("mkt_share"),
           round(sum(v), 2).cast("double").as("total_rev"))
         .orderBy("o_year")
-    }),
+    },
+      """WITH vol AS (
+        |  SELECT year(o_orderdate) AS o_year,
+        |    CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4)) AS v,
+        |    n1.n_regionkey AS sr
+        |  FROM lineitem JOIN part ON l_partkey = p_partkey
+        |  JOIN supplier ON l_suppkey = s_suppkey
+        |  JOIN orders ON l_orderkey = o_orderkey
+        |  JOIN customer ON o_custkey = c_custkey
+        |  JOIN nation n1 ON s_nationkey = n1.n_nationkey
+        |  JOIN nation n2 ON c_nationkey = n2.n_nationkey
+        |  WHERE n2.n_regionkey = 0 AND p_type = 'PROMO')
+        |SELECT o_year,
+        |  round(CAST(round(sum(CASE WHEN sr = 1 THEN v
+        |                            ELSE CAST(0 AS DECIMAL(18,4)) END), 2) AS DOUBLE)
+        |      / CAST(round(sum(v), 2) AS DOUBLE), 6) AS mkt_share,
+        |  CAST(round(sum(v), 2) AS DOUBLE) AS total_rev
+        |FROM vol GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // TPC-H Q13 customer distribution: orders per customer (priority
     // '4-NOT SPECIFIED' excluded IN THE JOIN, so customers keep their
     // zero row), then the histogram of those counts. Left join + two
     // reaggregations — the second group-by is tiny (distinct counts).
-    "q38_customer_distribution" -> ((s, dir) => {
+    "q38_customer_distribution" -> Query((s, dir) => {
       val o = t(s, dir, "orders")
         .where(col("o_orderpriority") =!= "4-NOT SPECIFIED")
         .select("o_orderkey", "o_custkey")
@@ -112,11 +143,19 @@ object ClassicQueries {
         .groupBy("c_count")
         .agg(count(lit(1)).as("custdist"))
         .orderBy(desc("custdist"), desc("c_count"))
-    }),
+    },
+      """WITH c_orders AS (
+        |  SELECT c_custkey, count(o_orderkey) AS c_count
+        |  FROM customer LEFT JOIN orders
+        |    ON c_custkey = o_custkey AND o_orderpriority <> '4-NOT SPECIFIED'
+        |  GROUP BY 1)
+        |SELECT c_count, count(*) AS custdist
+        |FROM c_orders GROUP BY 1
+        |ORDER BY custdist DESC, c_count DESC""".stripMargin),
 
     // TPC-H Q14 promo effect: share of June-1997 revenue from PROMO
     // parts. Part side broadcasts; one fact scan, one aggregate row.
-    "q39_promo_effect" -> ((s, dir) => {
+    "q39_promo_effect" -> Query((s, dir) => {
       val v = rev.cast("decimal(18,4)")
       t(s, dir, "lineitem")
         .where(col("l_shipdate") >= lit("1997-06-01 00:00:00").cast("timestamp") &&
@@ -128,12 +167,23 @@ object ClassicQueries {
               .otherwise(lit(0).cast("decimal(18,4)"))), 2).cast("double")
             / round(sum(v), 2).cast("double"), 6).as("promo_revenue"),
           count(lit(1)).as("n_rows"))
-    }),
+    },
+      """WITH l AS (
+        |  SELECT CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4)) AS v,
+        |    p_type
+        |  FROM lineitem JOIN part ON l_partkey = p_partkey
+        |  WHERE l_shipdate >= TIMESTAMP '1997-06-01 00:00:00'
+        |    AND l_shipdate < TIMESTAMP '1997-07-01 00:00:00')
+        |SELECT round(100 * CAST(round(sum(CASE WHEN p_type = 'PROMO' THEN v
+        |                                  ELSE CAST(0 AS DECIMAL(18,4)) END), 2) AS DOUBLE)
+        |    / CAST(round(sum(v), 2) AS DOUBLE), 6) AS promo_revenue,
+        |  count(*) AS n_rows
+        |FROM l""".stripMargin),
 
     // TPC-H Q15 top supplier: Q1-1997 revenue per supplier, keep the
     // max-revenue supplier(s). The max is a 1-row broadcast back onto
     // the (already tiny) revenue aggregate — no second fact scan.
-    "q40_top_supplier" -> ((s, dir) => {
+    "q40_top_supplier" -> Query((s, dir) => {
       val revenue = t(s, dir, "lineitem")
         .where(col("l_shipdate") >= lit("1997-01-01 00:00:00").cast("timestamp") &&
                col("l_shipdate") < lit("1997-04-01 00:00:00").cast("timestamp"))
@@ -145,13 +195,24 @@ object ClassicQueries {
         .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
         .select(col("s_suppkey"), col("s_name"), col("total_revenue"))
         .orderBy("s_suppkey")
-    }),
+    },
+      """WITH rev AS (
+        |  SELECT l_suppkey,
+        |    CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS total_revenue
+        |  FROM lineitem
+        |  WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
+        |    AND l_shipdate < TIMESTAMP '1997-04-01 00:00:00'
+        |  GROUP BY 1)
+        |SELECT s_suppkey, s_name, total_revenue
+        |FROM rev JOIN supplier ON l_suppkey = s_suppkey
+        |WHERE total_revenue = (SELECT max(total_revenue) FROM rev)
+        |ORDER BY s_suppkey""".stripMargin),
 
     // TPC-H Q18 large-volume customers: orders whose total quantity
     // exceeds 300 (top ~0.1% of orders), with their customer. The
     // HAVING aggregate runs FIRST so only qualifying orderkeys join
     // back — the join input is a few rows, not the fact table.
-    "q41_large_volume_customer" -> ((s, dir) => {
+    "q41_large_volume_customer" -> Query((s, dir) => {
       val big = t(s, dir, "lineitem")
         .groupBy("l_orderkey")
         .agg(sum("l_quantity").as("sum_qty"))
@@ -161,13 +222,20 @@ object ClassicQueries {
         .select(col("c_name"), col("c_custkey"), col("o_orderkey"),
           col("o_orderdate"), col("o_totalprice"), col("sum_qty"))
         .orderBy(desc("o_totalprice"), asc("o_orderkey"))
-    }),
+    },
+      """WITH big AS (
+        |  SELECT l_orderkey, sum(l_quantity) AS sum_qty
+        |  FROM lineitem GROUP BY 1 HAVING sum(l_quantity) > 300)
+        |SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice, sum_qty
+        |FROM big JOIN orders ON o_orderkey = l_orderkey
+        |JOIN customer ON c_custkey = o_custkey
+        |ORDER BY o_totalprice DESC, o_orderkey""".stripMargin),
 
     // TPC-H Q19 disjunctive predicate: three (brand, size-range,
     // qty-range) conjunct groups OR'd together. One broadcast join;
     // the disjunction stays a single codegen'd filter — no union of
     // three scans.
-    "q42_disjunctive_brand" -> ((s, dir) =>
+    "q42_disjunctive_brand" -> Query((s, dir) =>
       t(s, dir, "lineitem")
         .join(broadcast(t(s, dir, "part")), col("l_partkey") === col("p_partkey"))
         .where(
@@ -177,7 +245,17 @@ object ClassicQueries {
             col("l_quantity").between(10, 30)) ||
           (col("p_brand") === "Brand#3" && col("p_size").between(20, 50) &&
             col("l_quantity").between(20, 40)))
-        .agg(moneySum(rev).as("revenue"), count(lit(1)).as("n_rows"))),
+        .agg(moneySum(rev).as("revenue"), count(lit(1)).as("n_rows")),
+      """SELECT
+        |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue,
+        |  count(*) AS n_rows
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
+        |       AND l_quantity BETWEEN 1 AND 20)
+        |   OR (p_brand = 'Brand#2' AND p_size BETWEEN 10 AND 30
+        |       AND l_quantity BETWEEN 10 AND 30)
+        |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 20 AND 50
+        |       AND l_quantity BETWEEN 20 AND 40)""".stripMargin),
 
     // TPC-H Q21 waiting orders, decorrelated: an 'R'-flagged item in a
     // finished multi-supplier order where NO other supplier returned.
@@ -187,7 +265,7 @@ object ClassicQueries {
     // (l1 itself returns, so it is the only one). Two shuffles on
     // l_orderkey replace two correlated per-row subqueries — the shape
     // that survives 100 TB.
-    "q43_waiting_orders" -> ((s, dir) => {
+    "q43_waiting_orders" -> Query((s, dir) => {
       val li = t(s, dir, "lineitem")
       // Two-level pair aggregation instead of the double countDistinct:
       // the multi-distinct form Expands every lineitem row ×2 before the
@@ -218,14 +296,26 @@ object ClassicQueries {
         .groupBy("s_name")
         .agg(count(lit(1)).as("numwait"))
         .orderBy(desc("numwait"), asc("s_name"))
-    }),
+    },
+      """SELECT s_name, count(*) AS numwait
+        |FROM supplier JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
+        |JOIN orders ON o_orderkey = l1.l_orderkey
+        |WHERE o_orderstatus = 'F' AND l1.l_returnflag = 'R'
+        |  AND EXISTS (SELECT 1 FROM lineitem l2
+        |              WHERE l2.l_orderkey = l1.l_orderkey
+        |                AND l2.l_suppkey <> l1.l_suppkey)
+        |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
+        |              WHERE l3.l_orderkey = l1.l_orderkey
+        |                AND l3.l_suppkey <> l1.l_suppkey
+        |                AND l3.l_returnflag = 'R')
+        |GROUP BY s_name ORDER BY numwait DESC, s_name""".stripMargin),
 
     // TPC-H Q22 sales opportunity: well-funded customers with no open
     // orders, grouped by nation. "Above average positive balance" is
     // the exact-decimal cross-multiplication bal·n > Σbal (no float
     // division picks the boundary); the no-open-orders test is a
     // left-anti join, never a correlated probe.
-    "q44_sales_opportunity" -> ((s, dir) => {
+    "q44_sales_opportunity" -> Query((s, dir) => {
       val c = t(s, dir, "customer")
       val thr = c.where(col("c_acctbal") > 0)
         .agg(sum(col("c_acctbal").cast("decimal(18,4)")).as("__sum_bal"),
@@ -240,14 +330,24 @@ object ClassicQueries {
         .agg(count(lit(1)).as("numcust"),
           moneySum(col("c_acctbal")).as("totacctbal"))
         .orderBy("c_nationkey")
-    }),
+    },
+      """SELECT c_nationkey, count(*) AS numcust,
+        |  CAST(round(sum(CAST(c_acctbal AS DECIMAL(18,4))), 2) AS DOUBLE) AS totacctbal
+        |FROM customer
+        |WHERE CAST(c_acctbal AS DECIMAL(18,4)) *
+        |      (SELECT count(*) FROM customer WHERE c_acctbal > 0) >
+        |      (SELECT sum(CAST(c_acctbal AS DECIMAL(18,4))) FROM customer
+        |       WHERE c_acctbal > 0)
+        |  AND NOT EXISTS (SELECT 1 FROM orders
+        |                  WHERE o_custkey = c_custkey AND o_orderstatus = 'O')
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // TPC-H Q2 shape (no partsupp in the fixture): per part, the
     // supplier(s) offering the lowest observed price, for small parts.
     // Argmin-per-group as aggregate + self-equijoin on the group key —
     // min() over raw doubles is exact, so no float arithmetic crosses
     // engines. The part filter prunes before the final join.
-    "q45_min_price_supplier" -> ((s, dir) => {
+    "q45_min_price_supplier" -> Query((s, dir) => {
       val pairs = t(s, dir, "lineitem")
         .groupBy("l_partkey", "l_suppkey")
         .agg(min("l_extendedprice").as("min_price"))
@@ -260,7 +360,17 @@ object ClassicQueries {
         .select(col("p_partkey"), col("l_suppkey").as("s_suppkey"),
           col("min_price"))
         .orderBy("p_partkey", "s_suppkey")
-    }),
+    },
+      """WITH pairs AS (
+        |  SELECT l_partkey, l_suppkey, min(l_extendedprice) AS min_price
+        |  FROM lineitem GROUP BY 1, 2),
+        |best AS (
+        |  SELECT l_partkey, min(min_price) AS best_price FROM pairs GROUP BY 1)
+        |SELECT p_partkey, l_suppkey AS s_suppkey, min_price
+        |FROM pairs JOIN best USING (l_partkey)
+        |JOIN part ON l_partkey = p_partkey
+        |WHERE min_price = best_price AND p_size <= 5
+        |ORDER BY p_partkey, s_suppkey""".stripMargin),
 
     // TPC-H Q4 shape (order priority checking): orders with at least
     // one lineitem shipped more than 60 days after the order date,
@@ -269,7 +379,7 @@ object ClassicQueries {
     // condition — the probe side never duplicates orders no matter how
     // many late items each has. Lateness compares exact epoch micros
     // (no engine date arithmetic).
-    "q46_late_order_priority" -> ((s, dir) => {
+    "q46_late_order_priority" -> Query((s, dir) => {
       val o = t(s, dir, "orders")
       val li = t(s, dir, "lineitem")
         .select(col("l_orderkey"), unix_micros(col("l_shipdate")).as("ship_us"))
@@ -281,7 +391,14 @@ object ClassicQueries {
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("order_count"))
         .orderBy("o_orderpriority")
-    }),
+    },
+      """SELECT o_orderpriority, count(*)::BIGINT AS order_count
+        |FROM orders
+        |WHERE EXISTS (SELECT 1 FROM lineitem
+        |  WHERE l_orderkey = o_orderkey
+        |    AND epoch_us(CAST(l_shipdate AS TIMESTAMP)) -
+        |        epoch_us(CAST(o_orderdate AS TIMESTAMP)) > 5184000000000)
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
 
     // TPC-H Q17 shape (small-quantity-order revenue): for one brand,
     // the revenue carried by lineitems whose quantity is below 20% of
@@ -291,7 +408,7 @@ object ClassicQueries {
     // (5·qty·cnt < Σqty — quantities are integral), so no float
     // boundary decides row membership. Per-part rollup output keeps
     // the result auditable.
-    "q47_small_qty_revenue" -> ((s, dir) => {
+    "q47_small_qty_revenue" -> Query((s, dir) => {
       val li = t(s, dir, "lineitem")
         .select(col("l_partkey"), col("l_quantity").cast("long").as("qty"),
           col("l_extendedprice"))
@@ -306,184 +423,7 @@ object ClassicQueries {
         .agg(count(lit(1)).as("n_small"),
           moneySum(col("l_extendedprice")).as("revenue"))
         .orderBy("p_partkey")
-    }),
-
-    // TPC-H Q6 shape (forecasting revenue change): revenue that would
-    // be gained by eliminating small discounts — one scan, every
-    // predicate pushed to the parquet reader, exact-decimal money sum.
-    // The canonical "is your filter pushdown working" query.
-    "q48_forecast_revenue" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .where(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("l_shipdate") < lit("1997-01-01").cast("timestamp") &&
-          col("l_discount") >= 0.05 && col("l_discount") <= 0.07 &&
-          col("l_quantity") < 24)
-        .agg(moneySum(col("l_extendedprice") * col("l_discount"))
-          .as("revenue"),
-          count(lit(1)).as("n_items"))),
-
-    // TPC-H Q10 shape (returned-item reporting): the customers who
-    // returned the most revenue in a quarter — returns join orders join
-    // customer (nation denormalized to the raw key; the fixture carries
-    // no n_name need here), top-20 under a TOTAL (revenue desc,
-    // custkey) order so the cut line is deterministic.
-    "q49_returned_items" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").where(col("l_returnflag") === "R")
-      val o = t(s, dir, "orders")
-        .where(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("o_orderdate") < lit("1996-04-01").cast("timestamp"))
-      val c = t(s, dir, "customer")
-      li.join(o, li("l_orderkey") === o("o_orderkey"))
-        .join(c, o("o_custkey") === c("c_custkey"))
-        .groupBy(col("c_custkey"), col("c_name"), col("c_nationkey"),
-          col("c_acctbal"))
-        .agg(moneySum(rev).as("revenue"))
-        .orderBy(col("revenue").desc, col("c_custkey"))
-        .limit(20)
-    }),
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q36_volume_shipping" ->
-      """SELECT n1.n_regionkey AS supp_region, n2.n_regionkey AS cust_region,
-        |  year(l_shipdate) AS l_year,
-        |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue,
-        |  count(*) AS n_items
-        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        |JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        |WHERE ((n1.n_regionkey = 0 AND n2.n_regionkey = 1)
-        |    OR (n1.n_regionkey = 1 AND n2.n_regionkey = 0))
-        |  AND l_shipdate BETWEEN TIMESTAMP '1996-01-01 00:00:00'
-        |                     AND TIMESTAMP '1999-12-31 23:59:59'
-        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-
-    "q37_market_share" ->
-      """WITH vol AS (
-        |  SELECT year(o_orderdate) AS o_year,
-        |    CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4)) AS v,
-        |    n1.n_regionkey AS sr
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |  JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        |  JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        |  WHERE n2.n_regionkey = 0 AND p_type = 'PROMO')
-        |SELECT o_year,
-        |  round(CAST(round(sum(CASE WHEN sr = 1 THEN v
-        |                            ELSE CAST(0 AS DECIMAL(18,4)) END), 2) AS DOUBLE)
-        |      / CAST(round(sum(v), 2) AS DOUBLE), 6) AS mkt_share,
-        |  CAST(round(sum(v), 2) AS DOUBLE) AS total_rev
-        |FROM vol GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q38_customer_distribution" ->
-      """WITH c_orders AS (
-        |  SELECT c_custkey, count(o_orderkey) AS c_count
-        |  FROM customer LEFT JOIN orders
-        |    ON c_custkey = o_custkey AND o_orderpriority <> '4-NOT SPECIFIED'
-        |  GROUP BY 1)
-        |SELECT c_count, count(*) AS custdist
-        |FROM c_orders GROUP BY 1
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin,
-
-    "q39_promo_effect" ->
-      """WITH l AS (
-        |  SELECT CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4)) AS v,
-        |    p_type
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  WHERE l_shipdate >= TIMESTAMP '1997-06-01 00:00:00'
-        |    AND l_shipdate < TIMESTAMP '1997-07-01 00:00:00')
-        |SELECT round(100 * CAST(round(sum(CASE WHEN p_type = 'PROMO' THEN v
-        |                                  ELSE CAST(0 AS DECIMAL(18,4)) END), 2) AS DOUBLE)
-        |    / CAST(round(sum(v), 2) AS DOUBLE), 6) AS promo_revenue,
-        |  count(*) AS n_rows
-        |FROM l""".stripMargin,
-
-    "q40_top_supplier" ->
-      """WITH rev AS (
-        |  SELECT l_suppkey,
-        |    CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS total_revenue
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-        |    AND l_shipdate < TIMESTAMP '1997-04-01 00:00:00'
-        |  GROUP BY 1)
-        |SELECT s_suppkey, s_name, total_revenue
-        |FROM rev JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE total_revenue = (SELECT max(total_revenue) FROM rev)
-        |ORDER BY s_suppkey""".stripMargin,
-
-    "q41_large_volume_customer" ->
-      """WITH big AS (
-        |  SELECT l_orderkey, sum(l_quantity) AS sum_qty
-        |  FROM lineitem GROUP BY 1 HAVING sum(l_quantity) > 300)
-        |SELECT c_name, c_custkey, o_orderkey, o_orderdate, o_totalprice, sum_qty
-        |FROM big JOIN orders ON o_orderkey = l_orderkey
-        |JOIN customer ON c_custkey = o_custkey
-        |ORDER BY o_totalprice DESC, o_orderkey""".stripMargin,
-
-    "q42_disjunctive_brand" ->
-      """SELECT
-        |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue,
-        |  count(*) AS n_rows
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
-        |       AND l_quantity BETWEEN 1 AND 20)
-        |   OR (p_brand = 'Brand#2' AND p_size BETWEEN 10 AND 30
-        |       AND l_quantity BETWEEN 10 AND 30)
-        |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 20 AND 50
-        |       AND l_quantity BETWEEN 20 AND 40)""".stripMargin,
-
-    "q43_waiting_orders" ->
-      """SELECT s_name, count(*) AS numwait
-        |FROM supplier JOIN lineitem l1 ON s_suppkey = l1.l_suppkey
-        |JOIN orders ON o_orderkey = l1.l_orderkey
-        |WHERE o_orderstatus = 'F' AND l1.l_returnflag = 'R'
-        |  AND EXISTS (SELECT 1 FROM lineitem l2
-        |              WHERE l2.l_orderkey = l1.l_orderkey
-        |                AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-        |              WHERE l3.l_orderkey = l1.l_orderkey
-        |                AND l3.l_suppkey <> l1.l_suppkey
-        |                AND l3.l_returnflag = 'R')
-        |GROUP BY s_name ORDER BY numwait DESC, s_name""".stripMargin,
-
-    "q44_sales_opportunity" ->
-      """SELECT c_nationkey, count(*) AS numcust,
-        |  CAST(round(sum(CAST(c_acctbal AS DECIMAL(18,4))), 2) AS DOUBLE) AS totacctbal
-        |FROM customer
-        |WHERE CAST(c_acctbal AS DECIMAL(18,4)) *
-        |      (SELECT count(*) FROM customer WHERE c_acctbal > 0) >
-        |      (SELECT sum(CAST(c_acctbal AS DECIMAL(18,4))) FROM customer
-        |       WHERE c_acctbal > 0)
-        |  AND NOT EXISTS (SELECT 1 FROM orders
-        |                  WHERE o_custkey = c_custkey AND o_orderstatus = 'O')
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q45_min_price_supplier" ->
-      """WITH pairs AS (
-        |  SELECT l_partkey, l_suppkey, min(l_extendedprice) AS min_price
-        |  FROM lineitem GROUP BY 1, 2),
-        |best AS (
-        |  SELECT l_partkey, min(min_price) AS best_price FROM pairs GROUP BY 1)
-        |SELECT p_partkey, l_suppkey AS s_suppkey, min_price
-        |FROM pairs JOIN best USING (l_partkey)
-        |JOIN part ON l_partkey = p_partkey
-        |WHERE min_price = best_price AND p_size <= 5
-        |ORDER BY p_partkey, s_suppkey""".stripMargin,
-
-    "q46_late_order_priority" ->
-      """SELECT o_orderpriority, count(*)::BIGINT AS order_count
-        |FROM orders
-        |WHERE EXISTS (SELECT 1 FROM lineitem
-        |  WHERE l_orderkey = o_orderkey
-        |    AND epoch_us(CAST(l_shipdate AS TIMESTAMP)) -
-        |        epoch_us(CAST(o_orderdate AS TIMESTAMP)) > 5184000000000)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    "q47_small_qty_revenue" ->
+    },
       """WITH scoped AS (
         |  SELECT l_partkey AS p_partkey, CAST(l_quantity AS BIGINT) AS qty,
         |    l_extendedprice
@@ -497,9 +437,21 @@ object ClassicQueries {
         |    AS DOUBLE) AS revenue
         |FROM scoped JOIN stats USING (p_partkey)
         |WHERE qty * 5 * cnt < sum_qty
-        |GROUP BY p_partkey ORDER BY p_partkey""".stripMargin,
+        |GROUP BY p_partkey ORDER BY p_partkey""".stripMargin),
 
-    "q48_forecast_revenue" ->
+    // TPC-H Q6 shape (forecasting revenue change): revenue that would
+    // be gained by eliminating small discounts — one scan, every
+    // predicate pushed to the parquet reader, exact-decimal money sum.
+    // The canonical "is your filter pushdown working" query.
+    "q48_forecast_revenue" -> Query((s, dir) =>
+      t(s, dir, "lineitem")
+        .where(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
+          col("l_shipdate") < lit("1997-01-01").cast("timestamp") &&
+          col("l_discount") >= 0.05 && col("l_discount") <= 0.07 &&
+          col("l_quantity") < 24)
+        .agg(moneySum(col("l_extendedprice") * col("l_discount"))
+          .as("revenue"),
+          count(lit(1)).as("n_items")),
       """SELECT CAST(round(sum(CAST(l_extendedprice * l_discount
         |    AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue,
         |  count(*)::BIGINT AS n_items
@@ -507,9 +459,27 @@ object ClassicQueries {
         |WHERE CAST(l_shipdate AS TIMESTAMP) >= TIMESTAMP '1996-01-01'
         |  AND CAST(l_shipdate AS TIMESTAMP) < TIMESTAMP '1997-01-01'
         |  AND l_discount >= 0.05 AND l_discount <= 0.07
-        |  AND l_quantity < 24""".stripMargin,
+        |  AND l_quantity < 24""".stripMargin),
 
-    "q49_returned_items" ->
+    // TPC-H Q10 shape (returned-item reporting): the customers who
+    // returned the most revenue in a quarter — returns join orders join
+    // customer (nation denormalized to the raw key; the fixture carries
+    // no n_name need here), top-20 under a TOTAL (revenue desc,
+    // custkey) order so the cut line is deterministic.
+    "q49_returned_items" -> Query((s, dir) => {
+      val li = t(s, dir, "lineitem").where(col("l_returnflag") === "R")
+      val o = t(s, dir, "orders")
+        .where(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
+          col("o_orderdate") < lit("1996-04-01").cast("timestamp"))
+      val c = t(s, dir, "customer")
+      li.join(o, li("l_orderkey") === o("o_orderkey"))
+        .join(c, o("o_custkey") === c("c_custkey"))
+        .groupBy(col("c_custkey"), col("c_name"), col("c_nationkey"),
+          col("c_acctbal"))
+        .agg(moneySum(rev).as("revenue"))
+        .orderBy(col("revenue").desc, col("c_custkey"))
+        .limit(20)
+    },
       """SELECT c_custkey, c_name, c_nationkey, c_acctbal,
         |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
         |    AS DECIMAL(18,4))), 2) AS DOUBLE) AS revenue
@@ -520,6 +490,9 @@ object ClassicQueries {
         |  AND CAST(o_orderdate AS TIMESTAMP) >= TIMESTAMP '1996-01-01'
         |  AND CAST(o_orderdate AS TIMESTAMP) < TIMESTAMP '1996-04-01'
         |GROUP BY 1, 2, 3, 4
-        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin,
+        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin),
   )
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = registry.queries
+  lazy val oracleSql: Map[String, String] = registry.oracleSql
 }

@@ -9,10 +9,9 @@ package graft
   * proves (a) results are bit-identical, (b) the reliable path actually
   * wrote checkpoint data to the configured directory.
   *
-  * Ordering note: `setCheckpointDir` is JVM-global and has no unset, so
-  * the dir this spec configures persists for later suites — harmless
-  * (cutLineage simply keeps using the reliable path over tiny test
-  * frames) but worth knowing when reading timings.
+  * `setCheckpointDir` is JVM-global and has no unset, so build.sbt runs
+  * this spec in a forked JVM of its own: the other suites keep the
+  * local fallback that Bench and Verify use.
   */
 class CheckpointPolicySpec extends SparkSpec {
 
@@ -21,9 +20,8 @@ class CheckpointPolicySpec extends SparkSpec {
       .collect().map(_.toSeq).toSet
 
   test("iterative operators: identical results under local and reliable checkpointing") {
-    // setCheckpointDir is JVM-global with no unset; if some earlier
-    // suite in this JVM already configured one, the local-fallback leg
-    // can't run — CANCEL (the comparison is meaningless), don't fail.
+    // If a checkpoint dir is already set in this JVM, the local-fallback
+    // leg can't run — CANCEL (the comparison is meaningless), don't fail.
     assume(spark.sparkContext.getCheckpointDir.isEmpty,
       "a checkpoint dir is already set in this JVM — cannot exercise the local fallback")
     // Two iteration families: pagerank (per-sweep join+agg fixed point)

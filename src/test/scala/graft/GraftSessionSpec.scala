@@ -24,4 +24,8 @@ class GraftSessionSpec extends SparkSpec {
     assert(spark.experimental.extraStrategies.contains(TopKStrategy))
     assert(spark.experimental.extraOptimizations.contains(RegexPrefixRewrite))
   }
+
+  test("the test session has no checkpoint dir: lineage is cut locally, as in Bench") {
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+  }
 }

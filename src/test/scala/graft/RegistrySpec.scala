@@ -1,11 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.queries.{AnalyticsQueries, CapabilityQueries, ClassicQueries, CorpusQueries, ExtensionQueries, FrontierQueries, MiningQueries, ParityQueries, PipelineQueries, StreamingQueries}
+import graft.queries.{AnalyticsQueries, CapabilityQueries, ClassicQueries, CorpusQueries, ExtensionQueries, FrontierQueries, MiningQueries, ParityQueries, PipelineQueries, Query, Registry, StreamingQueries}
 
-/** The driver contract is assembled by `++` over the query registries — a
-  * duplicated query name would silently SHADOW an earlier definition and
-  * the driver would grade the wrong program. Locked down here.
+/** `SparkEntry` concatenates the ten query registries; a query name in
+  * two of them, or twice in one, would otherwise SHADOW an earlier
+  * definition and the wrong program would be graded. Locked down here.
   */
 class RegistrySpec extends AnyFunSuite {
 
@@ -34,5 +34,13 @@ class RegistrySpec extends AnyFunSuite {
     // full-coverage invariant established in round 2: zero rows-only checks
     val unoracled = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     assert(unoracled.isEmpty, s"queries without oracles: $unoracled")
+  }
+
+  test("a name given twice in one registry is rejected") {
+    val q = Query((s, _) => s.emptyDataFrame, "SELECT 1")
+    val e = intercept[IllegalArgumentException](Registry("a" -> q, "b" -> q, "a" -> q))
+    assert(e.getMessage.endsWith("query names registered twice: a"))
+    intercept[IllegalArgumentException](Registry.concat(Registry("a" -> q), Registry("a" -> q)))
+    assert(Registry("a" -> q, "b" -> q).oracleSql == Map("a" -> "SELECT 1", "b" -> "SELECT 1"))
   }
 }

@@ -128,4 +128,24 @@ class ScheduledRunnerSpec extends SparkSpec {
     val quoted = json.readTree(RunStats.failureJson(new RuntimeException("a \"b\"\n")))
     assert(quoted.get("message").asText == "a \"b\"\n")
   }
+
+  test("a failed Spark job's message drops its stack traces and is capped") {
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val frames = (1 to 30).map(i => s"\n\tat org.apache.spark.scheduler.Task.run$i(Task.scala:$i)").mkString
+    val head = "Job aborted due to stage failure: Task 0 in stage 1.0 failed 1 times, most recent " +
+      "failure: Lost task 0.0 in stage 1.0 (TID 1) (localhost executor driver): " +
+      "org.apache.spark.SparkException: Exception thrown in awaitResult: "
+    val cause = "Caused by: java.lang.RuntimeException: " +
+      "file:/data/out/events_out.parquet/part-00000.snappy.parquet is not a Parquet file."
+    val msg = head + frames + "\n" + cause + frames + "\n\t... 25 more\n\nDriver stacktrace:" + frames
+    assert(msg.length > 5 * 1024)
+    val failed = json.readTree(RunStats.failureJson(new org.apache.spark.SparkException(msg)))
+    assert(failed.get("error").asText == "org.apache.spark.SparkException")
+    assert(failed.get("message").asText == head + "\n" + cause)
+
+    val long = json.readTree(RunStats.failureJson(new RuntimeException("x" * 6000)))
+    assert(long.get("message").asText == "x" * 1024)
+    val traceOnly = RunStats.failureJson(new RuntimeException(("y" * 2000) + frames))
+    assert(traceOnly.length <= 1024 + 64 && !traceOnly.contains("\\tat "))
+  }
 }

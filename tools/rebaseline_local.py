@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Rebuild BENCH_LOCAL.json from quiet full-suite bench runs at one HEAD.
 
-Usage: python3 tools/rebaseline_local.py BENCH_FULL_00NN.json [more...]
+Usage: python3 tools/rebaseline_local.py target/bench/BENCH_FULL_00NN.json [more...]
 
 Per query: the MIN wall across the given runs (the bench's own reported
 figure is already a min over passes). Writes BENCH_LOCAL.json with the
