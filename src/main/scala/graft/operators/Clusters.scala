@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.sources.Tables
 
 /** Duplicate-cluster canonicalization: near-dup detection yields PAIRS;
   * deduplication needs CLUSTERS (connected components of the pair graph)
@@ -13,21 +14,23 @@ import org.apache.spark.storage.StorageLevel
   * the classic large-graph CC algorithm (what GraphX/GraphFrames run),
   * expressed in DataFrames. Converges in O(component diameter)
   * iterations; near-dup families are shallow (diameter ≤ 3-4 in
-  * practice), and `maxIter` bounds pathological chains.
+  * practice), and `MaxIter` bounds pathological chains.
   *
   * Scale design: each iteration is one join + one aggregation, both
   * partitioned by node id, and costs exactly ONE driver action (a
   * `count` of changed labels that doubles as the cache materialization).
   * Lineage is truncated by persisting each iteration and unpersisting
-  * the previous one; every `checkpointEvery` iterations the labels are
-  * written to RELIABLE checkpoint storage when
-  * `spark.sparkContext.setCheckpointDir` is configured — on a real
-  * cluster an executor loss then replays at most `checkpointEvery`
-  * iterations instead of the whole history (local runs without a
-  * checkpoint dir fall back to `localCheckpoint`, whose blocks die with
-  * an executor — acceptable in a single-JVM session, documented here).
+  * the previous one. The initial labels, and the labels every
+  * `CheckpointEvery` iterations, are cut eagerly by [[Tables.cutLineage]],
+  * the engine's one cut policy: with a checkpoint dir, an executor loss
+  * on a real cluster then replays at most `CheckpointEvery` iterations
+  * instead of the whole history (local blocks, the fallback, die with
+  * an executor — acceptable in a single-JVM session).
   */
 object Clusters {
+
+  private val MaxIter = 100        // deeper components fail loudly
+  private val CheckpointEvery = 5  // iterations between periodic cuts
 
   /** Connected components of an undirected pair graph.
     * Input: (id_a, id_b) edges. Output: (id, cluster_id) for every node
@@ -51,10 +54,9 @@ object Clusters {
     * integral ids the result schema does not depend on which regime
     * ran; mixed-width id columns always take the distributed loop.
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 100,
-      checkpointEvery: Int = 5, localEdgeLimit: Long = 500000L): DataFrame = {
+  def connectedComponents(pairs: DataFrame,
+      localEdgeLimit: Long = 500000L): DataFrame = {
     val spark = pairs.sparkSession
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
     import org.apache.spark.sql.types.{IntegerType, LongType, ShortType}
     val idType = pairs.schema("id_a").dataType
     val e0 = pairs.select(col("id_a"), col("id_b"))
@@ -101,9 +103,8 @@ object Clusters {
       .union(e0.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    var labels = edges.select(col("id_a").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .localCheckpoint(true)
+    var labels = Tables.cutLineage(edges.select(col("id_a").as("id")).distinct()
+      .withColumn("label", col("id")), eager = true)
     // The eager label init above materialized `edges`; from here the loop
     // only reads the edges cache, so the single-direction e0 copy is dead
     // weight — drop it now rather than holding 1.5× the edge data through
@@ -113,7 +114,7 @@ object Clusters {
     var converged = false
     var i = 0
     var prev: DataFrame = null
-    while (!converged && i < maxIter) {
+    while (!converged && i < MaxIter) {
       val neighborMin = edges
         .join(labels, edges("id_b") === labels("id"))
         .groupBy(edges("id_a").as("id"))
@@ -128,12 +129,10 @@ object Clusters {
       // what materializes the persist (so the next iteration's join reads
       // the cache, not the lineage).
       converged = updated.where(col("label") =!= col("old")).count() == 0L
-      if ((i + 1) % checkpointEvery == 0 && !converged) {
+      if ((i + 1) % CheckpointEvery == 0 && !converged) {
         // Periodic checkpoint bounds both lineage depth and replay-on-
         // failure cost on deep components.
-        val snap =
-          if (reliable) updated.select("id", "label", "old").checkpoint(true)
-          else updated.select("id", "label", "old").localCheckpoint(true)
+        val snap = Tables.cutLineage(updated.select("id", "label", "old"), eager = true)
         updated.unpersist()
         updated = snap
       }
@@ -149,10 +148,10 @@ object Clusters {
     if (!converged) {
       if (prev != null) prev.unpersist()
       throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter iterations " +
-          s"(component diameter exceeds maxIter); raise maxIter — or, for " +
-          s"deep-chain graphs that fit the driver, raise localEdgeLimit " +
-          s"so the union-find path (no iteration bound) takes them")
+        s"connectedComponents did not converge in $MaxIter iterations " +
+          s"(component diameter exceeds $MaxIter); for deep-chain graphs " +
+          s"that fit the driver, raise localEdgeLimit so the union-find " +
+          s"path (no iteration bound) takes them")
     }
     // The final labels stay persisted: the caller consumes them lazily and
     // the last iteration's cache is the result's only materialization.

@@ -65,8 +65,7 @@ object Coreset {
     var r = 2
     var exhausted = false
     while (r <= k && !exhausted) {
-      // engine-wide lineage-cut policy (reliable checkpoint storage
-      // when a checkpoint dir exists — executor-loss-safe on clusters)
+      // the engine's one lineage-cut policy
       state = graft.sources.Tables.cutLineage(state)
       val next = state.orderBy(col("mind").desc, col("id"))
         .select("id", "u", "mind").as[(Long, Seq[Long], Long)].head()

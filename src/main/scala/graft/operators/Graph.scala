@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.Tables
 
 /** Link-analysis over edge tables: fixed-iteration PageRank in exact
   * integer arithmetic.
@@ -11,9 +12,9 @@ import org.apache.spark.sql.functions._
   * engine ships it as a first-class batch operator rather than leaving
   * users to export the graph elsewhere.
   *
-  * Everything is fixed-point: ranks live in a `scale`-scaled BIGINT,
-  * every division is integral (`div`), every sum is exact integer
-  * addition — so the distributed result is bit-identical regardless of
+  * Everything is fixed-point: ranks live in a scaled BIGINT, every
+  * division is integral (`div`), every sum is exact integer addition —
+  * so the distributed result is bit-identical regardless of
   * partitioning or aggregation order, and an external SQL oracle can
   * replay it verbatim. (Float PageRank would differ per run: shuffle
   * order changes the summation order.)
@@ -22,24 +23,21 @@ import org.apache.spark.sql.functions._
   * current rank table on `src` plus one aggregation by `dst` — the
   * standard distributed PageRank step. Edges are persisted once (they
   * are re-read every iteration); on a long-lived session the cache is
-  * LRU-evictable, and at real scale each iteration's rank table would
-  * be checkpointed to cut lineage (documented trade-off, same policy as
-  * [[Clusters.connectedComponents]]).
+  * LRU-evictable. Every sweep ends in a lazy [[Tables.cutLineage]], the
+  * engine's one cut policy: without it, sweep k's plan embeds sweeps
+  * 1..k-1, so whole-stage codegen compiles O(k²) stages (measured: 37 s
+  * cold / 6.4 s warm for 3 PageRank sweeps at sf0.1; ~2.5 s warm with
+  * the cut). Each operator stays one lazy plan, each sweep reading the
+  * previous sweep's blocks inside the caller's one action.
   */
 object Graph {
 
-  /** Lazy lineage cut between sweeps: WITHOUT it, sweep k's plan embeds
-    * sweeps 1..k-1 as subplans, so whole-stage codegen compiles O(k²)
-    * stages (measured: 37 s cold / 6.4 s warm for 3 PageRank sweeps at
-    * sf0.1; ~2.5 s warm with the cut). `eager = false` keeps the
-    * operator a single lazy plan — materialization happens inside the
-    * caller's one action, each sweep reading the previous sweep's
-    * materialized blocks. Reliable checkpoint storage is used when the
-    * session has a checkpoint dir (same policy as
-    * [[Clusters.connectedComponents]]); local blocks otherwise.
-    */
-  private def truncate(df: DataFrame): DataFrame =
-    graft.sources.Tables.cutLineage(df) // ONE copy of the cut policy
+  // Damping is the exact fraction 85/100. Fixed point: a PageRank rank
+  // of 1.0 is 10¹², the top HITS score is 10⁶.
+  private val DampNum = 85L
+  private val DampDen = 100L
+  private val PageRankScale = 1000000000000L
+  private val HitsScale = 1000000L
 
   /** PageRank with `iterations` synchronous sweeps.
     *
@@ -49,14 +47,11 @@ object Graph {
     * graphs whose dangling share is small, and exactness is preserved.
     *
     * @param edges0 directed edge table; deduplicated internally
-    * @param scale  fixed-point denominator for ranks (rank 1.0 ≡ scale)
-    * @return (node, rank_fp) — rank_fp is the scale-scaled integer rank
+    * @return (node, rank_fp) — rank_fp is the 10¹²-scaled integer rank
     */
   def pageRankInt(edges0: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int = 3, dampNum: Long = 85, dampDen: Long = 100,
-      scale: Long = 1000000000000L,
-      truncateLineage: Boolean = true): DataFrame = {
-    require(iterations >= 1 && dampNum >= 0 && dampNum <= dampDen)
+      iterations: Int = 3): DataFrame = {
+    require(iterations >= 1)
     // Persist the edge table PRE-PARTITIONED by src — the key every
     // sweep's inflow join probes. distinct() leaves the cache
     // partitioned by (src, dst), so without the repartition each of the
@@ -74,16 +69,16 @@ object Graph {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Out-degrees are sweep-invariant: cut their lineage once so sweeps
     // read the ≤|V|-row result instead of re-aggregating the edge cache.
-    val outdeg = truncate(edges.groupBy("src").agg(count(lit(1)).as("deg")))
+    val outdeg = Tables.cutLineage(edges.groupBy("src").agg(count(lit(1)).as("deg")))
     // Node count and teleport base as a broadcast 1-row frame: keeps the
     // whole computation one lazy plan (no driver action inside the
     // operator). base = ((1-d) * scale) div n, exactly.
     val base = broadcast(nodes.agg(count(lit(1)).as("n_nodes"))
       .select(col("n_nodes"),
-        expr(s"(${(dampDen - dampNum) * scale} div $dampDen) div n_nodes")
+        expr(s"(${(DampDen - DampNum) * PageRankScale} div $DampDen) div n_nodes")
           .as("base_fp")))
     var ranks = nodes.crossJoin(base)
-      .select(col("node"), expr(s"${scale}L div n_nodes").as("r"))
+      .select(col("node"), expr(s"${PageRankScale}L div n_nodes").as("r"))
     for (_ <- 1 to iterations) {
       // Per-source outflow share, integral: r div deg. Sources without
       // out-edges contribute nothing (inner join drops them).
@@ -94,9 +89,9 @@ object Graph {
       val swept = nodes.join(inflow, nodes("node") === inflow("dst"), "left")
         .crossJoin(base)
         .select(col("node"),
-          expr(s"base_fp + (($dampNum * coalesce(infl, 0L)) div $dampDen)")
+          expr(s"base_fp + (($DampNum * coalesce(infl, 0L)) div $DampDen)")
             .as("r"))
-      ranks = if (truncateLineage) truncate(swept) else swept
+      ranks = Tables.cutLineage(swept)
     }
     ranks.select(col("node"), col("r").as("rank_fp"))
   }
@@ -118,9 +113,8 @@ object Graph {
     * out-edges) over the persisted edge table.
     */
   def hitsInt(edges0: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int = 2, scale: Long = 1000000L,
-      truncateLineage: Boolean = true): DataFrame = {
-    require(iterations >= 1 && scale > 0)
+      iterations: Int = 2): DataFrame = {
+    require(iterations >= 1)
     // Two cached copies of the edge table, one per sweep-join key: the
     // authority sweep probes on src, the hub sweep on dst. Caching each
     // copy pre-partitioned on its key removes a full-edge-table exchange
@@ -141,9 +135,9 @@ object Graph {
       val mx = broadcast(raw.agg(max(col(valCol)).as("__mx")))
       raw.crossJoin(mx)
         .select(col("node"),
-          expr(s"($valCol * ${scale}L) div __mx").as(valCol))
+          expr(s"($valCol * ${HitsScale}L) div __mx").as(valCol))
     }
-    var hub = nodes.select(col("node"), lit(scale).as("h"))
+    var hub = nodes.select(col("node"), lit(HitsScale).as("h"))
     var auth: DataFrame = null
     // The lineage cut goes BEFORE renorm, not after: renorm reads its
     // input TWICE (the max aggregate and the scaled projection), so a
@@ -153,20 +147,18 @@ object Graph {
     // map over the cut blocks plus a 1-row broadcast; the next sweep's
     // cut bounds its lineage, so no second cut is needed.
     for (_ <- 1 to iterations) {
-      var aRaw = nodes.join(
+      val aRaw = nodes.join(
           edges.join(hub, edges("src") === hub("node"))
             .groupBy(col("dst")).agg(sum("h").as("a_raw")),
           nodes("node") === col("dst"), "left")
         .select(col("node"), coalesce(col("a_raw"), lit(0L)).as("a"))
-      if (truncateLineage) aRaw = truncate(aRaw)
-      auth = renorm(aRaw, "a")
-      var hRaw = nodes.join(
+      auth = renorm(Tables.cutLineage(aRaw), "a")
+      val hRaw = nodes.join(
           edgesByDst.join(auth, edgesByDst("dst") === auth("node"))
             .groupBy(col("src")).agg(sum("a").as("h_raw")),
           nodes("node") === col("src"), "left")
         .select(col("node"), coalesce(col("h_raw"), lit(0L)).as("h"))
-      if (truncateLineage) hRaw = truncate(hRaw)
-      hub = renorm(hRaw, "h")
+      hub = renorm(Tables.cutLineage(hRaw), "h")
     }
     auth.select(col("node"), col("a").as("auth_fp"))
       .join(hub.select(col("node"), col("h").as("hub_fp")), Seq("node"))
@@ -189,10 +181,8 @@ object Graph {
     */
   def personalizedPageRankInt(edges0: DataFrame, srcCol: String,
       dstCol: String, seeds: DataFrame, seedCol: String,
-      iterations: Int = 2, dampNum: Long = 85, dampDen: Long = 100,
-      scale: Long = 1000000000000L,
-      truncateLineage: Boolean = true): DataFrame = {
-    require(iterations >= 1 && dampNum >= 0 && dampNum <= dampDen)
+      iterations: Int = 2): DataFrame = {
+    require(iterations >= 1)
     // Same pre-partitioned-by-src edge cache + one-shot out-degree cut
     // as [[pageRankInt]] — removes the per-sweep full-edge exchange.
     val edges = edges0
@@ -201,7 +191,7 @@ object Graph {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nodes = edges.select(col("src").as("node"))
       .union(edges.select(col("dst"))).distinct()
-    val outdeg = truncate(edges.groupBy("src").agg(count(lit(1)).as("deg")))
+    val outdeg = Tables.cutLineage(edges.groupBy("src").agg(count(lit(1)).as("deg")))
     // Seeds restricted to graph nodes: teleport mass must land on rows
     // the sweep join can ever see, and n_seeds must count the same set.
     val seedNodes = nodes.join(
@@ -215,9 +205,9 @@ object Graph {
       .crossJoin(nSeeds)
       .select(col("node"),
         when(col("__is_seed"),
-          expr(s"(${(dampDen - dampNum) * scale} div $dampDen) div n_seeds"))
+          expr(s"(${(DampDen - DampNum) * PageRankScale} div $DampDen) div n_seeds"))
           .otherwise(lit(0L)).as("tele_fp"),
-        when(col("__is_seed"), expr(s"${scale}L div n_seeds"))
+        when(col("__is_seed"), expr(s"${PageRankScale}L div n_seeds"))
           .otherwise(lit(0L)).as("r0"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var ranks = flagged.select(col("node"), col("r0").as("r"))
@@ -228,9 +218,9 @@ object Graph {
         .groupBy("dst").agg(sum("c").as("infl"))
       val swept = flagged.join(inflow, flagged("node") === inflow("dst"), "left")
         .select(col("node"),
-          expr(s"tele_fp + (($dampNum * coalesce(infl, 0L)) div $dampDen)")
+          expr(s"tele_fp + (($DampNum * coalesce(infl, 0L)) div $DampDen)")
             .as("r"))
-      ranks = if (truncateLineage) truncate(swept) else swept
+      ranks = Tables.cutLineage(swept)
     }
     ranks.select(col("node"), col("r").as("rank_fp"))
   }
@@ -255,7 +245,7 @@ object Graph {
     * Per-sweep lineage cut as in [[pageRankInt]].
     */
   def labelPropagation(edges0: DataFrame, srcCol: String, dstCol: String,
-      rounds: Int = 2, truncateLineage: Boolean = true): DataFrame = {
+      rounds: Int = 2): DataFrame = {
     require(rounds >= 1)
     val und = edges0.select(
         least(col(srcCol), col(dstCol)).cast("long").as("u"),
@@ -283,7 +273,7 @@ object Graph {
         .groupBy(col("nd").as("node"))
         .agg(min(struct((col("cnt") * -1).as("nc"), col("label"))).as("m"))
         .select(col("node"), col("m.label").as("label"))
-      labels = if (truncateLineage) truncate(swept) else swept
+      labels = Tables.cutLineage(swept)
     }
     labels
   }
@@ -445,7 +435,7 @@ object Graph {
       // times (the degree aggregate + both semi-join probes), so an
       // uncut plan re-derives every earlier round's joins per reference
       // — measured 8.0 s for 3 rounds at sf0.1, 1.3 s with the cut.
-      adj = truncate(adj
+      adj = Tables.cutLineage(adj
         .join(keep.select(col("node").as("u")), Seq("u"), "left_semi")
         .join(keep.select(col("node").as("v")), Seq("v"), "left_semi")
         .select("u", "v"))
@@ -507,8 +497,7 @@ object Graph {
     * way as [[pageRankInt]].
     */
   def bfsDepth(edges0: DataFrame, srcCol: String, dstCol: String,
-      seeds: DataFrame, seedCol: String, maxDepth: Int = 3,
-      truncateLineage: Boolean = true): DataFrame = {
+      seeds: DataFrame, seedCol: String, maxDepth: Int = 3): DataFrame = {
     require(maxDepth >= 1)
     // Pre-partitioned by src, the per-sweep frontier-join key (same
     // rationale as [[pageRankInt]]).
@@ -523,7 +512,7 @@ object Graph {
         .select(col("dst").as("node"), lit(d.toLong).as("depth"))
       val swept = depth.union(next)
         .groupBy("node").agg(min("depth").as("depth"))
-      depth = if (truncateLineage) truncate(swept) else swept
+      depth = Tables.cutLineage(swept)
     }
     depth
   }

@@ -28,8 +28,14 @@ object IncrementalDedup {
     */
   def snapshot(target: DataFrame, fields: Seq[String] = Seq.empty): DataFrame = {
     val t = if (fields.isEmpty) target else target.select(fields.map(col): _*)
-    t.select(RowHash.ofAllColumns(t).as(H)).distinct()
+    rowHashes(t).distinct()
   }
+
+  /** Every target row's hash, duplicates kept: all [[filter]] needs, as
+    * its `left_anti` join ignores duplicate keys.
+    */
+  def rowHashes(target: DataFrame): DataFrame =
+    target.select(RowHash.ofAllColumns(target).as(H))
 
   /** P3/J1 `filter`: drop source rows whose row hash appears in the snapshot.
     * An empty snapshot passes everything through (`etl.go:29-31`); a full

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.sources.Tables
 
 /** Dominant principal direction of an embedding column by fixed-point
   * power iteration — the "which way does this corpus mostly point"
@@ -30,7 +31,8 @@ import org.apache.spark.sql.functions._
   * vector id (the dot products) and one keyed on the dimension index
   * (the d-row sums, map-side combined), plus a 1-row broadcast renorm —
   * the same iteration skeleton as [[Graph.pageRankInt]], with the
-  * d-dimensional state always tiny. Lineage is cut per sweep.
+  * d-dimensional state always tiny. Each sweep ends in a lazy lineage
+  * cut through [[Tables.cutLineage]], the engine's one cut policy.
   */
 object Pca {
 
@@ -41,11 +43,6 @@ object Pca {
   def tdivSql(x: String, k: String, divOp: String = "div"): String =
     s"(CASE WHEN $x >= 0 THEN abs($x) $divOp $k " +
       s"ELSE -(abs($x) $divOp $k) END)"
-
-  // ONE copy of the checkpoint-dir-aware lineage-cut policy, shared
-  // engine-wide.
-  private def truncate(df: DataFrame): DataFrame =
-    graft.sources.Tables.cutLineage(df)
 
   /** The dominant component after `iterations` power sweeps, as
     * (pos, w_fp) at 2²⁰ fixed-point scale, starting from the all-ones
@@ -66,8 +63,7 @@ object Pca {
     * @param dim the (fixed, known) embedding dimensionality
     */
   def dominantComponent(df: DataFrame, idCol: String, vecCol: String,
-      dim: Int, iterations: Int = 2,
-      truncateLineage: Boolean = true): DataFrame = {
+      dim: Int, iterations: Int = 2): DataFrame = {
     require(dim >= 1 && iterations >= 1)
     val spark = df.sparkSession
     val scale = 1048576L // 2^20
@@ -92,7 +88,7 @@ object Pca {
         .select(expr(s"greatest(mx div ${scale}L, 1L)").as("mxs")))
       val swept = s.crossJoin(mx)
         .select(col("pos"), expr(tdivSql("s", "mxs")).as("w"))
-      w = if (truncateLineage) truncate(swept) else swept
+      w = Tables.cutLineage(swept)
     }
     w.select(col("pos"), col("w").as("w_fp"))
   }

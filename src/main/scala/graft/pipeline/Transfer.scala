@@ -144,7 +144,7 @@ object Transfer {
             if (tgt.columns.contains(w.column)) tgt = tgt.where(w.predicate)
           }
           if (cfg.fields.nonEmpty) tgt = tgt.select(cfg.fields.map(col): _*)
-          IncrementalDedup.filter(src, IncrementalDedup.snapshot(tgt))
+          IncrementalDedup.filter(src, IncrementalDedup.rowHashes(tgt))
         }
       }
 

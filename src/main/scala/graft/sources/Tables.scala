@@ -124,18 +124,18 @@ object Tables {
     else df
   }
 
-  /** Lazy lineage cut for a frame that will be REFERENCED more than once
-    * in a bigger plan (a broadcast stats row feeding two consumers, an
-    * iteration's working set): without it every reference re-derives the
-    * frame's whole subplan. `eager = false` keeps the caller's plan
-    * lazy — materialization happens inside the caller's single action,
-    * later references reading the first evaluation's blocks. Reliable
-    * checkpoint storage when the session has a checkpoint dir (blocks
-    * survive executor loss — the 1000-executor default), local blocks
-    * otherwise. Same policy as the Graph/Clusters iteration cuts.
+  /** The engine's one lineage-cut policy, used by every iterative
+    * operator: reliable checkpoint storage when the session has a
+    * checkpoint dir (blocks survive executor loss), local blocks
+    * otherwise. A frame REFERENCED more than once in a bigger plan (an
+    * iteration's working set, a stats row feeding two consumers) would
+    * otherwise re-derive its whole subplan per reference. A lazy cut
+    * keeps the caller's plan lazy: its single action materializes the
+    * blocks that later references read. `eager` is for a driver loop
+    * that needs the blocks before its next step ([[graft.operators.Clusters]]).
     */
-  def cutLineage(df: DataFrame): DataFrame =
+  def cutLineage(df: DataFrame, eager: Boolean = false): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      df.checkpoint(eager = false)
-    else df.localCheckpoint(eager = false)
+      df.checkpoint(eager)
+    else df.localCheckpoint(eager)
 }

@@ -127,15 +127,4 @@ class FrontierOpsSpec extends SparkSpec {
     assert(picks.head == 1L)
     assert(picks.tail.toSet == Set(4L, 5L))
   }
-
-  test("personalized PageRank is identical with and without lineage cuts") {
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L))
-      .toDF("src", "dst")
-    val seeds = Seq(1L, 2L).toDF("s")
-    def run(cut: Boolean) =
-      Graph.personalizedPageRankInt(edges, "src", "dst", seeds, "s",
-        iterations = 2, truncateLineage = cut)
-        .as[(Long, Long)].collect().sortBy(_._1).toSeq
-    assert(run(true) == run(false))
-  }
 }

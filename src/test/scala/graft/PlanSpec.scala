@@ -1,5 +1,11 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import org.apache.spark.TestListenerBus
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.queries.ParityQueries
 
 /** Physical-plan regression checks: the properties that make these plans
@@ -13,6 +19,27 @@ class PlanSpec extends SparkSpec {
     val df = ParityQueries.queries(name)(spark, sf001)
     df.queryExecution.explainString(
       org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+  }
+
+  /** The formatted final plan of the frame `build` returns, and the
+    * formatted plan of every SQL execution run while it was built. An
+    * iterative operator's lineage cuts execute its sweeps then, so the
+    * sweeps' joins and aggregations appear in those plans; the final
+    * plan only scans the last cut's blocks.
+    */
+  private def executedPlans(build: => DataFrame): (String, Seq[String]) = {
+    val executed = new ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = executed.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = executed.add(qe)
+    }
+    def formatted(qe: QueryExecution) = qe.explainString(ExplainMode.fromString("formatted"))
+    TestListenerBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    val df =
+      try { val df = build; TestListenerBus.drain(spark.sparkContext); df }
+      finally spark.listenerManager.unregister(listener)
+    (formatted(df.queryExecution), executed.asScala.toSeq.map(formatted))
   }
 
   test("projection prunes the parquet scan to selected columns") {
@@ -325,13 +352,11 @@ class PlanSpec extends SparkSpec {
       .select(col("l_orderkey").as("ok"), col("l_suppkey").as("sk")).distinct()
     val edges = li.toDF("ok", "src").join(li.toDF("ok", "dst"), "ok")
       .where(col("src") =!= col("dst")).select("src", "dst")
-    // truncateLineage=false: the lazy per-sweep checkpoint collapses the
-    // iteration body to a LogicalRDD leaf, hiding the joins this test
-    // inspects (production keeps the cut — see Graph.truncate).
-    val df = graft.operators.Graph.pageRankInt(edges, "src", "dst", 2,
-      truncateLineage = false)
-    val p = df.queryExecution.explainString(
-      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    // The per-sweep lineage cut leaves the final plan a scan of the cut
+    // blocks: the sweeps' joins are in the plans the cuts executed.
+    val (last, cuts) = executedPlans(
+      graft.operators.Graph.pageRankInt(edges, "src", "dst", 2))
+    val p = (last +: cuts).mkString("\n")
     assert(!p.contains("CartesianProduct"), "no cartesian joins in the sweep")
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"),
       "the 1-row (n_nodes, base_fp) table must broadcast")
@@ -387,15 +412,12 @@ class PlanSpec extends SparkSpec {
   }
 
   test("pca power sweep: component table broadcasts, no cartesian on data") {
-    // truncateLineage=false: the lazy per-sweep checkpoint collapses the
-    // sweep body to an RDD leaf, hiding the joins this test inspects
-    // (production keeps the cut — same caveat as the pagerank test).
-    val df = graft.operators.Pca.dominantComponent(
+    // Checked on the plans the per-sweep cuts executed, as in the
+    // pagerank test.
+    val (last, cuts) = executedPlans(graft.operators.Pca.dominantComponent(
       graft.sources.Tables.load(spark, sf001, "embeddings"),
-      "vec_id", "embedding", dim = 64, iterations = 2,
-      truncateLineage = false)
-    val p = df.queryExecution.explainString(
-      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      "vec_id", "embedding", dim = 64, iterations = 2))
+    val p = (last +: cuts).mkString("\n")
     assert(p.contains("BroadcastExchange"),
       "the d-row component table must broadcast into each sweep")
     assert(!p.contains("CartesianProduct"),

@@ -82,6 +82,26 @@ class TransferSpec extends SparkSpec {
     assert(sink.read("t").count() == 150)
   }
 
+  test("a target holding duplicated rows gives the same tick as one holding each row once") {
+    val tmp = Files.createTempDirectory("graft-transfer-dup").toString
+    def rows(from: Long, to: Long) =
+      spark.range(from, to).select(col("id"), (col("id") * 3).as("v"))
+    rows(0, 100).write.parquet(s"$tmp/src/t.parquet")
+    val src = new FileConnector(spark, s"$tmp/src")
+    val cfg = Transfer.Config(table = "t", target = "t", increment = true)
+    def tick(name: String, held: org.apache.spark.sql.DataFrame) = {
+      held.write.parquet(s"$tmp/$name/t.parquet")
+      val sink = new FileConnector(spark, s"$tmp/$name")
+      val stats = Transfer.run(src, sink, cfg).copy(durationMs = 0)
+      val written = sink.read("t").exceptAll(held).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+      (stats, written)
+    }
+    val once = tick("once", rows(0, 40))
+    assert(once == (RunStats(100, 40, 60, 0), (40L until 100L).map(i => (i, i * 3))))
+    assert(tick("twice", rows(0, 40).union(rows(0, 40))) == once)
+  }
+
   test("an incremental tick is one SQL execution") {
     val tmp = Files.createTempDirectory("graft-transfer-exec").toString
     val src = new FileConnector(spark, sf0001)
