@@ -246,10 +246,9 @@ object Avro {
   private def plain(codec: String, packed: Array[Byte]): Array[Byte] = codec match {
     case "null" => packed
     case "deflate" =>
-      val inf = new java.util.zip.Inflater(true)
-      try Capped.readAll(new java.util.zip.InflaterInputStream(
-        new java.io.ByteArrayInputStream(packed), inf, 1 << 16), Cap, packed.length * 4L)
-      finally inf.end()
+      val r = Capped.inflate(packed, 0, packed.length, Cap, packed.length * 4L,
+        raw = true)
+      if (r == null) null else r.bytes
     case "snappy" =>
       // avro appends a 4-byte BE CRC32 of the UNCOMPRESSED data
       if (packed.length < 4) return null

@@ -470,7 +470,7 @@ object Containers {
   }
 
   // --- real PNG pixel decode: DEFLATE is in the JDK -------------------
-  // PNG's "codec" is zlib (java.util.zip.Inflater) plus five per-row
+  // PNG's "codec" is zlib (the JDK Inflater) plus five per-row
   // byte filters — no external library needed, unlike JPEG/MP4 whose
   // codecs (DCT/entropy, H.26x) genuinely require one. Supported
   // profile: color types 0 (gray, depths 1/2/4/8/16), 2 (RGB, 8/16),
@@ -559,23 +559,10 @@ object Containers {
     }.filter(p => p._5 > 0 && p._6 > 0)
     val rawLen = passes.map(p => (p._7 + 1L) * p._6).sum
     if (rawLen > (1L << 30) || w.toLong * h * 3 > (1L << 30)) return null
-    val raw = new Array[Byte](rawLen.toInt)
-    val inf = new java.util.zip.Inflater()
-    try {
-      inf.setInput(idat.toByteArray)
-      var got = 0
-      while (got < raw.length && !inf.finished()) {
-        val n = inf.inflate(raw, got, raw.length - got)
-        // zero progress without being finished = truncated stream OR a
-        // preset-dictionary (FDICT) header we'll never satisfy — both
-        // must degrade, not spin the task forever
-        if (n == 0 && !inf.finished()) return null
-        got += n
-      }
-      if (got < raw.length) return null
-    } catch {
-      case _: java.util.zip.DataFormatException => return null
-    } finally inf.end()
+    val z = idat.toByteArray
+    val inflated = Capped.inflate(z, 0, z.length, rawLen, rawLen, raw = false)
+    if (inflated == null || inflated.bytes.length != rawLen) return null
+    val raw = inflated.bytes
     // Reverse the per-row filters pass by pass: each pass is an
     // independent sub-image (its own stride; `prev` all zeros for its
     // first row, per spec), whose pixel (p, row) lands on the output
@@ -1041,27 +1028,13 @@ object Containers {
     out
   }
 
-  /** Zlib (TIFF Compression=8 "Adobe deflate" / 32946) decode of
-    * exactly `expected` bytes — same zero-progress/overrun hardening
-    * as the PNG IDAT path. Null on corruption.
+  /** Zlib (TIFF Compression=8 "Adobe deflate" / 32946) decode of a
+    * strip that inflates to exactly `expected` bytes. Null otherwise.
     */
   private def zlibDecode(d: Array[Byte], off: Int, len: Int,
       expected: Int): Array[Byte] = {
-    val out = new Array[Byte](expected)
-    val inf = new java.util.zip.Inflater()
-    try {
-      inf.setInput(d, off, len)
-      var got = 0
-      while (got < expected && !inf.finished()) {
-        val n = inf.inflate(out, got, expected - got)
-        if (n == 0 && !inf.finished()) return null
-        got += n
-      }
-      if (got < expected) return null
-      out
-    } catch {
-      case _: java.util.zip.DataFormatException => null
-    } finally inf.end()
+    val r = Capped.inflate(d, off, len, expected, expected, raw = false)
+    if (r == null || r.bytes.length != expected) null else r.bytes
   }
 
   /** TIFF-flavor LZW (Compression=5) decode of exactly `expected`
@@ -2265,151 +2238,141 @@ object Containers {
     if (want == sha1Base32(b, off, len)) "ok" else "mismatch"
   }
 
-  /** Expand a `.warc.gz` into plain WARC bytes: Common Crawl frames
-    * each record as its OWN gzip member and concatenates them, which
-    * is exactly the multi-member stream `java.util.zip.GZIPInputStream`
-    * walks natively. Identity for input that is not gzip (magic
-    * `1f 8b`); null for a corrupt or truncated stream, or one
-    * inflating past the 2³⁰-byte cap (a "gzip bomb" must neither OOM
-    * an executor nor loop the task) — degrade-don't-throw. Callers
-    * parse the RETURNED bytes (record offsets index into them, not
-    * into the compressed blob).
-    */
-  def warcInflate(b: Array[Byte]): Array[Byte] = {
-    if (b.length < 2 || u8(b, 0) != 0x1f || u8(b, 1) != 0x8b) return b
-    val out = new java.io.ByteArrayOutputStream(math.min(b.length * 4, 1 << 20))
-    var in: java.util.zip.GZIPInputStream = null
-    try {
-      in = new java.util.zip.GZIPInputStream(
-        new java.io.ByteArrayInputStream(b))
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      var total = 0L
-      while (n >= 0) {
-        total += n
-        if (total > (1L << 30)) return null // decompression bomb
-        out.write(buf, 0, n)
-        n = in.read(buf)
-      }
-      out.toByteArray
-    } catch {
-      case _: java.io.IOException => null // CRC/format error, truncation
-    } finally {
-      // close on EVERY path — the stream owns a native zlib Inflater
-      // that must not wait for GC on the bomb/corrupt returns
-      if (in != null) try in.close() catch { case _: java.io.IOException => () }
-    }
-  }
-
   /** Split a multi-member gzip stream into its members' PLAIN bytes —
-    * the member-aware reader the tolerant `.warc.gz` walk needs
-    * (GZIPInputStream concatenates members invisibly, so one
-    * interloper member poisons the whole stream for the WARC parser).
-    * Each member's header is parsed by hand (CM=8 required;
+    * the member-aware reader the tolerant `.warc.gz` walk needs (a
+    * reader that concatenates members invisibly lets one interloper
+    * member poison the whole stream for the WARC parser). Each
+    * member's header is parsed by hand (CM=8 required;
     * FEXTRA/FNAME/FCOMMENT/FHCRC fields skipped per RFC 1952), the
     * deflate body runs through ONE `reset()` raw Inflater across all
-    * members (`end()`ed in finally — the Deflater lesson), and the
+    * members ([[Capped.inflate]]; the Deflater lesson), and the
     * CRC32/ISIZE trailer is verified per member. Null for damage in
-    * ANY member, zero-progress loops, or the 2³⁰ bomb cap —
-    * degrade-don't-throw. Trailing bytes that don't parse as a next
-    * member header after ≥1 sound member are treated as end-of-stream
-    * (GZIPInputStream parity), not corruption.
+    * ANY member or past the 2³⁰ bomb cap — degrade-don't-throw.
+    * Trailing bytes that don't parse as a next member header after ≥1
+    * sound member are treated as end-of-stream (`GZIPInputStream`
+    * parity), not corruption.
     */
-  def gzipMembers(b: Array[Byte]): Array[Array[Byte]] = {
-    if (b == null || b.length < 2 || u8(b, 0) != 0x1f || u8(b, 1) != 0x8b)
-      return null
+  def gzipMembers(b: Array[Byte]): Array[Array[Byte]] = gzipMembers(b, 1L << 30)
+
+  /** [[gzipMembers]] with `cap` on the members' total plain bytes: a
+    * Parquet GZIP page passes its declared size.
+    */
+  private[operators] def gzipMembers(b: Array[Byte],
+      cap: Long): Array[Array[Byte]] =
+    if (b == null || b.length < 2 || u8(b, 0) != 0x1f || u8(b, 1) != 0x8b) null
+    else Capped.withInflater(raw = true)(membersWith(_, b, cap))
+
+  private def membersWith(inf: java.util.zip.Inflater, b: Array[Byte],
+      cap: Long): Array[Array[Byte]] = {
     val members = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-    val inf = new java.util.zip.Inflater(true)
-    try {
-      val crc = new java.util.zip.CRC32()
-      var p = 0
-      var total = 0L
-      while (p < b.length) {
-        if (p + 10 > b.length || u8(b, p) != 0x1f || u8(b, p + 1) != 0x8b ||
-            u8(b, p + 2) != 8) {
-          // GZIPInputStream parity: after at least one sound member,
-          // bytes that don't parse as a next member header are
-          // trailing garbage/padding and mean end-of-stream, not
-          // corruption (readTrailer treats a failed header parse the
-          // same way). Damage INSIDE a member still nulls below.
-          return if (members.nonEmpty) members.toArray else null
-        }
-        val flg = u8(b, p + 3)
-        var q = p + 10
-        if ((flg & 4) != 0) { // FEXTRA
-          if (q + 2 > b.length) return null
-          q += 2 + leU16(b, q)
-        }
-        if ((flg & 8) != 0) { // FNAME
-          while (q < b.length && b(q) != 0) q += 1
-          q += 1
-        }
-        if ((flg & 16) != 0) { // FCOMMENT
-          while (q < b.length && b(q) != 0) q += 1
-          q += 1
-        }
-        if ((flg & 2) != 0) { // FHCRC: CRC-16 of the header bytes so far
-          if (q + 2 > b.length) return null
-          val hc = new java.util.zip.CRC32()
-          hc.update(b, p, q - p)
-          if ((hc.getValue & 0xFFFFL) != leU16(b, q)) return null
-          q += 2
-        }
-        if (q > b.length) return null
-        inf.reset()
-        inf.setInput(b, q, b.length - q)
-        val out = new java.io.ByteArrayOutputStream(1 << 12)
-        val buf = new Array[Byte](8192)
-        while (!inf.finished()) {
-          val n = inf.inflate(buf)
-          if (n == 0 && !inf.finished()) return null // corrupt or needs-input
-          total += n
-          if (total > (1L << 30)) return null // decompression bomb
-          out.write(buf, 0, n)
-        }
-        val body = out.toByteArray
-        val trailer = q + ((b.length - q) - inf.getRemaining)
-        if (trailer + 8 > b.length) return null
-        crc.reset()
-        crc.update(body)
-        if ((crc.getValue & 0xFFFFFFFFL) != (leU32(b, trailer) & 0xFFFFFFFFL))
-          return null
-        if ((body.length.toLong & 0xFFFFFFFFL) !=
-            (leU32(b, trailer + 4) & 0xFFFFFFFFL)) return null
-        members += body
-        p = trailer + 8
+    val crc = new java.util.zip.CRC32()
+    var p = 0
+    var total = 0L
+    while (p < b.length) {
+      if (p + 10 > b.length || u8(b, p) != 0x1f || u8(b, p + 1) != 0x8b ||
+          u8(b, p + 2) != 8) {
+        // GZIPInputStream parity: after at least one sound member,
+        // bytes that don't parse as a next member header are
+        // trailing garbage/padding and mean end-of-stream, not
+        // corruption (readTrailer treats a failed header parse the
+        // same way). Damage INSIDE a member still nulls below.
+        return if (members.nonEmpty) members.toArray else null
       }
-      members.toArray
-    } catch {
-      case _: java.util.zip.DataFormatException => null
-      case _: ArrayIndexOutOfBoundsException => null
-    } finally inf.end()
+      val flg = u8(b, p + 3)
+      var q = p + 10
+      if ((flg & 4) != 0) { // FEXTRA
+        if (q + 2 > b.length) return null
+        q += 2 + leU16(b, q)
+      }
+      if ((flg & 8) != 0) { // FNAME
+        while (q < b.length && b(q) != 0) q += 1
+        q += 1
+      }
+      if ((flg & 16) != 0) { // FCOMMENT
+        while (q < b.length && b(q) != 0) q += 1
+        q += 1
+      }
+      if ((flg & 2) != 0) { // FHCRC: CRC-16 of the header bytes so far
+        if (q + 2 > b.length) return null
+        val hc = new java.util.zip.CRC32()
+        hc.update(b, p, q - p)
+        if ((hc.getValue & 0xFFFFL) != leU16(b, q)) return null
+        q += 2
+      }
+      if (q > b.length) return null
+      val m = Capped.inflate(inf, b, q, b.length - q, cap - total, 4096)
+      if (m == null) return null
+      val body = m.bytes
+      total += body.length
+      val trailer = q + m.consumed
+      if (trailer + 8 > b.length) return null
+      crc.reset()
+      crc.update(body)
+      if ((crc.getValue & 0xFFFFFFFFL) != (leU32(b, trailer) & 0xFFFFFFFFL))
+        return null
+      if ((body.length.toLong & 0xFFFFFFFFL) !=
+          (leU32(b, trailer + 4) & 0xFFFFFFFFL)) return null
+      members += body
+      p = trailer + 8
+    }
+    members.toArray
   }
 
+  /** Whether `b` starts like a WARC record: the one payload test the
+    * crawl readers and the decode classifier share.
+    */
+  private[operators] def isWarc(b: Array[Byte]): Boolean =
+    b.length >= 5 && ascii(b, 0, 5) == "WARC/"
+
+  /** A whole-stream codec a crawl blob may be framed in: its name (the
+    * classifier's container label), its sniff, and its capped decode —
+    * `Right(plain)`, or `Left` of the classifier's error class, which
+    * keeps a profile gap (a zstd frame naming a dictionary) apart
+    * from damage.
+    */
+  private[operators] final case class StreamCodec(name: String,
+      sniff: Array[Byte] => Boolean,
+      decode: Array[Byte] => Either[String, Array[Byte]])
+
+  private def orCorrupt(plain: Array[Byte]): Either[String, Array[Byte]] =
+    if (plain == null) Left("corrupt") else Right(plain)
+
+  /** The whole-stream codecs, in sniff order. lz4 comes first with its
+    * CONTENT probe: the skippable-frame magic range is shared between
+    * lz4 and zstd, so the first real frame decides the codec.
+    */
+  private[operators] val streamCodecs: Seq[StreamCodec] = Seq(
+    StreamCodec("lz4", Lz4.isLz4Content, b => orCorrupt(Lz4.decode(b))),
+    StreamCodec("zstd", Zstd.isZstd, b => Zstd.decodeResult(b) match {
+      case Zstd.Ok(plain) => Right(plain)
+      case Zstd.NeedsDictionary => Left("unsupported_profile")
+      case Zstd.Corrupt => Left("corrupt")
+    }),
+    StreamCodec("bzip2", Bzip2.isBzip2, b => orCorrupt(Bzip2.decode(b))),
+    StreamCodec("xz", Xz.isXz, b => orCorrupt(Xz.decode(b))),
+    StreamCodec("compress_z", LzwZ.isZ, b => orCorrupt(LzwZ.decode(b))))
+
   /** Expand a crawl archive whatever its framing: `.warc.gz`
-    * multi-member gzip, `.warc.zst` zstd frames — Common Crawl's
-    * newer distribution format — through the [[Zstd]] adapter over
-    * zstd-jni, identity for plain bytes. Real Common Crawl members
-    * occasionally interleave NON-record gzip members (differently
-    * framed warcinfo, stray payloads); when at least one member IS a
-    * WARC record, such interlopers are skipped instead of poisoning
-    * the whole crawl — a stream with no WARC members at all expands
-    * verbatim (generic gunzip). Null on corruption either way; same
-    * 2³⁰ bomb cap on both paths.
+    * multi-member gzip through [[crawlMembers]], a [[streamCodecs]]
+    * codec (`.warc.zst` is Common Crawl's newer distribution format),
+    * identity for plain bytes. Real Common Crawl members occasionally
+    * interleave NON-record gzip members (differently framed warcinfo,
+    * stray payloads); when at least one member IS a WARC record, such
+    * interlopers are skipped instead of poisoning the whole crawl — a
+    * stream with no WARC members at all expands verbatim (generic
+    * gunzip). Null on corruption, or past the codecs' shared 2³⁰ bomb
+    * cap. Callers parse the RETURNED bytes: record offsets index into
+    * them, not into the compressed blob.
     */
   def crawlInflate(b: Array[Byte]): Array[Byte] =
-    // lz4 first with the CONTENT probe: the skippable-frame magic
-    // range is shared between lz4 and zstd, so the first real frame
-    // decides the codec
-    if (b != null && Lz4.isLz4Content(b)) Lz4.decode(b)
-    else if (b != null && Zstd.isZstd(b)) Zstd.decode(b)
-    else if (b != null && Bzip2.isBzip2(b)) Bzip2.decode(b)
-    else if (b != null && Xz.isXz(b)) Xz.decode(b)
-    else if (b != null && LzwZ.isZ(b)) LzwZ.decode(b)
-    else if (b != null && b.length >= 2 && u8(b, 0) == 0x1f && u8(b, 1) == 0x8b) {
-      val cm = crawlMembers(b)
-      if (cm == null) null else cm.plain
-    } else b
+    if (b == null) null
+    else streamCodecs.find(_.sniff(b)) match {
+      case Some(c) => c.decode(b).getOrElse(null)
+      case None if b.length >= 2 && u8(b, 0) == 0x1f && u8(b, 1) == 0x8b =>
+        val cm = crawlMembers(b)
+        if (cm == null) null else cm.plain
+      case None => b
+    }
 
   /** Member-aware view of a multi-member `.warc.gz`: the concatenated
     * plain bytes of its WARC record members (of ALL members when none
@@ -2424,8 +2387,6 @@ object Containers {
   def crawlMembers(b: Array[Byte]): CrawlMembers = {
     val members = gzipMembers(b)
     if (members == null) return null
-    def isWarc(m: Array[Byte]): Boolean =
-      m.length >= 5 && ascii(m, 0, 5) == "WARC/"
     val warc = members.filter(isWarc)
     val keep = if (warc.nonEmpty) warc else members
     val out = new java.io.ByteArrayOutputStream()
@@ -2438,9 +2399,9 @@ object Containers {
     * a Content-Length-delimited content block, and the two-CRLF record
     * separator. Null for a missing version line, unparseable or absent
     * Content-Length, or truncated content — degrade-don't-throw.
-    * Gzipped input (`.warc.gz`) routes through [[warcInflate]] FIRST —
-    * offsets in the returned records index into ITS output, not the
-    * compressed bytes.
+    * Compressed input (`.warc.gz`, `.warc.zst`, …) routes through
+    * [[crawlInflate]] FIRST — offsets in the returned records index
+    * into ITS output, not the compressed bytes.
     */
   def warcRecords(b: Array[Byte]): Array[WarcRecord] = try {
     val out = scala.collection.mutable.ArrayBuffer.empty[WarcRecord]
@@ -2676,7 +2637,7 @@ object Containers {
     * exact write-side counterpart of [[warcRecords]]. With
     * `gzipPerRecord` each record becomes its OWN gzip member and the
     * members concatenate — Common Crawl's `.warc.gz` framing, the
-    * write-side counterpart of [[warcInflate]].
+    * write-side counterpart of [[crawlInflate]].
     */
   def synthWarc(records: Seq[(String, String, Array[Byte])],
       gzipPerRecord: Boolean = false,
@@ -3039,7 +3000,7 @@ object Containers {
           // decompression-bomb guard: constant frames compress ~160:1
           // through LZW, so a small hostile stream can demand billions
           // of composited pixels — cap TOTAL decoded pixels like
-          // warcInflate caps gzip expansion (2^28 ≈ 4k full-HD frames)
+          // the codecs cap inflated bytes (2^28 ≈ 4k full-HD frames)
           decodedPx += iw.toLong * ih
           if (decodedPx > (1L << 28)) return null
           val idx = lzwDecode(data.toByteArray, mcs, iw * ih)

@@ -152,22 +152,11 @@ object GitPack {
         baseObj = bySha.getOrElse(sha, null)
         if (baseObj == null) return null // thin packs: out of profile
       } else if (!TypeNames.contains(tpe)) return null
-      // zlib stream (self-terminating; Inflater reports consumption)
-      val inf = new java.util.zip.Inflater()
-      val body = try {
-        inf.setInput(b, p, b.length - 20 - p)
-        val res = new Array[Byte](size.toInt)
-        var got = 0
-        while (!inf.finished()) {
-          val m = inf.inflate(res, got, res.length - got)
-          got += m
-          if (m == 0 && !inf.finished()) return null
-          if (got > res.length) return null
-        }
-        if (got != size) return null
-        p += inf.getBytesRead.toInt
-        res
-      } finally inf.end()
+      // zlib stream, self-terminating: the next object starts where it ends
+      val z = Capped.inflate(b, p, b.length - 20 - p, size, size, raw = false)
+      if (z == null || z.bytes.length != size) return null
+      p += z.consumed
+      val body = z.bytes
       val obj =
         if (baseObj == null) {
           val t = TypeNames(tpe)
@@ -186,7 +175,6 @@ object GitPack {
     out.toArray
   } catch {
     case _: IndexOutOfBoundsException => null
-    case _: java.util.zip.DataFormatException => null
   }
 
   /** Parse a tree object's entries: `<mode> <name>\0<20-byte id>`. */

@@ -394,6 +394,8 @@ object Multimodal {
     }
     if (fmt != "unknown") return (fmt, imageErrFor(b, fmt))
     // magic-free families [[Containers.parse]] doesn't cover
+    def warcClass(plain: Array[Byte]) =
+      ("warc", if (Containers.warcRecords(plain) != null) "ok" else "corrupt")
     if (b.length >= 2 && (b(0) & 0xFF) == 0x1f && (b(1) & 0xFF) == 0x8b) {
       // MEMBER-aware walk: real Common Crawl `.warc.gz` occasionally
       // interleaves non-record members — recoverable, and worth its
@@ -407,69 +409,17 @@ object Multimodal {
       else if (cm.kept < cm.total) ("warc", "ok_skipped_members")
       else ("warc", "ok")
     }
-    if (b.length >= 5 && new String(b, 0, 5, "US-ASCII") == "WARC/")
-      return (if (Containers.warcRecords(b) != null) ("warc", "ok")
-              else ("warc", "corrupt"))
-    // lz4 BEFORE zstd: the skippable magic range is shared, so the
-    // first CONTENT frame decides the codec
-    if (Lz4.isLz4Content(b)) {
-      val plain = Lz4.decode(b)
-      return if (plain == null) ("lz4", "corrupt")
-      else if (plain.length >= 5 &&
-          new String(plain, 0, 5, "US-ASCII") == "WARC/") {
-        if (Containers.warcRecords(plain) != null) ("warc", "ok")
-        else ("warc", "corrupt")
-      } else ("lz4", "unknown_container")
-    }
-    if (Zstd.isZstd(b)) {
-      // REAL decode (zstd-jni through the Zstd adapter: bomb cap,
-      // never-throw, and the dictionary split) then classify the
-      // payload like the gzip branch: the only remaining profile gap
-      // is a frame naming a dictionary no frame or caller supplies
-      return Zstd.decodeResult(b) match {
-        case Zstd.NeedsDictionary => ("zstd", "unsupported_profile")
-        case Zstd.Corrupt => ("zstd", "corrupt")
-        case Zstd.Ok(plain) =>
-          if (plain.length >= 5 &&
-              new String(plain, 0, 5, "US-ASCII") == "WARC/") {
-            if (Containers.warcRecords(plain) != null) ("warc", "ok")
-            else ("warc", "corrupt")
-          } else ("zstd", "unknown_container") // sound zstd, unrecognized payload
+    if (Containers.isWarc(b)) return warcClass(b)
+    // the whole-stream codecs (lz4, zstd, bzip2, xz, .Z): REAL capped
+    // decode, then classify the payload like the gzip branch
+    Containers.streamCodecs.find(_.sniff(b)) match {
+      case Some(c) => return c.decode(b) match {
+        case Left(err) => (c.name, err)
+        case Right(plain) =>
+          if (Containers.isWarc(plain)) warcClass(plain)
+          else (c.name, "unknown_container") // sound stream, unrecognized payload
       }
-    }
-    if (Bzip2.isBzip2(b)) {
-      // REAL decode (commons-compress through the Bzip2 adapter: bomb
-      // cap, never-throw, deprecated randomised blocks included) then
-      // classify the payload
-      return Bzip2.decodeResult(b) match {
-        case Bzip2.Corrupt => ("bzip2", "corrupt")
-        case Bzip2.Ok(plain) =>
-          if (plain.length >= 5 &&
-              new String(plain, 0, 5, "US-ASCII") == "WARC/") {
-            if (Containers.warcRecords(plain) != null) ("warc", "ok")
-            else ("warc", "corrupt")
-          } else ("bzip2", "unknown_container")
-      }
-    }
-    if (Xz.isXz(b)) {
-      val plain = Xz.decode(b)
-      return if (plain == null) ("xz", "corrupt")
-      else if (plain.length >= 5 &&
-          new String(plain, 0, 5, "US-ASCII") == "WARC/") {
-        if (Containers.warcRecords(plain) != null) ("warc", "ok")
-        else ("warc", "corrupt")
-      } else ("xz", "unknown_container")
-    }
-    if (LzwZ.isZ(b)) {
-      // Unix compress .Z (from-scratch LZW incl. the canonical -b9
-      // width bump) then classify the payload like its siblings
-      val plain = LzwZ.decode(b)
-      return if (plain == null) ("compress_z", "corrupt")
-      else if (plain.length >= 5 &&
-          new String(plain, 0, 5, "US-ASCII") == "WARC/") {
-        if (Containers.warcRecords(plain) != null) ("warc", "ok")
-        else ("warc", "corrupt")
-      } else ("compress_z", "unknown_container")
+      case None => ()
     }
     // cpio (all four dialects; the weak 2-byte binary magic sits
     // safely behind every stronger sniff above) and ar shards: REAL
@@ -4239,7 +4189,7 @@ object Multimodal {
       media: Dataset[MediaFile]): Dataset[WarcDigestAudit] = {
     import spark.implicits._
     media.map { m =>
-      val plain = Containers.warcInflate(m.content)
+      val plain = Containers.crawlInflate(m.content)
       val recs = if (plain == null) null else Containers.warcRecords(plain)
       if (recs == null) WarcDigestAudit(m.media_id, -1, -1, -1, -1, -1)
       else {

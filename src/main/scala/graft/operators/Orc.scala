@@ -16,8 +16,8 @@ import java.nio.charset.StandardCharsets.UTF_8
   * tree, stripe directory), per-stripe stream segmentation
   * (index + data streams laid out in list order), and the ORC
   * compression framing (3-byte little-endian chunk headers, low bit
-  * = stored-as-original). Codecs: NONE / ZLIB (raw deflate, JDK
-  * Inflater) / SNAPPY ([[Snappy]] over snappy-java) / LZ4 (the
+  * = stored-as-original). Codecs: NONE / ZLIB (raw deflate through
+  * [[Capped.inflate]]) / SNAPPY ([[Snappy]] over snappy-java) / LZ4 (the
   * [[Lz4]] raw-block adapter over lz4-java) / ZSTD (the [[Zstd]]
   * adapter over zstd-jni).
   *
@@ -247,27 +247,6 @@ object Orc {
 
   private val StreamCap = 1 << 26
 
-  private def inflateRaw(in: Array[Byte], off: Int, len: Int,
-      cap: Int): Array[Byte] = {
-    val inf = new java.util.zip.Inflater(true)
-    inf.setInput(in, off, len)
-    val out = new java.io.ByteArrayOutputStream(math.min(cap, 1 << 16))
-    val buf = new Array[Byte](8192)
-    try {
-      while (!inf.finished()) {
-        val n = inf.inflate(buf)
-        if (n == 0) {
-          if (inf.needsInput() || inf.needsDictionary()) fail("deflate eof")
-        } else {
-          out.write(buf, 0, n)
-          if (out.size > cap) fail("deflate bomb")
-        }
-      }
-    } catch { case _: java.util.zip.DataFormatException => fail("deflate") }
-    finally inf.end()
-    out.toByteArray
-  }
-
   /** Decompress one ORC stream region: a sequence of 3-byte-header
     * chunks (`(len << 1) | isOriginal`, little-endian) for compressed
     * files, or the raw bytes for NONE.
@@ -291,7 +270,9 @@ object Orc {
       if (original) out.write(b, p, clen)
       else {
         val dec = codec match {
-          case 1 => inflateRaw(b, p, clen, StreamCap) // ZLIB = raw deflate
+          case 1 => // ZLIB = raw deflate
+            val r = Capped.inflate(b, p, clen, StreamCap, clen * 4L, raw = true)
+            if (r == null) fail("deflate") else r.bytes
           case 2 =>
             val r = Snappy.decode(java.util.Arrays.copyOfRange(b, p, p + clen))
             if (r == null) fail("snappy") else r

@@ -113,8 +113,8 @@ object Parquet {
           val out = c match {
             case CompressionCodecName.SNAPPY => Snappy.decode(raw, size)
             case CompressionCodecName.GZIP =>
-              Capped.readAll(new java.util.zip.GZIPInputStream(
-                new java.io.ByteArrayInputStream(raw)), size, size)
+              val ms = Containers.gzipMembers(raw, size)
+              if (ms == null) null else if (ms.length == 1) ms(0) else ms.flatten
             case CompressionCodecName.ZSTD => Zstd.decode(raw, size)
             case CompressionCodecName.LZ4_RAW => Lz4.decodeRawBlock(raw, size)
             case _ => fail("codec profile") // LZO/BROTLI/framed LZ4

@@ -255,24 +255,9 @@ object Pdf {
   // ---- filters ---------------------------------------------------------
 
   private def inflate(in: Array[Byte]): Array[Byte] = {
-    val inf = new java.util.zip.Inflater()
-    try {
-      inf.setInput(in)
-      val out = new java.io.ByteArrayOutputStream(math.min(in.length * 4, 1 << 16))
-      val buf = new Array[Byte](8192)
-      while (!inf.finished() && !inf.needsDictionary()) {
-        val n = inf.inflate(buf)
-        // a starved inflater means the deflate stream was truncated —
-        // partial text classifying "ok" would hide the damage; fail
-        // like the 7z deflate path and degrade to corrupt upstream
-        if (n == 0 && inf.needsInput()) fail("flate truncated")
-        out.write(buf, 0, n)
-        if (out.size > MaxStream) fail("flate bomb")
-      }
-      out.toByteArray
-    } catch {
-      case _: java.util.zip.DataFormatException => fail("flate")
-    } finally inf.end()
+    val r = Capped.inflate(in, 0, in.length, MaxStream, in.length * 4L,
+      raw = false)
+    if (r == null) fail("flate") else r.bytes
   }
 
   /** PDF/TIFF LZW decode (§7.4.4): MSB-first codes starting at 9 bits,

@@ -330,20 +330,9 @@ object SevenZip {
         while (i < r.length) { r(i) = (r(i) + r(i - dist)).toByte; i += 1 }
         r
       case IdDeflate =>
-        val inf = new java.util.zip.Inflater(true)
-        try {
-          inf.setInput(input)
-          val bos = new java.io.ByteArrayOutputStream()
-          val buf = new Array[Byte](8192)
-          while (!inf.finished()) {
-            val n = try inf.inflate(buf)
-              catch { case _: java.util.zip.DataFormatException => fail("deflate") }
-            if (n == 0 && inf.needsInput()) fail("deflate truncated")
-            bos.write(buf, 0, n)
-            if (bos.size > MaxOut) fail("deflate bomb")
-          }
-          bos.toByteArray
-        } finally inf.end()
+        val r = Capped.inflate(input, 0, input.length, MaxOut, outSize,
+          raw = true)
+        if (r == null) fail("deflate") else r.bytes
       case IdBzip2 =>
         val r = Bzip2.decode(input, MaxOut.toLong)
         if (r == null) fail("bzip2") else r

@@ -232,26 +232,10 @@ object Zip {
       case 0 => // STORED
         if (clen != e.size) return null
         java.util.Arrays.copyOfRange(src, off, off + e.size.toInt)
-      case 8 => // DEFLATE (raw)
-        val res = new Array[Byte](e.size.toInt)
-        inf.reset()
-        inf.setInput(src, off, clen)
-        var got = 0
-        // the scratch drives the inflater through the final block even
-        // when the declared size is 0 (the JDK writes empty entries as
-        // method 8 with a real 2-byte empty-block stream) or when the
-        // stream holds MORE data than declared (then m > 0 = corrupt)
-        val scratch = new Array[Byte](1)
-        while (!inf.finished()) {
-          val m =
-            if (got < res.length) inf.inflate(res, got, res.length - got)
-            else inf.inflate(scratch)
-          if (m > 0 && got >= res.length) return null // longer than declared
-          got += m
-          if (m == 0 && !inf.finished()) return null // corrupt/needs input
-        }
-        if (got != res.length) return null
-        res
+      case 8 => // DEFLATE (raw); a stream longer than declared is past the cap
+        val r = Capped.inflate(inf, src, off, clen, e.size, e.size)
+        if (r == null || r.bytes.length != e.size) return null
+        r.bytes
       case 12 | 93 | 95 =>
         // the codec-matrix methods: the member data is a complete
         // stream of its codec (APPNOTE 4.4.5 bzip2 / 4.4.13 zstd /
@@ -306,7 +290,6 @@ object Zip {
     if ((crc.getValue & 0xFFFFFFFFL) != e.crc) return null
     out
   } catch {
-    case _: java.util.zip.DataFormatException => null
     case _: ArrayIndexOutOfBoundsException => null
   }
 
@@ -328,22 +311,25 @@ object Zip {
   def members(b: Array[Byte],
       password: Array[Byte]): Array[(String, Array[Byte])] = {
     val es = entries(b)
-    if (es == null) return null
-    val inf = new java.util.zip.Inflater(true)
-    try {
-      val files = es.filterNot(_.name.endsWith("/"))
-      val out = new Array[(String, Array[Byte])](files.length)
-      var budget = MaxExpandedBytes
-      var k = 0
-      while (k < files.length) {
-        val got = entryBytesWith(b, files(k), inf, budget, password)
-        if (got == null) return null
-        budget -= got.length
-        out(k) = (files(k).name, got)
-        k += 1
-      }
-      out
-    } finally inf.end()
+    if (es == null) null
+    else Capped.withInflater(raw = true)(inf => filesWith(b, es, inf, password))
+  }
+
+  private def filesWith(b: Array[Byte], es: Array[ZipEntry],
+      inf: java.util.zip.Inflater,
+      password: Array[Byte]): Array[(String, Array[Byte])] = {
+    val files = es.filterNot(_.name.endsWith("/"))
+    val out = new Array[(String, Array[Byte])](files.length)
+    var budget = MaxExpandedBytes
+    var k = 0
+    while (k < files.length) {
+      val got = entryBytesWith(b, files(k), inf, budget, password)
+      if (got == null) return null
+      budget -= got.length
+      out(k) = (files(k).name, got)
+      k += 1
+    }
+    out
   }
 
   // ---- DCL IMPLODE (method 10): the PKWARE Data Compression -----------

@@ -31,6 +31,10 @@ class DecoderFuzzSpec extends AnyFunSuite {
     "tarEntries" -> (b => Containers.tarEntries(b)),
     "gzipMembers" -> (b => Containers.gzipMembers(b)),
     "crawlInflate" -> (b => Containers.crawlInflate(b)),
+    "Capped.inflate raw" -> (b =>
+      Capped.inflate(b, 0, b.length, 1L << 22, 4096, raw = true)),
+    "Capped.inflate zlib" -> (b =>
+      Capped.inflate(b, 0, b.length, 1L << 22, 4096, raw = false)),
     "warcRecords" -> (b => Containers.warcRecords(b)),
     "mp4Samples" -> (b => Containers.mp4Samples(b)),
     "Zstd.decode" -> (b => Zstd.decode(b)),

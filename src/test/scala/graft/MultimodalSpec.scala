@@ -855,11 +855,11 @@ class MultimodalSpec extends SparkSpec {
     val gz = Containers.synthWarc(recs, gzipPerRecord = true)
     assert((gz(0) & 0xFF) == 0x1f && (gz(1) & 0xFF) == 0x8b)
     // multi-member gunzip reproduces the plain bytes exactly
-    assert(Containers.warcInflate(gz).toSeq == plain.toSeq)
+    assert(Containers.crawlInflate(gz).toSeq == plain.toSeq)
     // identity on plain input; null on a truncated member
-    assert(Containers.warcInflate(plain) eq plain)
-    assert(Containers.warcInflate(gz.take(gz.length - 4)) == null)
-    val got = Containers.warcRecords(Containers.warcInflate(gz))
+    assert(Containers.crawlInflate(plain) eq plain)
+    assert(Containers.crawlInflate(gz.take(gz.length - 4)) == null)
+    val got = Containers.warcRecords(Containers.crawlInflate(gz))
     assert(got != null && got.length == 3 &&
       got.map(_.warcType).toSeq == Seq("response", "request", "metadata"))
   }
@@ -904,6 +904,22 @@ class MultimodalSpec extends SparkSpec {
     assert(Multimodal.mediaDecodeClass(padded) == ("warc", "ok"))
     // ...but a stream that fails INSIDE its first member stays corrupt
     assert(Containers.gzipMembers(rec1.take(rec1.length - 4)) == null)
+  }
+
+  test("WARC digest audit sheds interloper members like the other WARC readers") {
+    import spark.implicits._
+    val rec1 = Containers.synthWarc(Seq(
+      ("response", "https://ex.test/1", Array.tabulate(30)(i => (i * 5).toByte))),
+      gzipPerRecord = true)
+    val rec2 = Containers.synthWarc(Seq(
+      ("request", "https://ex.test/1", Array.tabulate(12)(i => (i * 9).toByte))),
+      gzipPerRecord = true)
+    val interloper = Containers.synthGzipMember(
+      Array.tabulate(25)(i => (i * 7 + 3).toByte))
+    val mixed = rec1 ++ interloper ++ rec2
+    val got = Multimodal.warcDigestAudit(spark,
+      Seq(Multimodal.MediaFile(1L, "warc", mixed)).toDS()).collect()
+    assert(got.length == 1 && got(0).n_records == 2, got.toSeq)
   }
 
   test("warcHttpStats routes through the member-aware crawl walk") {
@@ -1423,7 +1439,7 @@ class MultimodalSpec extends SparkSpec {
     for (gz <- Seq(false, true)) {
       val warc = Containers.synthWarc(payloads, gzipPerRecord = gz,
         digestModes = Seq("ok", "absent", "mismatch", "md5"))
-      val plain = Containers.warcInflate(warc)
+      val plain = Containers.crawlInflate(warc)
       val recs = Containers.warcRecords(plain)
       assert(recs != null && recs.length == 4)
       val classes = recs.map(r => Containers.digestClass(

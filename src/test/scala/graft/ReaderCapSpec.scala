@@ -141,4 +141,43 @@ class ReaderCapSpec extends AnyFunSuite {
     degrades("header")(Snappy.decode(Array[Byte](0x80.toByte, 0x80.toByte,
       0x80.toByte, 0x80.toByte, 0x80.toByte, 0x20, 0)))
   }
+
+  test("deflate: the one capped inflate ends the stream, caps it, and counts its input") {
+    import graft.operators.Capped
+    def deflate(b: Array[Byte], raw: Boolean): Array[Byte] = {
+      val d = new java.util.zip.Deflater(6, raw)
+      try {
+        d.setInput(b); d.finish()
+        val out = new java.io.ByteArrayOutputStream()
+        val buf = new Array[Byte](1024)
+        while (!d.finished()) out.write(buf, 0, d.deflate(buf))
+        out.toByteArray
+      } finally d.end()
+    }
+    val plain = Array.tabulate(5000)(i => (i * 7 % 13).toByte)
+    val zlib = deflate(plain, raw = false)
+    val raw = deflate(plain, raw = true)
+    // the stream the JDK writes for an empty Zip entry
+    val empty = deflate(Array.emptyByteArray, raw = true)
+    assert(empty.toSeq == Seq[Byte](3, 0))
+    // (case, raw deflate?, input, cap, plain bytes or null, input consumed)
+    val cases = Seq[(String, Boolean, Array[Byte], Long, Array[Byte], Int)](
+      ("whole", false, zlib, plain.length, plain, zlib.length),
+      ("truncated", false, zlib.dropRight(5), plain.length, null, 0),
+      ("no Adler-32", false, zlib.dropRight(4), plain.length, null, 0),
+      ("FDICT header", false, Array[Byte](0x78, 0xBB.toByte) ++ zlib.drop(2),
+        plain.length, null, 0),
+      ("past the cap", false, zlib, plain.length - 1, null, 0),
+      ("trailing bytes", true, raw ++ Array[Byte](1, 2, 3), plain.length,
+        plain, raw.length),
+      ("empty stream", true, empty, 0, Array.emptyByteArray, 2))
+    for ((what, isRaw, in, cap, want, consumed) <- cases) {
+      val got =
+        try Capped.inflate(in, 0, in.length, cap, 4096, raw = isRaw)
+        catch { case e: Throwable => fail(s"$what threw $e") }
+      if (want == null) assert(got == null, what)
+      else assert(got != null && got.bytes.toSeq == want.toSeq &&
+        got.consumed == consumed, what)
+    }
+  }
 }
