@@ -4,7 +4,7 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.expressions.{FloatVecDot, RowHashMd5, SortedLongIntersectCount, SortedLongJaccardGE}
-import graft.plans.{RegexPrefixRewrite, TopKStrategy}
+import graft.plans.{RegexPrefixRewrite, ScanBoundsStrategy, TopKStrategy}
 
 /** Session wiring for graft's custom Catalyst pieces, so SQL users get
   * them too:
@@ -15,16 +15,19 @@ import graft.plans.{RegexPrefixRewrite, TopKStrategy}
   *     session. Every entry point of this repo registers through
   *     [[GraftSession]]; call it yourself on a session built elsewhere.
   *
-  * Registers the TopKPerKey planner strategy and the SQL functions
-  * enumerated in [[GraftExtensions.functions]] — that Seq is the single
-  * source of truth; currently `graft_row_hash(cells…)`,
+  * Registers two planner strategies, [[graft.plans.TopKStrategy]]
+  * (per-key top-k with bounded heaps) and [[graft.plans.ScanBoundsStrategy]]
+  * (file scans whose filter constants do not shape generated code), the
+  * regex-rewrite optimizer rule, and the SQL functions enumerated in
+  * [[GraftExtensions.functions]] — that Seq is the single source of
+  * truth; currently `graft_row_hash(cells…)`,
   * `float_vec_dot(a, b)`, `sorted_long_intersect_count(a, b)`,
   * `sorted_long_jaccard_ge(a, b, threshold)`, and
   * `graft_nfc_normalize(s)`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectPlannerStrategy(_ => TopKStrategy)
+    GraftExtensions.strategies.foreach(s => e.injectPlannerStrategy(_ => s))
     e.injectOptimizerRule(_ => RegexPrefixRewrite)
     GraftExtensions.functions.foreach { case (name, info, builder) =>
       e.injectFunction((FunctionIdentifier(name), info, builder))
@@ -75,12 +78,13 @@ object GraftExtensions {
       }),
   )
 
-  /** Attach the TopK planner strategy to a live session (idempotent). */
-  def ensureStrategy(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
-    }
+  private[graft] val strategies = Seq(TopKStrategy, ScanBoundsStrategy)
+
+  /** Attach the planner strategies to a live session (idempotent). */
+  def ensureStrategy(spark: SparkSession): Unit = {
+    val present = spark.experimental.extraStrategies
+    spark.experimental.extraStrategies = present ++ strategies.filterNot(present.contains)
+  }
 
   /** Attach the regex-rewrite optimizer rule to a live session
     * (idempotent — `extraOptimizations` is the runtime counterpart of

@@ -14,20 +14,27 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Runtime helper for [[RowHashMd5]] — one static call per row from the
   * generated code. Kept outside the expression so codegen emits a plain
-  * method invocation instead of an interpreted expression tree.
+  * method invocation instead of an interpreted expression tree. The
+  * digest instance is thread-local, as in [[Md5Hash60Util]]: `getInstance`
+  * per row costs an allocation and a provider lookup.
   */
 object RowHashUtil {
+  private val mdPool = new ThreadLocal[MessageDigest] {
+    override def initialValue(): MessageDigest = MessageDigest.getInstance("MD5")
+  }
+  private val alphabet = "0123456789abcdef".getBytes
+
   def md5Sorted(cells: Array[UTF8String]): UTF8String = {
     // UTF8String.compareTo is binary (UTF-8 byte order) — identical to
     // Go sort.Strings on UTF-8 strings, Spark array_sort, DuckDB
     // list_sort. NULL cells arrive as EMPTY_UTF8 (reference: NULL → "").
     java.util.Arrays.sort(cells.asInstanceOf[Array[AnyRef]])
-    val md = MessageDigest.getInstance("MD5")
+    val md = mdPool.get()
+    md.reset()
     var i = 0
     while (i < cells.length) { md.update(cells(i).getBytes); i += 1 }
     val digest = md.digest()
     val hex = new Array[Byte](32)
-    val alphabet = "0123456789abcdef".getBytes
     var j = 0
     while (j < 16) {
       hex(j * 2) = alphabet((digest(j) >> 4) & 0xf)

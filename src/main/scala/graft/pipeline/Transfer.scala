@@ -87,7 +87,12 @@ object RunStats {
   *   - the dedup anti-join is the only shuffle, and AQE may demote it to a
   *     broadcast join when the snapshot window is small;
   *   - row counts are metrics the write's own execution observes
-  *     (`Dataset.observe`): no cache, no second scan, never collect().
+  *     (`Dataset.observe`): no cache, no second scan, never collect();
+  *   - the window's bounds never shape generated code: over a parquet
+  *     source and target, [[graft.plans.ScanBoundsStrategy]] holds the
+  *     scan filters' constants by reference, so a tick over a new window
+  *     runs the classes an earlier tick compiled (a JDBC scan still
+  *     inlines them).
   */
 object Transfer {
 

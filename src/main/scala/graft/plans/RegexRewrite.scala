@@ -35,9 +35,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * empty pattern (`contains(x, '')` ≡ `x RLIKE ''` — true for every
   * non-null row).
   *
-  * Registered with `SparkSessionExtensions.injectOptimizerRule` (the
-  * config path) and `spark.experimental.extraOptimizations` (the
-  * runtime path) by [[graft.GraftExtensions]].
+  * Registered on both the config path and the runtime path by
+  * [[graft.GraftExtensions]].
   */
 object RegexPrefixRewrite extends Rule[LogicalPlan] {
 

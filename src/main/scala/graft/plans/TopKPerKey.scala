@@ -23,8 +23,8 @@ import org.apache.spark.sql.graft.ColumnBridge
   * buffer, no spill pressure. At 100 TB (ANN candidate ranking: billions
   * of scored pairs, k=10) the difference is the job.
   *
-  * Wiring: logical node → strategy → exec, attached per-session via
-  * `spark.experimental.extraStrategies` (idempotent). The exec demands
+  * Wiring: logical node → strategy → exec, attached per-session by
+  * [[graft.GraftExtensions]] (idempotent). The exec demands
   * `ClusteredDistribution(keys)`, so Catalyst inserts the hash exchange —
   * and AQE still plans/coalesces that shuffle as usual. Output keeps the
   * child's partitioning, so a downstream rank-within-key window needs no

@@ -1,6 +1,6 @@
 package graft
 
-import graft.plans.{RegexPrefixRewrite, TopKStrategy}
+import graft.plans.{RegexPrefixRewrite, ScanBoundsStrategy, TopKStrategy}
 
 /** The test session is the engine's posture: the plans the specs pin are
   * the plans Bench times and Verify checks, and the graft extensions are
@@ -23,6 +23,9 @@ class GraftSessionSpec extends SparkSpec {
     assert(spark.sql("SELECT graft_row_hash('A', 'b')").first().getString(0).length == 32)
     assert(spark.experimental.extraStrategies.contains(TopKStrategy))
     assert(spark.experimental.extraOptimizations.contains(RegexPrefixRewrite))
+    GraftExtensions.register(spark)
+    GraftExtensions.register(spark)
+    assert(spark.experimental.extraStrategies.count(_ == ScanBoundsStrategy) == 1)
   }
 
   test("the test session has no checkpoint dir: lineage is cut locally, as in Bench") {

@@ -113,6 +113,16 @@ class TimestampEncodingSpec extends SparkSpec {
       assert(got == ref, s"$name rows differ from $refName")
   }
 
+  test("every encoding: the footer schema Tables.read uses is the inferred schema") {
+    for ((name, dir) <- allEncodings) {
+      val path = s"$dir/events.parquet"
+      Tables.read(spark, dir, "events") // sets nanosAsLong, as every read does
+      val footer = Tables.footerSchema(spark, path)
+      assert(footer.isDefined, name)
+      assert(spark.read.schema(footer.get).parquet(path).schema == spark.read.parquet(path).schema, name)
+    }
+  }
+
   test("micros arithmetic (sessionize) agrees across encodings") {
     val results = allEncodings.map { case (name, dir) =>
       val ev = Tables.load(spark, dir, "events")
