@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.expressions.{FloatVecDot, RowHashMd5, SortedLongIntersectCount, SortedLongJaccardGE}
+import graft.expressions.{FloatVecDot, SortedLongIntersectCount, SortedLongJaccardGE, TypedRowHash}
 import graft.plans.{RegexPrefixRewrite, ScanBoundsStrategy, TopKStrategy}
 
 /** Session wiring for graft's custom Catalyst pieces, so SQL users get
@@ -49,9 +49,9 @@ object GraftExtensions {
 
   private[graft] val functions: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     ("graft_row_hash",
-      info(classOf[RowHashMd5], "graft_row_hash",
-        "_FUNC_(cells...) - order/case-insensitive MD5 row hash"),
-      (exprs: Seq[Expression]) => RowHashMd5(exprs)),
+      info(classOf[TypedRowHash], "graft_row_hash",
+        "_FUNC_(cells...) - order/case-insensitive MD5 row hash, as hex"),
+      (exprs: Seq[Expression]) => TypedRowHash(exprs, hex = true)),
     ("float_vec_dot",
       info(classOf[FloatVecDot], "float_vec_dot",
         "_FUNC_(a, b) - double dot product of float arrays"),

@@ -2,11 +2,13 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
+import graft.expressions.TypedRowHash
 import graft.types.UniversalType
 
-/** The reference's full-row hash (`/root/reference/etl.go:61-68`):
+/** The reference's full-row hash (`etl.go:61-68`):
   * lowercase each cell's universal string encoding, sort the cell VALUES
-  * (not the columns), concatenate, MD5-hex.
+  * (not the columns), concatenate, MD5.
   *
   * Semantics preserved exactly (golden digests in `etl_test.go:9-53`):
   *   - insensitive to column order AND to which column holds which value
@@ -14,39 +16,47 @@ import graft.types.UniversalType
   *   - case-insensitive;
   *   - NULL hashes as the empty string (`mysql/mysql.go:109-112`).
   *
-  * Implementation is pure built-in Catalyst expressions — md5 / array_join /
-  * array_sort / transform / lower are all codegen'd, so the hash stays inside
-  * whole-stage codegen with no UDF boundary. At 100 TB this runs as a narrow
-  * map over the scan with zero shuffle.
+  * Implementation is one codegen'd expression, [[TypedRowHash]], over the
+  * typed columns: integral, float/double, date, timestamp and string cells
+  * are encoded inside it, straight into one buffer; any other type
+  * (decimal, timestamp_ntz, boolean, binary, complex) reaches it as its
+  * [[UniversalType.universalCell]] string. The hash stays inside
+  * whole-stage codegen as a narrow map over the scan, with no shuffle.
+  *
+  * Two key forms, chosen by the caller: `of…` gives the 32-char hex string
+  * (the wire format of `contract.proto`, and what the oracle-checked
+  * queries print); `digestOf…` gives the 16-byte binary digest, the
+  * compact key the engine's own joins carry. Hex is a bijection of the
+  * digest, so a join on either form keeps the same rows.
   */
 object RowHash {
 
-  /** Hash pre-encoded string cells (the reference's native input shape).
-    * Implemented as the single codegen'd [[graft.expressions.RowHashMd5]]
-    * expression; the equivalent built-in composition
-    * `md5(array_join(array_sort(transform(array(...), lower))))` falls out
-    * of whole-stage codegen (higher-order lambdas are interpreted).
-    */
-  def ofCells(cells: Seq[Column]): Column = {
-    val safe = cells.map(c => coalesce(c.cast("string"), lit("")))
-    graft.expressions.RowHashMd5.of(safe)
-  }
+  /** Hex row hash of the named columns of `df`. */
+  def ofColumns(df: DataFrame, names: Seq[String]): Column = hash(df, names, hex = true)
 
-  /** Hash typed columns by first applying the universal cell encoding
-    * (datetime → RFC3339, date → yyyy-MM-dd, NULL → "", else cast string),
-    * so numeric/datetime formatting matches what the reference would hash.
-    */
-  def ofColumns(df: DataFrame, names: Seq[String]): Column = {
-    val fields = df.schema.fields.filter(f => names.contains(f.name))
-    val byName = names.map(n => fields.find(_.name == n).get)
-    ofCells(byName.map(f => UniversalType.universalCell(col(f.name), f.dataType)))
-  }
+  /** 16-byte binary row hash of the named columns of `df`. */
+  def digestOfColumns(df: DataFrame, names: Seq[String]): Column =
+    hash(df, names, hex = false)
 
-  /** Hash every column of `df` (the reference hashes whole rows). */
-  def ofAllColumns(df: DataFrame): Column =
-    ofColumns(df, df.schema.fieldNames.toIndexedSeq)
+  /** Hex hash of every column of `df` (the reference hashes whole rows). */
+  def ofAllColumns(df: DataFrame): Column = ofColumns(df, df.columns.toIndexedSeq)
 
-  /** Append the hash as a column. */
+  /** 16-byte binary hash of every column of `df`. */
+  def digestOfAllColumns(df: DataFrame): Column =
+    digestOfColumns(df, df.columns.toIndexedSeq)
+
+  /** Append the hex hash as a column. */
   def withRowHash(df: DataFrame, hashCol: String = "row_hash"): DataFrame =
     df.withColumn(hashCol, ofAllColumns(df))
+
+  private def hash(df: DataFrame, names: Seq[String], hex: Boolean): Column = {
+    val cells = names.map { n =>
+      val f = df.schema.fields.find(_.name == n).getOrElse(throw new IllegalArgumentException(
+        s"row hash: no column `$n` among ${df.columns.mkString("[", ", ", "]")}"))
+      // quoted, so a name holding a dot is one column, not a field path
+      val c = col("`" + n.replace("`", "``") + "`")
+      if (TypedRowHash.put(f.dataType).isDefined) c else UniversalType.universalCell(c, f.dataType)
+    }
+    ColumnBridge.column(TypedRowHash(cells.map(ColumnBridge.expression), hex))
+  }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, StringType}
 import graft.functions.RowHash
 
 /** The reference's incremental dedup = a hash ANTI-JOIN of source rows
@@ -23,28 +24,38 @@ object IncrementalDedup {
 
   private val H = "__graft_row_hash"
 
-  /** A2 `GetSnapshot`: distinct row-hash set of the target window
-    * (`consumer.go:88-97` — duplicate hashes collapse into a set).
+  /** A2 `GetSnapshot`: distinct hex row-hash set of the target window
+    * (`consumer.go:88-97` — duplicate hashes collapse into a set). Hex is
+    * the set's wire format; [[filter]] accepts it as well as [[rowHashes]].
     */
   def snapshot(target: DataFrame, fields: Seq[String] = Seq.empty): DataFrame = {
     val t = if (fields.isEmpty) target else target.select(fields.map(col): _*)
-    rowHashes(t).distinct()
+    t.select(RowHash.ofAllColumns(t).as(H)).distinct()
   }
 
-  /** Every target row's hash, duplicates kept: all [[filter]] needs, as
-    * its `left_anti` join ignores duplicate keys.
+  /** Every target row's 16-byte hash digest, duplicates kept: all
+    * [[filter]] needs, as its `left_anti` join ignores duplicate keys.
     */
   def rowHashes(target: DataFrame): DataFrame =
-    target.select(RowHash.ofAllColumns(target).as(H))
+    target.select(RowHash.digestOfAllColumns(target).as(H))
 
   /** P3/J1 `filter`: drop source rows whose row hash appears in the snapshot.
-    * An empty snapshot passes everything through (`etl.go:29-31`); a full
-    * match yields an empty result (the reference skips the batch,
-    * `etl.go:40-42` — an empty DataFrame is the same thing).
+    * The source is hashed in the snapshot's form, read off the type of its
+    * hash column: a string column holds hex ([[snapshot]]), a binary one
+    * the 16-byte digest ([[rowHashes]]). An empty snapshot passes
+    * everything through (`etl.go:29-31`); a full match yields an empty
+    * result (the reference skips the batch, `etl.go:40-42` — an empty
+    * DataFrame is the same thing).
     */
   def filter(source: DataFrame, snapshotHashes: DataFrame): DataFrame = {
-    val hashed = source.withColumn(H, RowHash.ofAllColumns(source))
-    hashed.join(snapshotHashes, Seq(H), "left_anti").drop(H)
+    val key = snapshotHashes.schema.find(_.name == H).map(_.dataType) match {
+      case Some(_: StringType) => RowHash.ofAllColumns(source)
+      case Some(BinaryType) => RowHash.digestOfAllColumns(source)
+      case other => throw new IllegalArgumentException(
+        s"snapshot column $H must hold a hex string or a binary row hash; " +
+          s"got ${other.fold("no such column")(_.simpleString)}")
+    }
+    source.withColumn(H, key).join(snapshotHashes, Seq(H), "left_anti").drop(H)
   }
 
   /** One-call incremental dedup: source rows not already present in the
@@ -53,7 +64,7 @@ object IncrementalDedup {
     * (the reference ships its own field list — `provider.go:165`).
     */
   def apply(source: DataFrame, target: DataFrame, fields: Seq[String] = Seq.empty): DataFrame = {
-    val src = if (fields.isEmpty) source else source.select(fields.map(col): _*)
-    filter(src, snapshot(target, fields))
+    def pick(df: DataFrame) = if (fields.isEmpty) df else df.select(fields.map(col): _*)
+    filter(pick(source), rowHashes(pick(target)))
   }
 }

@@ -135,9 +135,9 @@ object Merge {
     require(keys.nonEmpty && compareCols.nonEmpty)
     val keyCols = keys.map(col)
     val o = oldDf.select(keyCols :+
-      graft.functions.RowHash.ofColumns(oldDf, compareCols).as("__h_old"): _*)
+      graft.functions.RowHash.digestOfColumns(oldDf, compareCols).as("__h_old"): _*)
     val n = newDf.select(keyCols :+
-      graft.functions.RowHash.ofColumns(newDf, compareCols).as("__h_new"): _*)
+      graft.functions.RowHash.digestOfColumns(newDf, compareCols).as("__h_new"): _*)
     o.join(n, keys, "full_outer")
       .withColumn("change_type",
         when(col("__h_old").isNull, lit("insert"))

@@ -41,4 +41,30 @@ class IncrementalDedupSpec extends SparkSpec {
     val twice = IncrementalDedup(once, tgt)
     assert(once.count() == twice.count())
   }
+
+  test("binary-digest and hex snapshots drop the same permuted or recased rows") {
+    val tgt = df(Row("2", "1", "4", "3"), Row("NINE", "10", "11", "12"))
+    val src = df(Row("1", "2", "3", "4"), Row("5", "6", "7", "8"), Row("12", "11", "10", "nine"))
+    def firsts(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.getString(0)).sorted.toSeq
+    val viaHex = IncrementalDedup.filter(src, IncrementalDedup.snapshot(tgt))
+    val viaDigest = IncrementalDedup.filter(src, IncrementalDedup.rowHashes(tgt))
+    assert(firsts(viaHex) == Seq("5"))
+    assert(firsts(viaDigest) == firsts(viaHex))
+    assert(IncrementalDedup.snapshot(tgt).schema.head.dataType == StringType)
+    assert(IncrementalDedup.rowHashes(tgt).schema.head.dataType == BinaryType)
+  }
+
+  test("a snapshot whose hash column is neither hex nor binary is rejected") {
+    val snap = IncrementalDedup.snapshot(batch)
+    val bad = snap.select(org.apache.spark.sql.functions.lit(1).as(snap.columns.head))
+    val e = intercept[IllegalArgumentException](IncrementalDedup.filter(batch, bad))
+    assert(e.getMessage.contains("int"), e.getMessage)
+  }
+
+  test("column names holding a dot") {
+    val dotted = StructType(Seq("a.b", "c").map(StructField(_, StringType)))
+    val src = spark.createDataFrame(Seq(Row("x", "y"), Row("p", "q")).asJava, dotted)
+    val tgt = spark.createDataFrame(Seq(Row("Y", "X")).asJava, dotted)
+    assert(IncrementalDedup(src, tgt).collect().map(_.getString(0)).toSeq == Seq("p"))
+  }
 }

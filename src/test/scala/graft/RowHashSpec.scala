@@ -40,4 +40,13 @@ class RowHashSpec extends SparkSpec {
     val b = hashes(Seq(Row("", "a", "b", "c")))
     assert(a == b)
   }
+
+  test("a column name holding a dot is one column; a missing name is named") {
+    val dotted = StructType(Seq("a.b", "c`d", "e", "f").map(StructField(_, StringType)))
+    val df = spark.createDataFrame(Seq(Row("1", "2", "3", "4")).asJava, dotted)
+    assert(df.select(RowHash.ofAllColumns(df)).first().getString(0) ==
+      "81dc9bdb52d04dc20036dbd8313ed055")
+    val e = intercept[IllegalArgumentException](RowHash.ofColumns(df, Seq("a.b", "nope")))
+    assert(e.getMessage.contains("`nope`"), e.getMessage)
+  }
 }
