@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Hex, Lower}
 import graft.expressions.{FloatVecDot, SortedLongIntersectCount, SortedLongJaccardGE, TypedRowHash}
 import graft.plans.{RegexPrefixRewrite, ScanBoundsStrategy, TopKStrategy}
 
@@ -51,7 +51,7 @@ object GraftExtensions {
     ("graft_row_hash",
       info(classOf[TypedRowHash], "graft_row_hash",
         "_FUNC_(cells...) - order/case-insensitive MD5 row hash, as hex"),
-      (exprs: Seq[Expression]) => TypedRowHash(exprs, hex = true)),
+      (exprs: Seq[Expression]) => Lower(Hex(TypedRowHash(exprs)))),
     ("float_vec_dot",
       info(classOf[FloatVecDot], "float_vec_dot",
         "_FUNC_(a, b) - double dot product of float arrays"),

@@ -1,12 +1,12 @@
 package graft.expressions
 
 import java.security.MessageDigest
-import java.time.{Instant, ZoneId}
+import java.time.ZoneId
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TimeZoneAwareExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{DateTimeUtils, LegacyDateFormats, TimestampFormatter}
 import org.apache.spark.sql.types._
@@ -30,10 +30,7 @@ final class RowHashEncoder(zone: ZoneId) {
   private var order = new Array[Int](16)
   private var n = 0
   private val md = MessageDigest.getInstance("MD5")
-  private val rules = zone.getRules
-  private val fixedOffset =
-    if (rules.isFixedOffset) rules.getOffset(Instant.EPOCH).getTotalSeconds else Int.MinValue
-  // Years outside 1..9999 print through Spark's own formatter, the one
+  // Dates and timestamps print through Spark's own formatter, the one
   // `date_format` (and so `UniversalType.universalCell`) uses.
   private lazy val dateFormatter = TimestampFormatter(
     "yyyy-MM-dd", zone, LegacyDateFormats.SIMPLE_DATE_FORMAT, isParsing = false)
@@ -58,8 +55,6 @@ final class RowHashEncoder(zone: ZoneId) {
 
   private def put(b: Int): Unit = { buf(pos) = b.toByte; pos += 1 }
 
-  private def put2(v: Int): Unit = { put('0' + v / 10); put('0' + v % 10) }
-
   /** Decimal digits, as `CAST(v AS STRING)` prints an integral. */
   def putLong(v: Long): Unit = {
     open(20)
@@ -83,11 +78,12 @@ final class RowHashEncoder(zone: ZoneId) {
   /** `Double.toString`, which is what `CAST(v AS STRING)` prints. */
   def putDouble(v: Double): Unit = putAscii(java.lang.Double.toString(v))
 
-  private def putAscii(s: String): Unit = {
-    open(s.length)
+  private def putAscii(s: String): Unit = { open(s.length); putChars(s); close() }
+
+  /** An ASCII string's lowercased chars, into the open cell. */
+  private def putChars(s: String): Unit = {
     var i = 0
     while (i < s.length) { put(Character.toLowerCase(s.charAt(i))); i += 1 }
-    close()
   }
 
   /** A string cell, lowercased: ASCII in place, anything else through
@@ -115,64 +111,26 @@ final class RowHashEncoder(zone: ZoneId) {
     }
   }
 
-  /** `yyyy-MM-dd` of a proleptic Gregorian day number, or false (nothing
-    * written) when the year is outside 1..9999.
-    */
-  private def putDay(days: Long): Boolean = {
-    // civil_from_days (H. Hinnant): March-based years of 400-year eras
-    val z = days + 719468
-    val era = Math.floorDiv(z, 146097L)
-    val doe = z - era * 146097
-    val yoe = (doe - doe / 1460 + doe / 36524 - doe / 146096) / 365
-    val doy = doe - (365 * yoe + yoe / 4 - yoe / 100)
-    val mp = (5 * doy + 2) / 153
-    val d = (doy - (153 * mp + 2) / 5 + 1).toInt
-    val m = (if (mp < 10) mp + 3 else mp - 9).toInt
-    val y = yoe + era * 400 + (if (m <= 2) 1 else 0)
-    if (y < 1 || y > 9999) false
-    else {
-      val yy = y.toInt
-      put2(yy / 100); put2(yy % 100); put('-'); put2(m); put('-'); put2(d)
-      true
-    }
-  }
-
   /** A date as `yyyy-MM-dd`. */
-  def putDate(days: Int): Unit = {
-    open(10)
-    if (putDay(days)) close()
-    else putString(UTF8String.fromString(
-      dateFormatter.format(DateTimeUtils.daysToMicros(days, zone))))
-  }
+  def putDate(days: Int): Unit =
+    putAscii(dateFormatter.format(DateTimeUtils.daysToMicros(days, zone)))
 
   /** A timestamp as RFC3339 in the session time zone, lowercased: local
     * `yyyy-MM-ddTHH:mm:ss`, then the millis with trailing zeros trimmed
     * (none when zero), then a literal `z` — `UniversalType.formatRfc3339`.
     */
   def putTimestamp(micros: Long): Unit = {
-    open(24)
-    val sec = Math.floorDiv(micros, 1000000L)
-    val offset =
-      if (fixedOffset != Int.MinValue) fixedOffset
-      else rules.getOffset(Instant.ofEpochSecond(sec)).getTotalSeconds
-    val local = sec + offset
+    val base = timeFormatter.format(micros)
     val millis = (Math.floorMod(micros, 1000000L) / 1000).toInt
-    if (putDay(Math.floorDiv(local, 86400L))) {
-      val s = Math.floorMod(local, 86400L).toInt
-      put('t'); put2(s / 3600); put(':'); put2(s / 60 % 60); put(':'); put2(s % 60)
-      if (millis != 0) {
-        put('.'); put('0' + millis / 100)
-        if (millis % 100 != 0) put('0' + millis / 10 % 10)
-        if (millis % 10 != 0) put('0' + millis % 10)
-      }
-      put('z')
-      close()
-    } else {
-      val frac =
-        if (millis == 0) ""
-        else "." + f"$millis%03d".replaceAll("0+$", "")
-      putString(UTF8String.fromString(timeFormatter.format(micros) + frac + "Z"))
+    open(base.length + 5)
+    putChars(base)
+    if (millis != 0) {
+      put('.'); put('0' + millis / 100)
+      if (millis % 100 != 0) put('0' + millis / 10 % 10)
+      if (millis % 10 != 0) put('0' + millis % 10)
     }
+    put('z')
+    close()
   }
 
   /** Sort the cells by unsigned bytes — `UTF8String.compareTo`'s order —
@@ -203,29 +161,13 @@ final class RowHashEncoder(zone: ZoneId) {
     }
     md.digest()
   }
-
-  /** [[digest]] as 32 lowercase hex characters. */
-  def hex(): UTF8String = {
-    val d = digest()
-    val out = new Array[Byte](32)
-    var j = 0
-    while (j < 16) {
-      out(j * 2) = RowHashEncoder.Hex((d(j) >> 4) & 0xf)
-      out(j * 2 + 1) = RowHashEncoder.Hex(d(j) & 0xf)
-      j += 1
-    }
-    UTF8String.fromBytes(out)
-  }
-}
-
-object RowHashEncoder {
-  private val Hex = "0123456789abcdef".getBytes
 }
 
 /** The reference row hash (`etl.go:61-68`) as one codegen'd expression over
   * typed cells: each cell's universal encoding, lowercased, sorted by value
-  * (not by column), concatenated and MD5'd. The digest comes out as 32-char
-  * hex (`hex`, the wire format of `contract.proto`) or as the 16 raw bytes.
+  * (not by column), concatenated and MD5'd, as the 16 raw bytes of the
+  * digest. Callers that need the 32-char hex of `contract.proto` wrap it in
+  * `lower(hex(…))`.
   *
   * Cells are encoded straight into one buffer, without a string per cell:
   * integrals as decimal digits, float/double as `Float`/`Double.toString`
@@ -240,11 +182,10 @@ object RowHashEncoder {
   */
 case class TypedRowHash(
     children: Seq[Expression],
-    hex: Boolean,
     timeZoneId: Option[String] = None)
   extends Expression with TimeZoneAwareExpression {
 
-  override def dataType: DataType = if (hex) StringType else BinaryType
+  override def dataType: DataType = BinaryType
   override def nullable: Boolean = false
   override def prettyName: String = "graft_row_hash"
 
@@ -273,7 +214,7 @@ case class TypedRowHash(
       if (v != null) puts(i)(enc, v)
       i += 1
     }
-    if (hex) enc.hex() else enc.digest()
+    enc.digest()
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -292,7 +233,7 @@ case class TypedRowHash(
       code = code"""
         |$enc.reset();
         |$body
-        |${CodeGenerator.javaType(dataType)} ${ev.value} = $enc.${if (hex) "hex" else "digest"}();
+        |byte[] ${ev.value} = $enc.digest();
       """.stripMargin,
       isNull = FalseLiteral)
   }

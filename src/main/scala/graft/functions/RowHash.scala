@@ -23,20 +23,29 @@ import graft.types.UniversalType
   * [[UniversalType.universalCell]] string. The hash stays inside
   * whole-stage codegen as a narrow map over the scan, with no shuffle.
   *
-  * Two key forms, chosen by the caller: `of…` gives the 32-char hex string
-  * (the wire format of `contract.proto`, and what the oracle-checked
-  * queries print); `digestOf…` gives the 16-byte binary digest, the
-  * compact key the engine's own joins carry. Hex is a bijection of the
-  * digest, so a join on either form keeps the same rows.
+  * Two key forms, chosen by the caller: `digestOf…` gives the 16-byte
+  * binary digest, the compact key the engine's own joins carry; `of…`
+  * gives its 32-char lowercase hex (the wire format of `contract.proto`,
+  * and what the oracle-checked queries print), Spark's `lower(hex(…))` of
+  * the digest.
   */
 object RowHash {
 
   /** Hex row hash of the named columns of `df`. */
-  def ofColumns(df: DataFrame, names: Seq[String]): Column = hash(df, names, hex = true)
+  def ofColumns(df: DataFrame, names: Seq[String]): Column =
+    lower(hex(digestOfColumns(df, names)))
 
   /** 16-byte binary row hash of the named columns of `df`. */
-  def digestOfColumns(df: DataFrame, names: Seq[String]): Column =
-    hash(df, names, hex = false)
+  def digestOfColumns(df: DataFrame, names: Seq[String]): Column = {
+    val cells = names.map { n =>
+      val f = df.schema.fields.find(_.name == n).getOrElse(throw new IllegalArgumentException(
+        s"row hash: no column `$n` among ${df.columns.mkString("[", ", ", "]")}"))
+      // quoted, so a name holding a dot is one column, not a field path
+      val c = col("`" + n.replace("`", "``") + "`")
+      if (TypedRowHash.put(f.dataType).isDefined) c else UniversalType.universalCell(c, f.dataType)
+    }
+    ColumnBridge.column(TypedRowHash(cells.map(ColumnBridge.expression)))
+  }
 
   /** Hex hash of every column of `df` (the reference hashes whole rows). */
   def ofAllColumns(df: DataFrame): Column = ofColumns(df, df.columns.toIndexedSeq)
@@ -48,15 +57,4 @@ object RowHash {
   /** Append the hex hash as a column. */
   def withRowHash(df: DataFrame, hashCol: String = "row_hash"): DataFrame =
     df.withColumn(hashCol, ofAllColumns(df))
-
-  private def hash(df: DataFrame, names: Seq[String], hex: Boolean): Column = {
-    val cells = names.map { n =>
-      val f = df.schema.fields.find(_.name == n).getOrElse(throw new IllegalArgumentException(
-        s"row hash: no column `$n` among ${df.columns.mkString("[", ", ", "]")}"))
-      // quoted, so a name holding a dot is one column, not a field path
-      val c = col("`" + n.replace("`", "``") + "`")
-      if (TypedRowHash.put(f.dataType).isDefined) c else UniversalType.universalCell(c, f.dataType)
-    }
-    ColumnBridge.column(TypedRowHash(cells.map(ColumnBridge.expression), hex))
-  }
 }

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BinaryType, StringType}
 import graft.functions.RowHash
 
 /** The reference's incremental dedup = a hash ANTI-JOIN of source rows
@@ -24,13 +23,13 @@ object IncrementalDedup {
 
   private val H = "__graft_row_hash"
 
-  /** A2 `GetSnapshot`: distinct hex row-hash set of the target window
-    * (`consumer.go:88-97` — duplicate hashes collapse into a set). Hex is
-    * the set's wire format; [[filter]] accepts it as well as [[rowHashes]].
+  /** A2 `GetSnapshot`: distinct row-hash set of the target window
+    * (`consumer.go:88-97` — duplicate hashes collapse into a set), as
+    * 16-byte digests; `lower(hex(…))` gives the wire format.
     */
   def snapshot(target: DataFrame, fields: Seq[String] = Seq.empty): DataFrame = {
     val t = if (fields.isEmpty) target else target.select(fields.map(col): _*)
-    t.select(RowHash.ofAllColumns(t).as(H)).distinct()
+    rowHashes(t).distinct()
   }
 
   /** Every target row's 16-byte hash digest, duplicates kept: all
@@ -39,24 +38,15 @@ object IncrementalDedup {
   def rowHashes(target: DataFrame): DataFrame =
     target.select(RowHash.digestOfAllColumns(target).as(H))
 
-  /** P3/J1 `filter`: drop source rows whose row hash appears in the snapshot.
-    * The source is hashed in the snapshot's form, read off the type of its
-    * hash column: a string column holds hex ([[snapshot]]), a binary one
-    * the 16-byte digest ([[rowHashes]]). An empty snapshot passes
-    * everything through (`etl.go:29-31`); a full match yields an empty
-    * result (the reference skips the batch, `etl.go:40-42` — an empty
-    * DataFrame is the same thing).
+  /** P3/J1 `filter`: drop source rows whose row hash appears in the snapshot
+    * ([[snapshot]] or [[rowHashes]]). An empty snapshot passes everything
+    * through (`etl.go:29-31`); a full match yields an empty result (the
+    * reference skips the batch, `etl.go:40-42` — an empty DataFrame is the
+    * same thing).
     */
-  def filter(source: DataFrame, snapshotHashes: DataFrame): DataFrame = {
-    val key = snapshotHashes.schema.find(_.name == H).map(_.dataType) match {
-      case Some(_: StringType) => RowHash.ofAllColumns(source)
-      case Some(BinaryType) => RowHash.digestOfAllColumns(source)
-      case other => throw new IllegalArgumentException(
-        s"snapshot column $H must hold a hex string or a binary row hash; " +
-          s"got ${other.fold("no such column")(_.simpleString)}")
-    }
-    source.withColumn(H, key).join(snapshotHashes, Seq(H), "left_anti").drop(H)
-  }
+  def filter(source: DataFrame, snapshotHashes: DataFrame): DataFrame =
+    source.withColumn(H, RowHash.digestOfAllColumns(source))
+      .join(snapshotHashes, Seq(H), "left_anti").drop(H)
 
   /** One-call incremental dedup: source rows not already present in the
     * target window, matched on the order/case-insensitive full-row hash.

@@ -110,7 +110,7 @@ object ParityQueries {
         .where(col("ts") <= expr("timestamp'2024-01-15 00:00:00'"))
         .select("event_id", "user_id", "event_type", "value")
       IncrementalDedup.snapshot(ev)
-        .withColumnRenamed("__graft_row_hash", "row_hash")
+        .select(lower(hex(col("__graft_row_hash"))).as("row_hash"))
         .orderBy("row_hash")
     },
       s"""SELECT DISTINCT $duckEventsHash AS row_hash
